@@ -8,10 +8,10 @@ table picked; all stay JVM-side. Names follow the reference's camelCase.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clickhouse_clickhouse_spark.functions import kernels
 from clickhouse_clickhouse_spark.functions.datetime_fmt import format_date_time
 from clickhouse_clickhouse_spark.functions.vectors import (
     cosine_distance as _cosine_distance,
@@ -194,12 +194,10 @@ def toJSONString(x): return F.to_json(_c(x))
 def cityHash64(x):
     # bit-parity CityHash64 v1.0.2 (functions/hashing.py, Arrow UDF — the
     # compatibility path; use xxHash64 for new fast JVM-side hashing)
-    from clickhouse_clickhouse_spark.functions.hashing import city_hash64
-    return city_hash64(_c(x))
+    return kernels.udf("cityHash64")(_c(x))
 def sipHash64(x):
     # bit-parity SipHash-2-4 zero-key (functions/hashing.py, Arrow UDF)
-    from clickhouse_clickhouse_spark.functions.hashing import sip_hash64
-    return sip_hash64(_c(x))
+    return kernels.udf("sipHash64")(_c(x))
 def MD5(a): return F.md5(_c(a))
 def SHA256(a): return F.sha2(_c(a), 256)
 def hex_(a): return F.hex(_c(a))
@@ -363,27 +361,15 @@ def extractKeyValuePairs(s, key_value_delimiter=":", pair_delimiters=","):
 
 # -- round-2 long-tail additions ------------------------------------------
 def gcd(a, b):
-    """gcd — numpy ufunc via Arrow batches (no JVM builtin; np.gcd is
-    vectorized C, not per-row Python)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _gcd(x: pd.Series, y: pd.Series) -> pd.Series:
-        import numpy as np
-        return pd.Series(np.gcd(x.fillna(0).astype("int64"),
-                                y.fillna(0).astype("int64")))
-    return _gcd(_c(a).cast("long"), _c(b).cast("long"))
+    """gcd — the dialect's numpy kernel (no JVM builtin); NULL in → NULL
+    out."""
+    return kernels.udf("__num_gcd")(_c(a).cast("long"), _c(b).cast("long"))
 
 
 def lcm(a, b):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _lcm(x: pd.Series, y: pd.Series) -> pd.Series:
-        import numpy as np
-        return pd.Series(np.lcm(x.fillna(0).astype("int64"),
-                                y.fillna(0).astype("int64")))
-    return _lcm(_c(a).cast("long"), _c(b).cast("long"))
+    """lcm — the dialect's numpy kernel; wraps in int64 on overflow like
+    the ANSI-off SQL multiply."""
+    return kernels.udf("__num_lcm")(_c(a).cast("long"), _c(b).cast("long"))
 
 
 def bitHammingDistance(a, b):
@@ -1812,30 +1798,14 @@ def alphaTokens(s):
 
 
 def normalizeUTF8NFC(s):
-    """Unicode NFC normalization (reference normalizeUTF8NFC) — Arrow-
-    batched pandas UDF over stdlib unicodedata (no JVM builtin exists;
-    this is the documented slow path, still vectorized per batch)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfc(col: pd.Series) -> pd.Series:
-        import unicodedata
-        return col.map(lambda v: None if v is None
-                       else unicodedata.normalize("NFC", v))
-    return _nfc(_c(s))
+    """Unicode NFC normalization (reference normalizeUTF8NFC) — the
+    dialect's stdlib-unicodedata kernel (no JVM builtin exists; this is
+    the documented slow path, still vectorized per batch)."""
+    return kernels.udf("normalizeUTF8NFC")(_c(s))
 
 
 def normalizeUTF8NFD(s):
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfd(col: pd.Series) -> pd.Series:
-        import unicodedata
-        return col.map(lambda v: None if v is None
-                       else unicodedata.normalize("NFD", v))
-    return _nfd(_c(s))
+    return kernels.udf("normalizeUTF8NFD")(_c(s))
 
 
 # -- block pseudo-columns (the reference's block order is Spark's

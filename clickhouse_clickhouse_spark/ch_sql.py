@@ -51,6 +51,7 @@ import itertools
 import math
 import random
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -2280,14 +2281,13 @@ def _matrix_agg_tpl(args: list[str], fn: str) -> str:
 
 # ---- round-10 helpers: number theory, space-filling curves, geo tail ----
 
-# Optimization round 14: gcd/lcm were 96-iteration Euclid AGGREGATE
-# folds — interpreted (HOFs are CodegenFallback, and their presence
-# pushed the whole enclosing projection out of whole-stage codegen) and
-# burning 96 struct rebuilds per row regardless of convergence. They now
-# run as numpy kernels (np.gcd is a vectorized C ufunc) behind
-# Arrow-batched pandas UDFs in functions/spacecurves.py, with the exact
-# fold semantics: gcd(0,0)=0, negatives via ABS, NULL in → NULL out,
-# and lcm = ABS(a DIV gcd * b) with int64 wraparound (ANSI off).
+# gcd/lcm, the space-filling curves, parseReadableSize, geoDistance and
+# geohashEncode emit numpy kernels (functions/spacecurves.py): in SQL
+# they need AGGREGATE folds or _bind_once binders, and those higher-order
+# functions are CodegenFallback — one pushes the whole enclosing
+# projection out of whole-stage codegen. gcd/lcm semantics: gcd(0,0)=0,
+# negatives via ABS, NULL in → NULL out, and lcm = ABS(a DIV gcd * b)
+# with int64 wraparound (ANSI off).
 
 
 def _gcd_tpl(a: list[str]) -> str:
@@ -2308,16 +2308,10 @@ def _morton_encode_tpl(a: list[str]) -> str:
     """mortonEncode(u1, ..., uk), k in 2..8 ([U] src/Functions/
     mortonEncode.cpp): bit j of input i lands at bit k*j + i — arg
     order pinned by the upstream docs example mortonEncode(1,2,3)=53.
-
-    Optimization round 14: the unrolled 64-term SHIFTLEFT/OR tree sat
-    inside a _bind_once binder — a higher-order function, i.e.
-    CodegenFallback — which forced the enclosing projection out of
-    whole-stage codegen and evaluated ~130 interpreted shift nodes per
-    row. The same interleave now runs as a vectorized numpy kernel
-    behind an Arrow-batched pandas UDF (functions/spacecurves.py);
-    bit-equality proven by a 200 k-row full-range differential per
-    arity (including negatives — (c >> j) & 1 is shift-kind-agnostic).
-    NULL in any coordinate → NULL out, like the old bitwise chain."""
+    Bit-equal to the unrolled SHIFTLEFT/OR form on a 200 k-row
+    full-range differential per arity (including negatives —
+    (c >> j) & 1 is shift-kind-agnostic). NULL in any coordinate →
+    NULL out."""
     k = len(a)
     if not 2 <= k <= 8:
         raise ValueError("mortonEncode supports 2..8 coordinates")
@@ -2327,9 +2321,8 @@ def _morton_encode_tpl(a: list[str]) -> str:
 
 def _morton_decode_tpl(a: list[str]) -> str:
     """mortonDecode(k, code) → tuple of k coordinates (struct fields
-    _1.._k, the repo's tuple convention). Vectorized twin of the encode
-    template (see note there); a NULL code yields a struct of NULL
-    fields, exactly like the old NAMED_STRUCT over NULL bitwise terms."""
+    _1.._k, the repo's tuple convention). A NULL code yields a struct
+    of NULL fields, like a NAMED_STRUCT over NULL bitwise terms."""
     try:
         k = int(a[0].strip())
     except ValueError:
@@ -2350,14 +2343,9 @@ _HILBERT_N1 = (1 << 31) - 1
 
 
 def _hilbert_encode_tpl(a: list[str]) -> str:
-    # Optimization round 14: the 31-step AGGREGATE fold this emitted ran
-    # interpreted (HOFs are CodegenFallback) at ~40 µs/row AND pushed the
-    # enclosing projection out of whole-stage codegen; the same xy2d
-    # construction now runs as a vectorized numpy kernel behind an
-    # Arrow-batched pandas UDF (functions/spacecurves.py) — bit-equality
-    # proven by a 350 k-sample differential collect against the fold.
-    # Same guard contract: raises on coords outside [0, 2^31), NULL in →
-    # NULL out.
+    # Bit-equal to the 31-step AGGREGATE fold form on a 350 k-sample
+    # differential. Raises on coords outside [0, 2^31), NULL in → NULL
+    # out.
     if len(a) != 2:
         raise ValueError("hilbertEncode here supports exactly 2 "
                          "coordinates (upstream 2D form)")
@@ -2366,9 +2354,8 @@ def _hilbert_encode_tpl(a: list[str]) -> str:
 
 
 def _hilbert_decode_tpl(a: list[str]) -> str:
-    # Vectorized twin of the encode template (see note there). The
-    # SQL-level NULL wrap keeps the exact NULL-STRUCT semantics of the
-    # old fold (a NULL code yields a NULL struct, not a struct of NULL
+    # The SQL-level NULL wrap gives the fold form's NULL-STRUCT
+    # semantics (a NULL code yields a NULL struct, not a struct of NULL
     # fields). The code expression is spelled twice but NOT evaluated
     # twice: a Python UDF cannot sit inside a lambda binder
     # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF), and
@@ -2536,16 +2523,9 @@ _READABLE_UNITS = {
 def _parse_readable_size_tpl(a: list[str], mode: str) -> str:
     """parseReadableSize[OrNull/OrZero] ([U] src/Functions/
     parseReadableSize.cpp): '<num> <unit>' → bytes, fractional values
-    rounded up (ceil) like upstream.
-
-    Optimization round 15: the SQL form was a _bind_once binder — two
-    REGEXP_EXTRACTs plus two 26-arm CASE chains per row inside a
-    higher-order function (CodegenFallback), which pushed the whole
-    enclosing projection out of whole-stage codegen. Now an
-    Arrow-batched kernel (functions/spacecurves.py parse_readable_udf)
-    with template-verified semantics per mode, including NULL input
-    (strict raises, OrNull NULLs, OrZero zeroes — the template's
-    `n = '' OR unit-CASE IS NULL` condition is TRUE on NULL input)."""
+    rounded up (ceil) like upstream. Per mode, NULL input raises
+    (strict), NULLs (OrNull) or zeroes (OrZero) — see
+    functions/spacecurves._parse_readable."""
     return f"__parse_readable_{mode}(CAST({a[0]} AS STRING))"
 
 
@@ -2573,16 +2553,10 @@ def _point_in_ellipses_tpl(a: list[str]) -> str:
 # <0.5% (vs 6371-km-sphere greatCircleDistance, which both engines
 # keep as the spherical variant).
 def _geo_distance_tpl(a: list[str]) -> str:
-    # Optimization round 15: the closed form was a _bind_once binder
-    # (interpreted HOF, 10 trig calls per row spliced through a lambda
-    # struct) that kept the enclosing projection out of whole-stage
-    # codegen; it now runs as a vectorized numpy kernel behind an
-    # Arrow-batched pandas UDF (functions/spacecurves.py
-    # geo_distance_udf) with identical operation order. The two boolean
-    # args carry the lat/lon null masks so the kernel can replay the
-    # template's exact NULL paths (NULL latitude -> NULL, NULL
-    # longitude -> pi * R(mla) via null-skipping GREATEST) despite the
-    # NULL/NaN conflation at the pandas boundary.
+    # The two boolean args carry the lat/lon null masks so the kernel
+    # can replay the closed form's exact NULL paths (NULL latitude ->
+    # NULL, NULL longitude -> pi * R(mla) via null-skipping GREATEST)
+    # despite the NULL/NaN conflation at the pandas boundary.
     lo1, la1, lo2, la2 = (f"CAST({x} AS DOUBLE)" for x in a[:4])
     return (f"__geo_distance({lo1}, {la1}, {lo2}, {la2}, "
             f"(({la1}) IS NULL OR ({la2}) IS NULL), "
@@ -2632,8 +2606,8 @@ def _geohashes_in_box_tpl(a: list[str]) -> str:
 
 
 def _geohash_encode_tpl(a: list[str]) -> str:
-    """geohashEncode(lon, lat[, precision]) — unrolled SQL twin of
-    functions/geo.geohash_encode (same formula, Spark spellings)."""
+    """geohashEncode(lon, lat[, precision]) — same formula as
+    functions/geo.geohash_encode, as a numpy kernel."""
     p = 6
     if len(a) > 2:
         try:
@@ -2642,14 +2616,10 @@ def _geohash_encode_tpl(a: list[str]) -> str:
             raise ValueError("geohashEncode needs a literal precision")
     if p % 2 or not 2 <= p <= 12:
         raise ValueError("geohashEncode: even precision in [2, 12]")
-    # Optimization round 15: the nested _bind_once binder (round 14's
-    # once-bound interleave) was still a CodegenFallback HOF that kept
-    # the enclosing projection interpreted; the same quantize +
-    # interleave + base32 chain now runs as a vectorized numpy kernel
-    # (functions/spacecurves.py geohash_encode_udf, bit-exact — pure
-    # integer/double ops, no libm). The boolean args carry per-coord
-    # NULL-ness past the pandas NULL/NaN conflation (SQL: NULL coord →
-    # top cell via null-skipping LEAST, NaN coord → cell 0).
+    # Bit-exact: pure integer/double ops, no libm. The boolean args
+    # carry per-coord NULL-ness past the pandas NULL/NaN conflation
+    # (SQL: NULL coord → top cell via null-skipping LEAST, NaN coord →
+    # cell 0).
     lon, lat = f"CAST({a[0]} AS DOUBLE)", f"CAST({a[1]} AS DOUBLE)"
     return (f"__geohash_encode{p}({lon}, {lat}, "
             f"(({lon}) IS NULL), (({lat}) IS NULL))")
@@ -8059,19 +8029,6 @@ def _cast_type_names(q: str) -> str:
     return q
 
 
-def _strip_parens(s: str) -> str:
-    """Blank out parenthesized spans so a top-level comma test can't be
-    fooled by commas inside function calls."""
-    out, depth = [], 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        out.append(" " if depth > 0 or ch in "()" else ch)
-    return "".join(out)
-
-
 _PREWHERE = re.compile(r"\bPREWHERE\b(.*?)(?=\bWHERE\b|\bGROUP\s+BY\b|"
                        r"\bORDER\s+BY\b|\bLIMIT\b|\bHAVING\b|$)",
                        re.IGNORECASE | re.DOTALL)
@@ -9266,15 +9223,13 @@ def _apply_array_join(q: str) -> str:
     raise ValueError("ARRAY JOIN: nesting beyond 64 levels")
 
 
-_REGISTERED: set[int] = set()
-# original spellings of session-registered compat UDFs (the Spark
-# catalog lowercases names); populated by _register_udfs, read by
-# system.functions
-_UDF_NAMES: set[str] = set()
+# sessions already holding the kernel table, held weakly: keying on
+# id(spark) false-skips a NEW session whose id reuses a collected one
+_REGISTERED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def _register_udfs(spark: SparkSession) -> None:
-    if id(spark) in _REGISTERED:
+    if spark in _REGISTERED:
         return
     # every ch_sql/ch_statement entry pins the dialect's semantic confs
     # (ANSI off: reference-permissive arithmetic — 1/0 → inf, overflow
@@ -9282,71 +9237,9 @@ def _register_udfs(spark: SparkSession) -> None:
     # default session
     from clickhouse_clickhouse_spark.tables import ensure_engine_confs
     ensure_engine_confs(spark)
-    from clickhouse_clickhouse_spark.functions import hashing as H
-
-    def _reg(name, udf):
-        _UDF_NAMES.add(name)
-        spark.udf.register(name, udf)
-
-    _reg("cityHash64", H._udf("city"))
-    _reg("sipHash64", H._udf("sip"))
-    _reg("murmurHash2_64", H.murmur2_64_udf())
-    _reg("murmurHash2_32", H.murmur32_udf("mm2"))
-    _reg("murmurHash3_32", H.murmur32_udf("mm3"))
-    from clickhouse_clickhouse_spark.functions import textcodecs as TC
-    TC.register_codec_udfs(spark)
-    from clickhouse_clickhouse_spark.functions import ipcodecs as IP
-    IP.register_ip_udfs(spark)
-    # batch-8 compat UDFs (lazily-built pandas UDFs, same stance as
-    # cityHash64: compatibility paths; xxHash64 stays the scale hash)
-    from clickhouse_clickhouse_spark.functions import series as SR
-    from clickhouse_clickhouse_spark.functions import randomdist as RD
-    spark.udf.register("__rand_poisson", RD.rand_poisson_udf())
-    spark.udf.register("__series_fft_period", SR.fft_period_udf())
-    spark.udf.register("__series_stl", SR.stl_udf())
-    spark.udf.register("__sha512_256", H.sha512_256_udf())
-    spark.udf.register("__kafka_murmur2", H.kafka_murmur2_udf())
-    spark.udf.register("__siphash64_keyed", H.siphash64_keyed_udf())
-    spark.udf.register("__siphash128", H.siphash128_udf(False))
-    spark.udf.register("__siphash128_ref", H.siphash128_udf(True))
-    spark.udf.register("__siphash128_keyed",
-                       H.siphash128_keyed_udf(False))
-    spark.udf.register("__siphash128_ref_keyed",
-                       H.siphash128_keyed_udf(True))
-    spark.udf.register("__jump_hash", H.jump_consistent_hash_udf())
-    from clickhouse_clickhouse_spark.functions import spacecurves as SC
-    spark.udf.register("__hilbert_encode", SC.hilbert_encode_udf())
-    spark.udf.register("__hilbert_decode", SC.hilbert_decode_udf())
-    for _k in range(2, 9):
-        spark.udf.register(f"__morton_encode{_k}", SC.morton_encode_udf(_k))
-        spark.udf.register(f"__morton_decode{_k}", SC.morton_decode_udf(_k))
-    spark.udf.register("__num_gcd", SC.gcd_udf())
-    spark.udf.register("__num_lcm", SC.lcm_udf())
-    for _m in ("strict", "null", "zero"):
-        spark.udf.register(f"__parse_readable_{_m}",
-                           SC.parse_readable_udf(_m))
-    spark.udf.register("__geo_distance", SC.geo_distance_udf())
-    for _p in (2, 4, 6, 8, 10, 12):
-        spark.udf.register(f"__geohash_encode{_p}",
-                           SC.geohash_encode_udf(_p))
-    from clickhouse_clickhouse_spark.functions import ml as ML
-    spark.udf.register("__linreg_solve", ML.linreg_solve_udf())
-    # AES stream modes (ctr/ofb/cfb) — cryptography-backed, round 12;
-    # the builder raises a loud env gate when the package is absent,
-    # but ONLY when a query actually names a stream mode (lazy probe)
-    try:
-        from clickhouse_clickhouse_spark.functions import aescrypt as AE
-        spark.udf.register("__aes_stream", AE.aes_stream_udf())
-    except EnvironmentError:
-        pass  # _aes_tpl output will fail loudly at resolution instead
-    try:
-        spark.udf.register("__ripemd160", H.ripemd160_udf())
-    except EnvironmentError:
-        pass  # ripeMD160 calls then fail loudly at resolution
-    from clickhouse_clickhouse_spark.functions import jsonops as JO
-    spark.udf.register("__json_merge_patch", JO.json_merge_patch_udf())
-    spark.udf.register("__json_paths", JO.json_paths_udf())
-    _REGISTERED.add(id(spark))
+    from clickhouse_clickhouse_spark.functions import kernels
+    kernels.register(spark)
+    _REGISTERED.add(spark)
 
 
 def _register_system_views(spark: SparkSession, sql: str) -> None:

@@ -10,7 +10,7 @@ ciphertexts are byte-identical (stream modes have no padding and no
 tag: output length == input length, decrypt == re-keystream).
 
 Gating: ``cryptography`` is present in this container but is NOT in the
-guaranteed baked-in set — the UDF builder raises a loud
+guaranteed baked-in set — the kernel's probe raises a loud
 EnvironmentError naming the package when absent (import-try stance per
 the project brief). Compat path only (per-row python; same stance as
 functions/hashing.cityHash64): xxhash64 / Spark-native aes stay the
@@ -24,22 +24,12 @@ from __future__ import annotations
 
 # module-level: pandas_udf type-hint inference resolves 'pd.Series'
 # against the DEFINING module's globals (verify-skill gotcha)
-import pandas as pd  # noqa: F401
+import pandas as pd
 
-_UDF = None
+from clickhouse_clickhouse_spark.functions.kernels import kernel
 
 
-def aes_stream_udf():
-    """Build (once) the shared stream-cipher UDF:
-    ``__aes_stream(data, key, iv, mode, direction, bits)`` -> binary.
-
-    One kernel serves encrypt AND decrypt — CTR/OFB keystreams are
-    plaintext-independent and CFB's decryptor differs only in the
-    feedback register source, which the `direction` flag selects.
-    """
-    global _UDF
-    if _UDF is not None:
-        return _UDF
+def _require_cryptography() -> None:
     try:
         import cryptography  # noqa: F401 — probe only: module objects
         #                      must NOT be captured (cloudpickle cannot
@@ -51,36 +41,36 @@ def aes_stream_udf():
             "environment; ECB/CBC/GCM run on Spark's native aes_encrypt"
         ) from e
 
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _aes_stream(data: pd.Series, key: pd.Series, iv: pd.Series,
-                    mode: pd.Series, direction: pd.Series,
-                    bits: pd.Series) -> pd.Series:
-        # worker-side import (the closure stays module-object-free)
-        from cryptography.hazmat.primitives.ciphers import (
-            Cipher, algorithms, modes,
-        )
-        mode_ctors = {"ctr": modes.CTR, "ofb": modes.OFB,
-                      "cfb": modes.CFB, "cfb128": modes.CFB,
-                      "cfb8": modes.CFB8}
-        out = []
-        for d, k, v, m, dr, b in zip(data, key, iv, mode, direction,
-                                     bits):
-            if d is None or k is None or v is None:
-                out.append(None)
-                continue
-            k = bytes(k)
-            if len(k) * 8 != int(b):
-                raise ValueError(
-                    f"encrypt/decrypt aes-{int(b)}-{m}: key must be "
-                    f"{int(b) // 8} bytes, got {len(k)} (the reference "
-                    "requires the key length to match the declared "
-                    "mode)")
-            c = Cipher(algorithms.AES(k), mode_ctors[m](bytes(v)))
-            ctx = c.encryptor() if dr == "enc" else c.decryptor()
-            out.append(ctx.update(bytes(d)) + ctx.finalize())
-        return pd.Series(out)
+@kernel("__aes_stream", "binary", probe=_require_cryptography)
+def _aes_stream(data: pd.Series, key: pd.Series, iv: pd.Series,
+                mode: pd.Series, direction: pd.Series,
+                bits: pd.Series) -> pd.Series:
+    """``__aes_stream(data, key, iv, mode, direction, bits)`` -> binary.
 
-    _UDF = _aes_stream
-    return _UDF
+    One kernel serves encrypt AND decrypt — CTR/OFB keystreams are
+    plaintext-independent and CFB's decryptor differs only in the
+    feedback register source, which the `direction` flag selects.
+    """
+    # worker-side import: the kernel captures no module object
+    from cryptography.hazmat.primitives.ciphers import (
+        Cipher, algorithms, modes,
+    )
+    mode_ctors = {"ctr": modes.CTR, "ofb": modes.OFB,
+                  "cfb": modes.CFB, "cfb128": modes.CFB,
+                  "cfb8": modes.CFB8}
+    out = []
+    for d, k, v, m, dr, b in zip(data, key, iv, mode, direction, bits):
+        if d is None or k is None or v is None:
+            out.append(None)
+            continue
+        k = bytes(k)
+        if len(k) * 8 != int(b):
+            raise ValueError(
+                f"encrypt/decrypt aes-{int(b)}-{m}: key must be "
+                f"{int(b) // 8} bytes, got {len(k)} (the reference "
+                "requires the key length to match the declared mode)")
+        c = Cipher(algorithms.AES(k), mode_ctors[m](bytes(v)))
+        ctx = c.encryptor() if dr == "enc" else c.decryptor()
+        out.append(ctx.update(bytes(d)) + ctx.finalize())
+    return pd.Series(out)

@@ -16,10 +16,10 @@ the public algorithm specifications:
   the public v1.0.2 algorithm; deterministic and self-consistent, pinned
   by regression vectors in tests.
 
-All are Arrow-batched pandas UDFs. ``sipHash64`` and
-``murmurHash2_64`` run numpy-VECTORIZED batch kernels since round 8
-(word rounds across the whole column with an active-row mask — ~17x
-the scalar loop, bit-parity property-tested); ``cityHash64``'s
+All are Arrow-batched pandas UDFs. ``sipHash64`` and the murmur
+family run numpy-VECTORIZED batch kernels (word rounds across the
+whole column with an active-row mask — ~17x the scalar loop,
+bit-parity property-tested); ``cityHash64``'s
 length-branched finishers resist row-vectorization and stay per-value
 — the compatibility-only stance holds for it. xxhash64 (JVM) remains
 the engine's hot-path hash everywhere. The pure-Python cores
@@ -29,12 +29,16 @@ importable for oracle generation.
 
 from __future__ import annotations
 
+import hashlib
 import struct
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+
+from clickhouse_clickhouse_spark.functions.kernels import (
+    arrow_udf, kernel, per_value, udf,
+)
 
 _M64 = (1 << 64) - 1
 
@@ -234,7 +238,7 @@ def _as_bytes(v) -> bytes:
     return v if isinstance(v, (bytes, bytearray)) else str(v).encode("utf-8")
 
 
-# -- numpy-vectorized SipHash-2-4 / MurmurHash2-64A (round 8) ------------
+# -- numpy-vectorized SipHash-2-4 / MurmurHash2-64A ----------------------
 # Both are plain 8-byte-word loops, so they vectorize ACROSS rows: pad
 # each batch into one zero-filled uint8 matrix, view it as little-endian
 # uint64 words, and run the word rounds over the whole column with an
@@ -328,7 +332,7 @@ def murmurhash2_64_np(data: list[bytes], seed: int = 0) -> "np.ndarray":
 # matrix cells per packed bucket (~64 MB of uint8): _pack_batch pads
 # every row to the bucket's longest value, so one long outlier in a
 # big Arrow batch would otherwise allocate n_rows x max_len zeros —
-# bucketing rows by length bounds the padding waste (round-8 review)
+# bucketing rows by length bounds the padding waste
 _PACK_MAX_CELLS = 1 << 26
 
 
@@ -358,36 +362,23 @@ def _hash_series(s: "pd.Series", np_fn) -> "pd.Series":
     return out
 
 
-# pandas_udf construction needs an active SparkSession -> build lazily
-_UDFS: dict[str, object] = {}
+def _city_hash64(v) -> int:
+    return _to_signed(cityhash64_py(_as_bytes(v)))
 
 
-def _udf(name: str):
-    if name not in _UDFS:
-        if name == "sip":
-            @pandas_udf("long")
-            def _sip(s: pd.Series) -> pd.Series:
-                return _hash_series(s, siphash64_np)
-            _UDFS[name] = _sip
-        else:
-            # CityHash64's length-branched finishers (<=16/32/64/loop)
-            # resist row-vectorization — stays per-value, parity-only
-            @pandas_udf("long")
-            def _city(s: pd.Series) -> pd.Series:
-                return s.map(lambda v: None if v is None else _to_signed(
-                    cityhash64_py(_as_bytes(v))))
-            _UDFS[name] = _city
-    return _UDFS[name]
+# CityHash64's length-branched finishers (<=16/32/64/loop) resist
+# row-vectorization — stays per-value, parity-only
+kernel("cityHash64", "long")(per_value(_city_hash64))
 
 
 def sip_hash64(c: Column) -> Column:
     """Column wrapper: ``sipHash64(x)`` (SipHash-2-4, zero key)."""
-    return _udf("sip")(c)
+    return udf("sipHash64")(c)
 
 
 def city_hash64(c: Column) -> Column:
     """Column wrapper: ``cityHash64(x)`` (CityHash64 v1.0.2)."""
-    return _udf("city")(c)
+    return udf("cityHash64")(c)
 
 
 def murmurhash2_64_py(data: bytes, seed: int = 0) -> int:
@@ -462,21 +453,6 @@ def jaro_winkler_py(s1: str, s2: str) -> float:
             prefix += 1
         jaro += prefix * 0.1 * (1 - jaro)
     return jaro
-
-
-def murmur2_64_udf():
-    if "murmur2" not in _UDFS:
-        @pandas_udf("long")
-        def _mm2(s: pd.Series) -> pd.Series:
-            return _hash_series(s, murmurhash2_64_np)
-        _UDFS["murmur2"] = _mm2
-    return _UDFS["murmur2"]
-
-
-def murmur_hash2_64(c: Column) -> Column:
-    """Column wrapper: ``murmurHash2_64(x)`` (numpy-vectorized Arrow
-    UDF since round 8)."""
-    return murmur2_64_udf()(c)
 
 
 def murmurhash2_32_py(data: bytes, seed: int = 0) -> int:
@@ -624,62 +600,46 @@ def murmurhash3_32_np(data: list[bytes], seed: int = 0) -> "np.ndarray":
     return h
 
 
-def murmur32_udf(kind: str):
-    """BIGINT-typed UDF over the 32-bit murmur kernels (UInt32 range,
-    per upstream's UInt32 return — crc32's Spark convention); numpy
-    batch kernels via _hash_series like the 64-bit family."""
-    key = f"mm32:{kind}"
-    if key not in _UDFS:
-        np_fn = (murmurhash2_32_np if kind == "mm2"
-                 else murmurhash3_32_np)
+def _batch_hash(np_fn):
+    def run(s: pd.Series) -> pd.Series:
+        return _hash_series(s, np_fn)
+    run.__name__ = np_fn.__name__
+    return run
 
-        @pandas_udf("long")
-        def _mm32(s: pd.Series) -> pd.Series:
-            return _hash_series(s, np_fn)
-        _UDFS[key] = _mm32
-    return _UDFS[key]
+
+# numpy batch kernels; the 32-bit pair returns BIGINT over the UInt32
+# range (upstream's UInt32 return — crc32's Spark convention)
+for _name, _np_fn in (("sipHash64", siphash64_np),
+                      ("murmurHash2_64", murmurhash2_64_np),
+                      ("murmurHash2_32", murmurhash2_32_np),
+                      ("murmurHash3_32", murmurhash3_32_np)):
+    kernel(_name, "long")(_batch_hash(_np_fn))
+
+# DataFrame-only: the dialect's jaroWinklerSimilarity is a SQL template
+_jaro_winkler = per_value(jaro_winkler_py)
 
 
 def jaro_winkler(a: Column, b: Column) -> Column:
     """Column wrapper: ``jaroWinklerSimilarity(a, b)``."""
-    if "jw" not in _UDFS:
-        @pandas_udf("double")
-        def _jw(x: pd.Series, y: pd.Series) -> pd.Series:
-            return pd.Series(
-                None if u is None or v is None else jaro_winkler_py(u, v)
-                for u, v in zip(x, y))
-        _UDFS["jw"] = _jw
-    return _UDFS["jw"](a, b)
+    return arrow_udf(_jaro_winkler, "double")(a, b)
 
 
 def kafka_murmur2_py(data: bytes) -> int:
     """Kafka's 32-bit MurmurHash2 (Appleby's public murmur2 with the
     Kafka client's seed 0x9747b28c), sign-masked to the non-negative
     31-bit value Kafka's default partitioner consumes — the reference's
-    ``kafkaMurmurHash`` ([U] src/Functions/FunctionsHashing.h). One
-    kernel: the seed-parameterized ``murmurhash2_32_py`` (round-14 —
-    this function originally carried its own copy of the loop)."""
+    ``kafkaMurmurHash`` ([U] src/Functions/FunctionsHashing.h): the
+    seed-parameterized ``murmurhash2_32_py``."""
     return murmurhash2_32_py(data, 0x9747B28C) & 0x7FFFFFFF
 
 
-def kafka_murmur2_udf():
-    if "kafka_mm2" not in _UDFS:
-        @pandas_udf("int")
-        def _kmm2(s: pd.Series) -> pd.Series:
-            return s.map(lambda v: None if v is None
-                         else kafka_murmur2_py(_as_bytes(v)))
-        _UDFS["kafka_mm2"] = _kmm2
-    return _UDFS["kafka_mm2"]
-
-
-def kafka_murmur2(c: Column) -> Column:
-    """Column wrapper: ``kafkaMurmurHash(x)``."""
-    return kafka_murmur2_udf()(c)
+kernel("__kafka_murmur2", "int")(per_value(
+    lambda v: kafka_murmur2_py(_as_bytes(v))))
 
 
 def siphash128_py(data: bytes, k0: int = 0, k1: int = 0,
                   reference: bool = False) -> bytes:
-    """SipHash-2-4 with 128-bit output, two dialects (round 13):
+    """SipHash-2-4 with 128-bit output, two dialects:
 
     ``reference=False`` — the upstream engine's LEGACY ``get128``
     ([U] src/Common/SipHash.h): the 64-bit rounds verbatim (length-byte
@@ -750,94 +710,41 @@ def siphash128_py(data: bytes, k0: int = 0, k1: int = 0,
     return struct.pack("<QQ", out0, out1)
 
 
-def siphash128_udf(reference: bool = False):
-    key = "sip128_ref" if reference else "sip128"
-    if key not in _UDFS:
-        @pandas_udf("string")
-        def _sip128(s: pd.Series) -> pd.Series:
-            return s.map(lambda v: None if v is None else siphash128_py(
-                _as_bytes(v), reference=reference).hex())
-        _UDFS[key] = _sip128
-    return _UDFS[key]
+def _declare_siphash128(reference: bool, suffix: str) -> None:
+    kernel(f"__siphash128{suffix}", "string")(per_value(
+        lambda v: siphash128_py(_as_bytes(v), reference=reference).hex()))
+    kernel(f"__siphash128{suffix}_keyed", "string")(per_value(
+        lambda k0, k1, v: siphash128_py(
+            _as_bytes(v), int(k0) & _M64, int(k1) & _M64,
+            reference=reference).hex()))
 
 
-def siphash128_keyed_udf(reference: bool = False):
-    key = "sip128k_ref" if reference else "sip128k"
-    if key not in _UDFS:
-        @pandas_udf("string")
-        def _sip128k(a: pd.Series, b: pd.Series,
-                     s: pd.Series) -> pd.Series:
-            return pd.Series(
-                None if v is None else siphash128_py(
-                    _as_bytes(v), int(x) & _M64, int(y) & _M64,
-                    reference=reference).hex()
-                for x, y, v in zip(a, b, s))
-        _UDFS[key] = _sip128k
-    return _UDFS[key]
+_declare_siphash128(False, "")
+_declare_siphash128(True, "_ref")
+
+kernel("__siphash64_keyed", "long")(per_value(
+    lambda k0, k1, v: _to_signed(siphash64_py(
+        _as_bytes(v), int(k0) & _M64, int(k1) & _M64))))
+
+# FIPS 180-4 SHA-512/256 (distinct IV; NOT a truncation of SHA-512),
+# hex output like the MD5 mapping (upstream returns FixedString(32))
+kernel("__sha512_256", "string")(per_value(
+    lambda v: hashlib.new("sha512_256", _as_bytes(v)).hexdigest()))
 
 
-def siphash64_keyed_udf():
-    if "sip_keyed" not in _UDFS:
-        @pandas_udf("long")
-        def _sipk(a: pd.Series, b: pd.Series, s: pd.Series) -> pd.Series:
-            return pd.Series(
-                None if v is None else _to_signed(siphash64_py(
-                    _as_bytes(v), int(x) & _M64, int(y) & _M64))
-                for x, y, v in zip(a, b, s))
-        _UDFS["sip_keyed"] = _sipk
-    return _UDFS["sip_keyed"]
+def _require_ripemd160() -> None:
+    """RIPEMD160 depends on the box's OpenSSL build (legacy provider)."""
+    try:
+        hashlib.new("ripemd160", b"")
+    except ValueError as e:        # pragma: no cover - env gate
+        raise EnvironmentError(
+            "ripeMD160 needs OpenSSL's legacy ripemd160 provider, "
+            "absent from this build; use SHA256/SHA512_256") from e
 
 
-def siphash64_keyed(k0: Column, k1: Column, data: Column) -> Column:
-    """Column wrapper: ``sipHash64Keyed((k0, k1), x)`` — the same
-    SipHash-2-4 core as sipHash64 with a caller-supplied 128-bit key
-    (two UInt64 halves). Compat path (scalar core per value)."""
-    return siphash64_keyed_udf()(k0, k1, data)
-
-
-def sha512_256(c: Column) -> Column:
-    """Column wrapper: ``SHA512_256(x)`` — the FIPS 180-4 SHA-512/256
-    truncated variant (distinct IV; NOT a truncation of SHA-512),
-    via hashlib. Hex-string output (same presentation convention as
-    the MD5 mapping; upstream returns raw FixedString(32) bytes)."""
-    return sha512_256_udf()(c)
-
-
-def sha512_256_udf():
-    if "sha512_256" not in _UDFS:
-        import hashlib
-
-        @pandas_udf("string")
-        def _sha(s: pd.Series) -> pd.Series:
-            return s.map(lambda v: None if v is None else hashlib.new(
-                "sha512_256", _as_bytes(v)).hexdigest())
-        _UDFS["sha512_256"] = _sha
-    return _UDFS["sha512_256"]
-
-
-def ripemd160_udf():
-    """``RIPEMD160`` (round 12): hashlib-backed, hex output like the
-    SHA family here. Availability depends on the box's OpenSSL build
-    (legacy provider) — probed ONCE at build; raises EnvironmentError
-    naming the dependency when absent, so the dialect registration can
-    gate gracefully. ISO/IEC 10118-3 vector pinned in tests
-    (RIPEMD160('abc') = 8eb208f7...)."""
-    if "ripemd160" not in _UDFS:
-        import hashlib
-
-        try:
-            hashlib.new("ripemd160", b"")
-        except ValueError as e:        # pragma: no cover - env gate
-            raise EnvironmentError(
-                "ripeMD160 needs OpenSSL's legacy ripemd160 provider, "
-                "absent from this build; use SHA256/SHA512_256") from e
-
-        @pandas_udf("string")
-        def _ripe(s: pd.Series) -> pd.Series:
-            return s.map(lambda v: None if v is None else hashlib.new(
-                "ripemd160", _as_bytes(v)).hexdigest())
-        _UDFS["ripemd160"] = _ripe
-    return _UDFS["ripemd160"]
+# ISO/IEC 10118-3 vector pinned in tests (RIPEMD160('abc') = 8eb208f7...)
+kernel("__ripemd160", "string", probe=_require_ripemd160)(per_value(
+    lambda v: hashlib.new("ripemd160", _as_bytes(v)).hexdigest()))
 
 
 def jump_consistent_hash_py(key: int, n: int) -> int:
@@ -857,13 +764,6 @@ def jump_consistent_hash_py(key: int, n: int) -> int:
     return b
 
 
-def jump_consistent_hash_udf():
-    if "jump" not in _UDFS:
-        @pandas_udf("int")
-        def _jump(k: pd.Series, n: pd.Series) -> pd.Series:
-            return pd.Series(
-                None if (kk is None or nn is None or int(nn) <= 0)
-                else jump_consistent_hash_py(int(kk), int(nn))
-                for kk, nn in zip(k, n))
-        _UDFS["jump"] = _jump
-    return _UDFS["jump"]
+kernel("__jump_hash", "int")(per_value(
+    lambda k, n: None if int(n) <= 0
+    else jump_consistent_hash_py(int(k), int(n))))

@@ -18,18 +18,9 @@ from __future__ import annotations
 import socket
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 
+from clickhouse_clickhouse_spark.functions.kernels import kernel, per_value
 
-
-# exact spellings of the registered UDF names (the Spark catalog
-# lowercases; system.functions restores case from this set)
-REGISTERED_NAMES: set[str] = set()
-
-
-def _reg(spark, name, udf):
-    REGISTERED_NAMES.add(name)
-    spark.udf.register(name, udf)
 
 def ipv6_pton_py(s: str) -> bytes:
     return socket.inet_pton(socket.AF_INET6, s)
@@ -95,95 +86,27 @@ def ipv6_in_range_py(addr: str, cidr: str) -> bool:
     return ipv6_pton_py(lo) <= a <= ipv6_pton_py(hi)
 
 
-def register_ip_udfs(spark) -> None:
-    """Register the IPv6 family under the reference names (idempotent
-    per session via ch_sql._register_udfs)."""
+def to_ipv6_py(s: str) -> str:
+    """Canonical RFC 5952 text of an IPv6 address string."""
+    return ipv6_ntop_py(ipv6_pton_py(s))
 
-    @pandas_udf("binary")
-    def _pton(col: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return ipv6_pton_py(v)
-            except OSError as ex:
-                raise ValueError(f"IPv6StringToNum({v!r}): {ex}") from ex
-        return col.map(one)
 
-    @pandas_udf("binary")
-    def _pton_or_null(col: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return ipv6_pton_py(v)
-            except OSError:
-                return None
-        return col.map(one)
+# the OrNull twins are not just IF-wrapped strict calls: python UDFs are
+# batch-extracted out of IF branches, so the strict form would fire even
+# on the not-taken branch
+kernel("IPv6StringToNum", "binary")(per_value(ipv6_pton_py))
+kernel("IPv6StringToNumOrNull", "binary")(per_value(ipv6_pton_py, None))
+kernel("IPv6NumToString", "string")(per_value(ipv6_ntop_py))
+kernel("isIPv6String", "boolean")(per_value(is_ipv6_py))
+kernel("toIPv6", "string")(per_value(to_ipv6_py))
+kernel("toIPv6OrNull", "string")(per_value(to_ipv6_py, None))
+kernel("IPv4ToIPv6", "binary")(per_value(ipv4_to_ipv6_py))
+kernel("cutIPv6", "string")(per_value(cut_ipv6_py))
+kernel("__ipv6_in_range", "boolean")(per_value(ipv6_in_range_py))
 
-    @pandas_udf("string")
-    def _ntop(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else ipv6_ntop_py(v))
 
-    @pandas_udf("boolean")
-    def _is6(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else is_ipv6_py(v))
-
-    @pandas_udf("string")
-    def _to6(col: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return ipv6_ntop_py(ipv6_pton_py(v))
-            except OSError as ex:
-                raise ValueError(f"toIPv6({v!r}): {ex}") from ex
-        return col.map(one)
-
-    @pandas_udf("string")
-    def _to6_or_null(col: pd.Series) -> pd.Series:
-        # tolerant twin for the OrNull/OrDefault forms — python UDFs
-        # are batch-extracted out of IF branches, so the strict toIPv6
-        # would fire even on the not-taken branch
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return ipv6_ntop_py(ipv6_pton_py(v))
-            except OSError:
-                return None
-        return col.map(one)
-
-    @pandas_udf("binary")
-    def _v4to6(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else ipv4_to_ipv6_py(v))
-
-    @pandas_udf("string")
-    def _cut6(b: pd.Series, c6: pd.Series, c4: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if v is None else cut_ipv6_py(v, x6, x4)
-            for v, x6, x4 in zip(b, c6, c4)
-        ])
-
-    @pandas_udf("_1 string, _2 string")
-    def _cidr6(a: pd.Series, p: pd.Series) -> pd.DataFrame:
-        out = [(None, None) if v is None or pr is None
-               else ipv6_cidr_range_py(v, pr) for v, pr in zip(a, p)]
-        return pd.DataFrame(out, columns=["_1", "_2"])
-
-    @pandas_udf("boolean")
-    def _in6(a: pd.Series, c: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if v is None or cd is None else ipv6_in_range_py(v, cd)
-            for v, cd in zip(a, c)])
-
-    _reg(spark, "IPv6CIDRToRange", _cidr6)
-    _reg(spark, "__ipv6_in_range", _in6)
-    _reg(spark, "IPv6StringToNum", _pton)
-    _reg(spark, "IPv6StringToNumOrNull", _pton_or_null)
-    _reg(spark, "IPv6NumToString", _ntop)
-    _reg(spark, "isIPv6String", _is6)
-    _reg(spark, "toIPv6", _to6)
-    _reg(spark, "toIPv6OrNull", _to6_or_null)
-    _reg(spark, "IPv4ToIPv6", _v4to6)
-    _reg(spark, "cutIPv6", _cut6)
+@kernel("IPv6CIDRToRange", "_1 string, _2 string")
+def _ipv6_cidr_to_range(a: pd.Series, p: pd.Series) -> pd.DataFrame:
+    out = [(None, None) if v is None or pr is None
+           else ipv6_cidr_range_py(v, pr) for v, pr in zip(a, p)]
+    return pd.DataFrame(out, columns=["_1", "_2"])

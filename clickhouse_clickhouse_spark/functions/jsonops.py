@@ -14,11 +14,7 @@ from __future__ import annotations
 
 import json
 
-# module-level: pandas_udf type-hint inference resolves 'pd.Series'
-# against the DEFINING module's globals
-import pandas as pd  # noqa: F401
-
-_UDF = None
+from clickhouse_clickhouse_spark.functions.kernels import kernel, per_value
 
 
 def _merge(target, patch):
@@ -34,28 +30,17 @@ def _merge(target, patch):
     return out
 
 
-def json_merge_patch_udf():
-    global _UDF
-    if _UDF is None:
-        from pyspark.sql.functions import pandas_udf
+def json_merge_patch_py(target: str, patch: str) -> str:
+    """One JSONMergePatch step over two JSON texts."""
+    try:
+        merged = _merge(json.loads(target), json.loads(patch))
+    except ValueError as e:
+        raise ValueError(f"JSONMergePatch: argument is not valid JSON "
+                         f"({str(e)[:60]})") from e
+    return json.dumps(merged, separators=(",", ":"))
 
-        @pandas_udf("string")
-        def _jmp(a: pd.Series, b: pd.Series) -> pd.Series:
-            out = []
-            for x, y in zip(a, b):
-                if x is None or y is None:
-                    out.append(None)
-                    continue
-                try:
-                    merged = _merge(json.loads(x), json.loads(y))
-                except ValueError as e:
-                    raise ValueError(
-                        f"JSONMergePatch: argument is not valid JSON "
-                        f"({str(e)[:60]})") from e
-                out.append(json.dumps(merged, separators=(",", ":")))
-            return pd.Series(out)
-        _UDF = _jmp
-    return _UDF
+
+kernel("__json_merge_patch", "string")(per_value(json_merge_patch_py))
 
 
 def json_paths_py(s: str) -> list[str]:
@@ -83,17 +68,4 @@ def json_paths_py(s: str) -> list[str]:
     return sorted(set(out))
 
 
-_PATHS_UDF = None
-
-
-def json_paths_udf():
-    global _PATHS_UDF
-    if _PATHS_UDF is None:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<string>")
-        def _jp(a: pd.Series) -> pd.Series:
-            return a.map(lambda v: None if v is None
-                         else json_paths_py(v))
-        _PATHS_UDF = _jp
-    return _PATHS_UDF
+kernel("__json_paths", "array<string>")(per_value(json_paths_py))

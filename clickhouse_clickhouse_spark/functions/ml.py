@@ -28,10 +28,8 @@ link function stays explicit).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 
-_UDFS: dict[str, object] = {}
+from clickhouse_clickhouse_spark.functions.kernels import kernel, per_value
 
 
 def linreg_solve_py(a_flat, rhs):
@@ -51,11 +49,4 @@ def linreg_solve_py(a_flat, rhs):
     return [float(x) for x in w]
 
 
-def linreg_solve_udf():
-    if "solve" not in _UDFS:
-        @pandas_udf("array<double>")
-        def _solve(a: pd.Series, b: pd.Series) -> pd.Series:
-            return pd.Series(linreg_solve_py(x, y)
-                             for x, y in zip(a, b))
-        _UDFS["solve"] = _solve
-    return _UDFS["solve"]
+kernel("__linreg_solve", "array<double>")(per_value(linreg_solve_py))

@@ -13,20 +13,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 
-_UDFS: dict[str, object] = {}
+from clickhouse_clickhouse_spark.functions.kernels import kernel
 
 
-def rand_poisson_udf():
-    if "poisson" not in _UDFS:
-        @pandas_udf("bigint")
-        def _pois(lam: pd.Series, u: pd.Series) -> pd.Series:
-            if lam.empty:
-                return pd.Series([], dtype="int64")
-            seed = int(u.iloc[0] * (1 << 63)) ^ len(u)
-            rng = np.random.default_rng(seed)
-            lam_vals = lam.to_numpy(dtype=np.float64)
-            return pd.Series(rng.poisson(lam_vals).astype(np.int64))
-        _UDFS["poisson"] = _pois
-    return _UDFS["poisson"]
+@kernel("__rand_poisson", "bigint")
+def _rand_poisson(lam: pd.Series, u: pd.Series) -> pd.Series:
+    if lam.empty:
+        return pd.Series([], dtype="int64")
+    seed = int(u.iloc[0] * (1 << 63)) ^ len(u)
+    rng = np.random.default_rng(seed)
+    lam_vals = lam.to_numpy(dtype=np.float64)
+    return pd.Series(rng.poisson(lam_vals).astype(np.int64))

@@ -11,10 +11,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
 
-_UDFS: dict[str, object] = {}
+from clickhouse_clickhouse_spark.functions.kernels import kernel, per_value
 
 
 def fft_period_py(vals) -> float:
@@ -43,18 +41,7 @@ def fft_period_py(vals) -> float:
     return float(a.size / peak)
 
 
-def fft_period_udf():
-    if "fft_period" not in _UDFS:
-        @pandas_udf("double")
-        def _fft(s: pd.Series) -> pd.Series:
-            return s.map(fft_period_py)
-        _UDFS["fft_period"] = _fft
-    return _UDFS["fft_period"]
-
-
-def fft_period(c: Column) -> Column:
-    """Column wrapper: ``seriesPeriodDetectFFT(arr)``."""
-    return fft_period_udf()(c)
+kernel("__series_fft_period", "double")(per_value(fft_period_py))
 
 
 def _loess_eval(x: np.ndarray, y: np.ndarray, xe: np.ndarray,
@@ -153,11 +140,4 @@ def stl_decompose_py(vals, period, seasonal_len: int = 7,
             (seasonal + trend).tolist()]
 
 
-def stl_udf():
-    if "stl" not in _UDFS:
-        @pandas_udf("array<array<double>>")
-        def _stl(s: pd.Series, per: pd.Series) -> pd.Series:
-            return pd.Series(
-                stl_decompose_py(v, p) for v, p in zip(s, per))
-        _UDFS["stl"] = _stl
-    return _UDFS["stl"]
+kernel("__series_stl", "array<array<double>>")(per_value(stl_decompose_py))

@@ -1,21 +1,22 @@
-"""Vectorized 2-D Hilbert-curve codecs (optimization round 14).
+"""Numpy Arrow kernels for the dialect's curve, number and geo binders.
 
-The dialect's hilbertEncode/hilbertDecode were 31-step ``AGGREGATE``
-folds — higher-order functions are CodegenFallback, so every step ran
-interpreted and rebuilt a 3-field struct per row (~62 interpreted fold
-steps/row; the roundtrip measured ~3.9 s for 100 k rows on one core,
-and the fold's presence pushed the WHOLE enclosing projection out of
-whole-stage codegen). The same xy2d / d2xy construction (Wikipedia
-"Hilbert curve" public-domain pseudocode, bit-identical to the SQL fold
-it replaces — same fixed order 31, same N-1 rotation constant) runs
-here as a 31-iteration loop over whole numpy int64 arrays inside an
-Arrow-batched pandas UDF: per-row cost drops from ~40 µs interpreted to
-~0.2 µs vectorized (guide §4.2 — hand batches to vectorized native
-code when the JVM path is interpreted row-at-a-time).
+Space-filling curves (hilbertEncode/Decode, mortonEncode/Decode),
+gcd/lcm, parseReadableSize, geoDistance and geohashEncode. Written as
+SQL, each is either a 31-step ``AGGREGATE`` fold or a bind-once binder;
+higher-order functions are CodegenFallback, so every step ran
+interpreted and pushed the WHOLE enclosing projection out of whole-stage
+codegen (the Hilbert roundtrip measured ~3.9 s for 100 k rows on one
+core). Here each is a loop over whole numpy int64/float64 arrays inside
+one Arrow-batched pandas UDF: per-row cost ~0.2 µs instead of ~40 µs
+interpreted (guide §4.2 — hand batches to vectorized native code when
+the JVM path is interpreted row-at-a-time).
 
-Bounds contracts match the SQL templates exactly: encode raises on
-coordinates outside [0, 2^31), decode on codes outside [0, 2^62); NULL
-inputs yield NULL outputs (never an error), like the SQL guard chain.
+Hilbert: the xy2d / d2xy construction (Wikipedia "Hilbert curve"
+public-domain pseudocode) at fixed order 31 with the N-1 rotation
+constant. Bounds contracts match the SQL templates exactly: encode
+raises on coordinates outside [0, 2^31), decode on codes outside
+[0, 2^62); NULL inputs yield NULL outputs (never an error), like the
+SQL guard chain.
 
 Upstream: [U] src/Functions/hilbertEncode2DLUT.h (a state-machine LUT;
 values beyond the pinned docs example hilbertEncode(3,4)=31 are NOT
@@ -24,11 +25,13 @@ guaranteed bit-parity with it — documented stance unchanged).
 
 from __future__ import annotations
 
+import math
+import re
+
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 
-_UDFS: dict = {}
+from clickhouse_clickhouse_spark.functions.kernels import kernel
 
 _N1 = (1 << 31) - 1  # order-31 curve: coordinates in [0, 2^31)
 
@@ -84,63 +87,48 @@ def _masked_long_pair(a: pd.Series, b: pd.Series):
     return av, bv, na.to_numpy()
 
 
-def gcd_udf():
-    """Exact twin of the old Euclid SQL fold: gcd(0,0)=0, negatives via
-    ABS (np.gcd already takes absolute values), NULL in → NULL out."""
-    if "gcd" not in _UDFS:
-        @pandas_udf("bigint")
-        def _gcd(a: pd.Series, b: pd.Series) -> pd.Series:
-            av, bv, na = _masked_long_pair(a, b)
-            out = np.gcd(av, bv)
-            if na.any():
-                res = pd.Series(out, dtype="Int64")
-                res[na] = None
-                return res
-            return pd.Series(out)
-        _UDFS["gcd"] = _gcd
-    return _UDFS["gcd"]
+def _null_where(out: np.ndarray, na: np.ndarray) -> pd.Series:
+    if na.any():
+        res = pd.Series(out, dtype="Int64")
+        res[na] = None
+        return res
+    return pd.Series(out)
 
 
-def lcm_udf():
-    """Exact twin of the old SQL form ``IF(a=0 OR b=0, 0,
-    ABS(a DIV gcd * b))``: the division is exact (gcd divides a, so
-    floor == truncate), the product wraps in int64 like the ANSI-off
-    SQL multiply, and ABS wraps on INT64_MIN the same way."""
-    if "lcm" not in _UDFS:
-        @pandas_udf("bigint")
-        def _lcm(a: pd.Series, b: pd.Series) -> pd.Series:
-            av, bv, na = _masked_long_pair(a, b)
-            g = np.gcd(av, bv)
-            zero = (av == 0) | (bv == 0)
-            with np.errstate(over="ignore"):
-                out = np.where(zero, np.int64(0),
-                               np.abs((av // np.where(zero, 1, g)) * bv))
-            if na.any():
-                res = pd.Series(out, dtype="Int64")
-                res[na] = None
-                return res
-            return pd.Series(out)
-        _UDFS["lcm"] = _lcm
-    return _UDFS["lcm"]
+@kernel("__num_gcd", "bigint")
+def _gcd(a: pd.Series, b: pd.Series) -> pd.Series:
+    """gcd(0,0)=0, negatives via ABS (np.gcd already takes absolute
+    values), NULL in → NULL out."""
+    av, bv, na = _masked_long_pair(a, b)
+    return _null_where(np.gcd(av, bv), na)
 
 
-def hilbert_encode_udf():
-    if "henc" not in _UDFS:
-        @pandas_udf("bigint")
-        def _henc(x: pd.Series, y: pd.Series) -> pd.Series:
-            xv, yv, na = _masked_long_pair(x, y)
-            if na.any():
-                # guard only the non-null rows (NULL in → NULL out, no
-                # error — matches the SQL IF-guard chain)
-                keep = ~na
-                out = np.zeros(len(xv), dtype=np.int64)
-                out[keep] = hilbert_encode_np(xv[keep], yv[keep])
-                res = pd.Series(out, dtype="Int64")
-                res[na] = None
-                return res
-            return pd.Series(hilbert_encode_np(xv, yv))
-        _UDFS["henc"] = _henc
-    return _UDFS["henc"]
+@kernel("__num_lcm", "bigint")
+def _lcm(a: pd.Series, b: pd.Series) -> pd.Series:
+    """The reference form ``IF(a=0 OR b=0, 0, ABS(a DIV gcd * b))``: the
+    division is exact (gcd divides a, so floor == truncate), the product
+    wraps in int64 like the ANSI-off SQL multiply, and ABS wraps on
+    INT64_MIN the same way."""
+    av, bv, na = _masked_long_pair(a, b)
+    g = np.gcd(av, bv)
+    zero = (av == 0) | (bv == 0)
+    with np.errstate(over="ignore"):
+        out = np.where(zero, np.int64(0),
+                       np.abs((av // np.where(zero, 1, g)) * bv))
+    return _null_where(out, na)
+
+
+@kernel("__hilbert_encode", "bigint")
+def _hilbert_encode(x: pd.Series, y: pd.Series) -> pd.Series:
+    xv, yv, na = _masked_long_pair(x, y)
+    if not na.any():
+        return pd.Series(hilbert_encode_np(xv, yv))
+    # guard only the non-null rows (NULL in → NULL out, no error —
+    # matches the SQL IF-guard chain)
+    keep = ~na
+    out = np.zeros(len(xv), dtype=np.int64)
+    out[keep] = hilbert_encode_np(xv[keep], yv[keep])
+    return _null_where(out, na)
 
 
 def morton_encode_np(coords: list[np.ndarray]) -> np.ndarray:
@@ -169,50 +157,38 @@ def morton_decode_np(k: int, code: np.ndarray) -> list[np.ndarray]:
     return outs
 
 
-def morton_encode_udf(k: int):
-    """Arity-k encode UDF (pandas UDFs are fixed-arity, so one
-    registration per supported k). NULL in any coordinate → NULL out,
-    like the SQL bitwise chain."""
-    key = f"menc{k}"
-    if key not in _UDFS:
-        @pandas_udf("bigint")
-        def _menc(*cols: pd.Series) -> pd.Series:
-            na = cols[0].isna()
-            for c in cols[1:]:
-                na = na | c.isna()
-            arrs = [c.fillna(0).to_numpy(dtype=np.int64) for c in cols]
-            out = morton_encode_np(arrs)
-            if na.any():
-                res = pd.Series(out, dtype="Int64")
-                res[na.to_numpy()] = None
-                return res
-            return pd.Series(out)
-        _UDFS[key] = _menc
-    return _UDFS[key]
+def _morton_encode(*cols: pd.Series) -> pd.Series:
+    """NULL in any coordinate → NULL out, like the SQL bitwise chain.
+    One variadic kernel, registered once per supported arity k (the
+    templates emit ``__morton_encode{k}``)."""
+    na = cols[0].isna()
+    for c in cols[1:]:
+        na = na | c.isna()
+    arrs = [c.fillna(0).to_numpy(dtype=np.int64) for c in cols]
+    return _null_where(morton_encode_np(arrs), na.to_numpy())
 
 
-def morton_decode_udf(k: int):
-    """Dimension-k decode UDF returning struct<_1.._k: bigint>. A NULL
-    code yields a struct of NULL FIELDS — exactly what the old SQL
-    template's NAMED_STRUCT over NULL bitwise terms produced (NOT a
-    null struct, unlike hilbertDecode's fold)."""
-    key = f"mdec{k}"
-    if key not in _UDFS:
-        fields = ", ".join(f"_{i + 1}: bigint" for i in range(k))
+def _morton_decode(k: int):
+    """Dimension-k decode returning struct<_1.._k: bigint>. A NULL code
+    yields a struct of NULL FIELDS — what a NAMED_STRUCT over NULL
+    bitwise terms gives (NOT a null struct, unlike hilbertDecode)."""
+    def run(c: pd.Series) -> pd.DataFrame:
+        na = c.isna().to_numpy()
+        cv = c.fillna(0).to_numpy(dtype=np.int64)
+        outs = morton_decode_np(k, cv)
+        if na.any():
+            df = pd.DataFrame({f"_{i + 1}": pd.Series(v, dtype="Int64")
+                               for i, v in enumerate(outs)})
+            df.loc[na, :] = None
+            return df
+        return pd.DataFrame({f"_{i + 1}": v for i, v in enumerate(outs)})
+    return run
 
-        @pandas_udf(f"struct<{fields}>")
-        def _mdec(c: pd.Series) -> pd.DataFrame:
-            na = c.isna().to_numpy()
-            cv = c.fillna(0).to_numpy(dtype=np.int64)
-            outs = morton_decode_np(k, cv)
-            if na.any():
-                df = pd.DataFrame({f"_{i + 1}": pd.Series(v, dtype="Int64")
-                                   for i, v in enumerate(outs)})
-                df.loc[na, :] = None
-                return df
-            return pd.DataFrame({f"_{i + 1}": v for i, v in enumerate(outs)})
-        _UDFS[key] = _mdec
-    return _UDFS[key]
+
+for _k in range(2, 9):
+    kernel(f"__morton_encode{_k}", "bigint")(_morton_encode)
+    _fields = ", ".join(f"_{i + 1}: bigint" for i in range(_k))
+    kernel(f"__morton_decode{_k}", f"struct<{_fields}>")(_morton_decode(_k))
 
 
 _READABLE_UNITS = {
@@ -227,51 +203,44 @@ _I64_MAX = (1 << 63) - 1
 _I64_MIN = -(1 << 63)
 
 
-def parse_readable_udf(mode: str):
-    """parseReadableSize[OrNull/OrZero] kernel (optimization round 15):
-    the SQL template was a _bind_once binder (two REGEXP_EXTRACTs + two
-    26-arm CASE chains per row) that kept the whole enclosing projection
-    on the interpreted path. Exact twin of the template: same anchored
-    ASCII regex, correctly-rounded float parse (Python float() ==
-    Java Double.parseDouble), exact double multiply, CEIL then the
-    ANSI-off saturating double→BIGINT cast. Unparsable input — and NULL
-    input, which the template's `n = '' OR unit-CASE IS NULL` condition
-    routes to the same branch (NULL OR TRUE = TRUE) — raises / NULLs /
-    zeroes per mode, template-verified. Strict mode's error surfaces as
-    a PythonException rather than RAISE_ERROR's SparkRuntimeException
+_READABLE_RX = re.compile(
+    r"^\s*([0-9]+(?:\.[0-9]+)?)\s*([A-Za-z]+)\s*$", re.ASCII)
+
+
+def _parse_readable(mode: str):
+    """parseReadableSize[OrNull/OrZero] kernel, twin of the reference
+    template: same anchored ASCII regex, correctly-rounded float parse
+    (Python float() == Java Double.parseDouble), exact double multiply,
+    CEIL then the ANSI-off saturating double→BIGINT cast. Unparsable
+    input — and NULL input, which the template's `n = '' OR unit-CASE
+    IS NULL` condition routes to the same branch (NULL OR TRUE = TRUE) —
+    raises / NULLs / zeroes per mode. Strict mode's error surfaces as a
+    PythonException rather than RAISE_ERROR's SparkRuntimeException
     (same stance as the hilbert bounds guards — pinned in tests)."""
-    import math
-    import re as _re
+    def one(s):
+        m = _READABLE_RX.match(s) if s is not None else None
+        mult = _READABLE_UNITS.get(m.group(2).upper()) if m else None
+        if m is None or mult is None:
+            if mode == "strict":
+                raise ValueError(
+                    "parseReadableSize: cannot parse "
+                    + ("NULL" if s is None else s))
+            return None if mode == "null" else 0
+        v = float(m.group(1)) * mult
+        if math.isinf(v):
+            return _I64_MAX if v > 0 else _I64_MIN
+        return max(_I64_MIN, min(_I64_MAX, math.ceil(v)))
 
-    key = f"readable_{mode}"
-    if key not in _UDFS:
-        rx = _re.compile(r"^\s*([0-9]+(?:\.[0-9]+)?)\s*([A-Za-z]+)\s*$",
-                         _re.ASCII)
-
-        def one(s):
-            m = rx.match(s) if s is not None else None
-            mult = _READABLE_UNITS.get(m.group(2).upper()) if m else None
-            if m is None or mult is None:
-                if mode == "strict":
-                    raise ValueError(
-                        "parseReadableSize: cannot parse "
-                        + ("NULL" if s is None else s))
-                return None if mode == "null" else 0
-            v = float(m.group(1)) * mult
-            if math.isinf(v):
-                return _I64_MAX if v > 0 else _I64_MIN
-            return max(_I64_MIN, min(_I64_MAX, math.ceil(v)))
-
-        @pandas_udf("bigint")
-        def _parse(s: pd.Series) -> pd.Series:
-            return pd.Series([one(x) for x in s], dtype="Int64")
-
-        _UDFS[key] = _parse
-    return _UDFS[key]
+    def run(s: pd.Series) -> pd.Series:
+        return pd.Series([one(x) for x in s], dtype="Int64")
+    return run
 
 
-# WGS-84 local-radius great circle — kernel twin of the retired
-# _geo_distance_tpl binder ([U] src/Functions/greatCircleDistance.cpp
+for _mode in ("strict", "null", "zero"):
+    kernel(f"__parse_readable_{_mode}", "bigint")(_parse_readable(_mode))
+
+
+# WGS-84 local-radius great circle ([U] src/Functions/greatCircleDistance.cpp
 # geoDistance method): haversine angle on the Earth radius at the mean
 # latitude, R(phi) from the WGS-84 ellipsoid (a = 6378137,
 # b = 6356752.314245). numpy trig may differ from JVM Math in the last
@@ -292,59 +261,52 @@ _GEO_A2 = 40680631590769.0          # a^2
 _GEO_B2 = 40408299984661.453        # b^2
 
 
-def geo_distance_udf():
-    if "geodist" not in _UDFS:
-        @pandas_udf("double")
-        def _geo(lo1: pd.Series, la1: pd.Series,
-                 lo2: pd.Series, la2: pd.Series,
-                 lat_null: pd.Series, lon_null: pd.Series) -> pd.Series:
-            latn = lat_null.fillna(False).to_numpy(dtype=bool)
-            lonn = lon_null.fillna(False).to_numpy(dtype=bool)
-            # no na_value fill: NULL arrives as NaN and the masks carry
-            # the NULL-ness; genuine NaN VALUES must keep propagating
-            # through the arithmetic exactly like the SQL form
-            x1 = np.radians(lo1.to_numpy(dtype=np.float64))
-            y1 = np.radians(la1.to_numpy(dtype=np.float64))
-            x2 = np.radians(lo2.to_numpy(dtype=np.float64))
-            y2 = np.radians(la2.to_numpy(dtype=np.float64))
-            mla = np.radians((la1.to_numpy(dtype=np.float64)
-                              + la2.to_numpy(dtype=np.float64)) / 2.0)
-            inner = (np.sin(y1) * np.sin(y2)
-                     + np.cos(y1) * np.cos(y2) * np.cos(x2 - x1))
-            # LEAST(GREATEST(x, -1), 1) with Spark's NaN-sorts-highest:
-            # GREATEST(NaN, -1) = NaN, LEAST(NaN, 1) = 1.0
-            inner = np.where(np.isnan(inner), 1.0,
-                             np.clip(inner, -1.0, 1.0))
-            ang = np.arccos(inner)
-            c, s = np.cos(mla), np.sin(mla)
-            r = np.sqrt((_GEO_A2 * c * _GEO_A2 * c
-                         + _GEO_B2 * s * _GEO_B2 * s)
-                        / (_GEO_A2 * c * c + _GEO_B2 * s * s))
-            # NULL longitude only: haversine term NULL -> GREATEST
-            # skips it -> ACOS(-1) = pi; R(mla) is still defined.
-            out = np.where(lonn & ~latn, np.pi * r, ang * r)
-            # ArrowDtype return: the plain float64 path re-masks NaN
-            # VALUES as nulls at the pandas->Arrow boundary, but the
-            # SQL form emits NaN (not NULL) for NaN latitudes — build
-            # the Arrow array directly so only the lat-null rows are
-            # null and NaN stays a value.
-            import pyarrow as pa
-            arr = pa.array(out, type=pa.float64(), from_pandas=False,
-                           mask=latn if latn.any() else None)
-            return pd.Series(arr, dtype=pd.ArrowDtype(pa.float64()))
-        _UDFS["geodist"] = _geo
-    return _UDFS["geodist"]
+@kernel("__geo_distance", "double")
+def _geo_distance(lo1: pd.Series, la1: pd.Series,
+                  lo2: pd.Series, la2: pd.Series,
+                  lat_null: pd.Series, lon_null: pd.Series) -> pd.Series:
+    latn = lat_null.fillna(False).to_numpy(dtype=bool)
+    lonn = lon_null.fillna(False).to_numpy(dtype=bool)
+    # no na_value fill: NULL arrives as NaN and the masks carry
+    # the NULL-ness; genuine NaN VALUES must keep propagating
+    # through the arithmetic exactly like the SQL form
+    x1 = np.radians(lo1.to_numpy(dtype=np.float64))
+    y1 = np.radians(la1.to_numpy(dtype=np.float64))
+    x2 = np.radians(lo2.to_numpy(dtype=np.float64))
+    y2 = np.radians(la2.to_numpy(dtype=np.float64))
+    mla = np.radians((la1.to_numpy(dtype=np.float64)
+                      + la2.to_numpy(dtype=np.float64)) / 2.0)
+    inner = (np.sin(y1) * np.sin(y2)
+             + np.cos(y1) * np.cos(y2) * np.cos(x2 - x1))
+    # LEAST(GREATEST(x, -1), 1) with Spark's NaN-sorts-highest:
+    # GREATEST(NaN, -1) = NaN, LEAST(NaN, 1) = 1.0
+    inner = np.where(np.isnan(inner), 1.0,
+                     np.clip(inner, -1.0, 1.0))
+    ang = np.arccos(inner)
+    c, s = np.cos(mla), np.sin(mla)
+    r = np.sqrt((_GEO_A2 * c * _GEO_A2 * c
+                 + _GEO_B2 * s * _GEO_B2 * s)
+                / (_GEO_A2 * c * c + _GEO_B2 * s * s))
+    # NULL longitude only: haversine term NULL -> GREATEST
+    # skips it -> ACOS(-1) = pi; R(mla) is still defined.
+    out = np.where(lonn & ~latn, np.pi * r, ang * r)
+    # ArrowDtype return: the plain float64 path re-masks NaN
+    # VALUES as nulls at the pandas->Arrow boundary, but the
+    # SQL form emits NaN (not NULL) for NaN latitudes — build
+    # the Arrow array directly so only the lat-null rows are
+    # null and NaN stays a value.
+    import pyarrow as pa
+    arr = pa.array(out, type=pa.float64(), from_pandas=False,
+                   mask=latn if latn.any() else None)
+    return pd.Series(arr, dtype=pd.ArrowDtype(pa.float64()))
 
 
 _GEOHASH_ALPHABET = np.array(
     list("0123456789bcdefghjkmnpqrstuvwxyz"))
 
 
-def geohash_encode_udf(p: int):
-    """geohashEncode kernel (optimization round 15): the dialect
-    template's nested _bind_once binder (interpreted 2·half-term
-    interleave + p substring extractions per row) was the last
-    CodegenFallback site in the curves projection. Bit-exact twin of
+def _geohash_encode(p: int):
+    """geohashEncode kernel at even precision ``p``. Bit-exact twin of
     the SQL form: the quantization doubles ((lon+180)/360*scale) are
     the same IEEE ops, FLOOR + the ANSI-off double→BIGINT cast is
     replayed including its NaN→0 and saturation behavior, LEAST(…,
@@ -356,65 +318,58 @@ def geohash_encode_udf(p: int):
     yields scale-1 (the top cell), while a NaN coordinate casts to 0
     (Java (long)NaN) and quantizes to cell 0 — template-verified, so
     the output is never NULL."""
-    if p % 2 or not 2 <= p <= 12:
-        raise ValueError("geohash_encode_udf: even precision in [2, 12]")
-    key = f"ghenc{p}"
-    if key not in _UDFS:
-        half = 5 * p // 2
-        scale = np.int64(1) << half
+    half = 5 * p // 2
+    scale = np.int64(1) << half
 
-        def quant(v: np.ndarray, null_mask: np.ndarray,
-                  lo: float, span: float) -> np.ndarray:
-            f = np.floor((v + lo) / span * np.float64(scale))
-            # Java (long) double: NaN -> 0, +/-inf saturates
-            q = np.where(np.isnan(f), np.int64(0),
-                         np.clip(f, -9.223372036854776e18,
-                                 9.223372036854775e18)).astype(np.int64)
-            q = np.minimum(q, scale - 1)
-            # NULL coordinate: FLOOR term NULL -> LEAST skips it
-            return np.where(null_mask, scale - 1, q)
+    def quant(v: np.ndarray, null_mask: np.ndarray,
+              lo: float, span: float) -> np.ndarray:
+        f = np.floor((v + lo) / span * np.float64(scale))
+        # Java (long) double: NaN -> 0, +/-inf saturates
+        q = np.where(np.isnan(f), np.int64(0),
+                     np.clip(f, -9.223372036854776e18,
+                             9.223372036854775e18)).astype(np.int64)
+        q = np.minimum(q, scale - 1)
+        # NULL coordinate: FLOOR term NULL -> LEAST skips it
+        return np.where(null_mask, scale - 1, q)
 
-        @pandas_udf("string")
-        def _ghenc(lon: pd.Series, lat: pd.Series,
-                   lon_null: pd.Series, lat_null: pd.Series) -> pd.Series:
-            lonn = lon_null.fillna(False).to_numpy(dtype=bool)
-            latn = lat_null.fillna(False).to_numpy(dtype=bool)
-            lq = quant(lon.to_numpy(dtype=np.float64), lonn, 180.0, 360.0)
-            tq = quant(lat.to_numpy(dtype=np.float64), latn, 90.0, 180.0)
-            code = np.zeros_like(lq)
-            for j in range(half):
-                code |= ((lq >> j) & 1) << (2 * j + 1)
-                code |= ((tq >> j) & 1) << (2 * j)
-            chars = [
-                _GEOHASH_ALPHABET[(code >> (5 * (p - 1 - k))) & 31]
-                for k in range(p)
-            ]
-            out = chars[0].astype(object)
-            for c in chars[1:]:
-                out = out + c
-            return pd.Series(out, dtype=object)
-
-        _UDFS[key] = _ghenc
-    return _UDFS[key]
+    def run(lon: pd.Series, lat: pd.Series,
+            lon_null: pd.Series, lat_null: pd.Series) -> pd.Series:
+        lonn = lon_null.fillna(False).to_numpy(dtype=bool)
+        latn = lat_null.fillna(False).to_numpy(dtype=bool)
+        lq = quant(lon.to_numpy(dtype=np.float64), lonn, 180.0, 360.0)
+        tq = quant(lat.to_numpy(dtype=np.float64), latn, 90.0, 180.0)
+        code = np.zeros_like(lq)
+        for j in range(half):
+            code |= ((lq >> j) & 1) << (2 * j + 1)
+            code |= ((tq >> j) & 1) << (2 * j)
+        chars = [
+            _GEOHASH_ALPHABET[(code >> (5 * (p - 1 - k))) & 31]
+            for k in range(p)
+        ]
+        out = chars[0].astype(object)
+        for c in chars[1:]:
+            out = out + c
+        return pd.Series(out, dtype=object)
+    return run
 
 
-def hilbert_decode_udf():
-    if "hdec" not in _UDFS:
-        @pandas_udf("struct<_1: bigint, _2: bigint>")
-        def _hdec(c: pd.Series) -> pd.DataFrame:
-            na = c.isna().to_numpy()
-            cv = c.fillna(0).to_numpy(dtype=np.int64)
-            if na.any():
-                keep = ~na
-                x = np.zeros(len(cv), dtype=np.int64)
-                y = np.zeros(len(cv), dtype=np.int64)
-                x[keep], y[keep] = hilbert_decode_np(cv[keep])
-                df = pd.DataFrame({"_1": pd.Series(x, dtype="Int64"),
-                                   "_2": pd.Series(y, dtype="Int64")})
-                df.loc[na, "_1"] = None
-                df.loc[na, "_2"] = None
-                return df
-            x, y = hilbert_decode_np(cv)
-            return pd.DataFrame({"_1": x, "_2": y})
-        _UDFS["hdec"] = _hdec
-    return _UDFS["hdec"]
+for _p in (2, 4, 6, 8, 10, 12):
+    kernel(f"__geohash_encode{_p}", "string")(_geohash_encode(_p))
+
+
+@kernel("__hilbert_decode", "struct<_1: bigint, _2: bigint>")
+def _hilbert_decode(c: pd.Series) -> pd.DataFrame:
+    na = c.isna().to_numpy()
+    cv = c.fillna(0).to_numpy(dtype=np.int64)
+    if na.any():
+        keep = ~na
+        x = np.zeros(len(cv), dtype=np.int64)
+        y = np.zeros(len(cv), dtype=np.int64)
+        x[keep], y[keep] = hilbert_decode_np(cv[keep])
+        df = pd.DataFrame({"_1": pd.Series(x, dtype="Int64"),
+                           "_2": pd.Series(y, dtype="Int64")})
+        df.loc[na, "_1"] = None
+        df.loc[na, "_2"] = None
+        return df
+    x, y = hilbert_decode_np(cv)
+    return pd.DataFrame({"_1": x, "_2": y})

@@ -26,22 +26,11 @@ from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from clickhouse_clickhouse_spark.functions.kernels import kernel, per_value
 
 _B58 = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
 _B58_IDX = {c: i for i, c in enumerate(_B58)}
 
-
-
-# exact spellings of the registered UDF names (the Spark catalog
-# lowercases; system.functions restores case from this set)
-REGISTERED_NAMES: set[str] = set()
-
-
-def _reg(spark, name, udf):
-    REGISTERED_NAMES.add(name)
-    spark.udf.register(name, udf)
 
 def punycode_encode_py(s: str) -> str:
     return s.encode("punycode").decode("ascii")
@@ -148,59 +137,30 @@ def bfloat16_py(x: float) -> float:
     return struct.unpack("<f", struct.pack("<I", v))[0]
 
 
-def _str_udf(fn, try_mode: bool = False):
-    """Wrap a str->str core as a null-safe Arrow-batched pandas UDF.
-    ``try_mode`` maps failures to '' (the reference's try* contract);
-    otherwise failures raise with the offending value named."""
-
-    @pandas_udf("string")
-    def run(col: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return fn(v)
-            except Exception as ex:
-                if try_mode:
-                    return ""
-                raise ValueError(f"{fn.__name__}({v!r}): {ex}") from ex
-        return col.map(one)
-
-    return run
+def _normalizer(form: str):
+    def normalize(v: str) -> str:
+        return unicodedata.normalize(form, v)
+    return normalize
 
 
-def register_codec_udfs(spark) -> None:
-    """Register every codec under its reference name (idempotent per
-    session via ch_sql._register_udfs)."""
-    _reg(spark, "punycodeEncode", _str_udf(punycode_encode_py))
-    _reg(spark, "punycodeDecode", _str_udf(punycode_decode_py))
-    _reg(spark, "tryPunycodeDecode",
-                       _str_udf(punycode_decode_py, try_mode=True))
-    _reg(spark, "idnaEncode", _str_udf(idna_encode_py))
-    _reg(spark, "idnaDecode", _str_udf(idna_decode_py))
-    _reg(spark, "tryIdnaEncode",
-                       _str_udf(idna_encode_py, try_mode=True))
-    _reg(spark, "base58Encode", _str_udf(base58_encode_py))
-    _reg(spark, "base58Decode", _str_udf(base58_decode_py))
-    _reg(spark, "tryBase58Decode",
-                       _str_udf(base58_decode_py, try_mode=True))
-    for form in ("NFC", "NFD", "NFKC", "NFKD"):
-        _reg(spark, 
-            f"normalizeUTF8{form}",
-            _str_udf(lambda v, f=form: unicodedata.normalize(f, v)))
-    _reg(spark, "base32Encode", _str_udf(base32_encode_py))
-    _reg(spark, "base32Decode", _str_udf(base32_decode_py))
-    _reg(spark, "tryBase32Decode",
-                       _str_udf(base32_decode_py, try_mode=True))
-
-    @pandas_udf("bigint")
-    def _crc64(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else crc64_py(v))
-
-    _reg(spark, "crc64", _crc64)
-
-    @pandas_udf("float")
-    def _bf16(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else bfloat16_py(v))
-
-    _reg(spark, "toBFloat16", _bf16)
+# try* forms map failures to '' (the reference's contract); the others
+# raise with the offending value named
+for _name, _core in (
+        ("punycodeEncode", punycode_encode_py),
+        ("punycodeDecode", punycode_decode_py),
+        ("idnaEncode", idna_encode_py),
+        ("idnaDecode", idna_decode_py),
+        ("base58Encode", base58_encode_py),
+        ("base58Decode", base58_decode_py),
+        ("base32Encode", base32_encode_py),
+        ("base32Decode", base32_decode_py)):
+    kernel(_name, "string")(per_value(_core))
+for _name, _core in (("tryPunycodeDecode", punycode_decode_py),
+                     ("tryIdnaEncode", idna_encode_py),
+                     ("tryBase58Decode", base58_decode_py),
+                     ("tryBase32Decode", base32_decode_py)):
+    kernel(_name, "string")(per_value(_core, ""))
+for _form in ("NFC", "NFD", "NFKC", "NFKD"):
+    kernel(f"normalizeUTF8{_form}", "string")(per_value(_normalizer(_form)))
+kernel("crc64", "bigint")(per_value(crc64_py))
+kernel("toBFloat16", "float")(per_value(bfloat16_py))

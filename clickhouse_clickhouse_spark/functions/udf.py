@@ -4,7 +4,8 @@ Reference mapping:
 - ``CREATE FUNCTION f AS (x) -> expr`` (SQL lambda UDF) →
   ``sql_lambda``: a named Python helper that composes Column expressions.
   Zero serialization cost — it IS the expression, exactly like the
-  reference's substitution-based UDFs.
+  reference's substitution-based UDFs. In the SQL-string API the
+  statement itself runs through ``ch_sql.ch_statement``.
 - Executable UDFs (external process over a pipe) → ``pandas_udf``
   (Arrow-batched; see pipeline/multimodal.py for the mapInPandas variant).
 - ``executable`` table functions / UDTF → Python UDTF (Spark ≥3.5).
@@ -14,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 
 
 _REGISTRY: dict[str, Callable[..., Column]] = {}
@@ -29,13 +30,3 @@ def sql_lambda(name: str, fn: Callable[..., Column]) -> Callable[..., Column]:
 
 def get_function(name: str) -> Callable[..., Column]:
     return _REGISTRY[name]
-
-
-def register_sql_function(spark: SparkSession, name: str, body: str,
-                          *arg_names: str) -> None:
-    """Expose a lambda UDF to the SQL-string API as a SQL temp function
-    (``CREATE TEMPORARY FUNCTION f AS (x) -> expr`` analog): Spark ≥3.5
-    supports ``CREATE TEMPORARY FUNCTION ... RETURN <expr>`` SQL UDFs."""
-    args = ", ".join(f"{a} DOUBLE" for a in arg_names)
-    spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-              f"RETURNS DOUBLE RETURN {body}")

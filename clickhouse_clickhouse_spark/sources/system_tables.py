@@ -274,13 +274,12 @@ def system_functions(spark: SparkSession) -> DataFrame:
     upstream lists functions that then reject bad arguments."""
     from clickhouse_clickhouse_spark import ch_sql as C
 
-    C._register_udfs(spark)
-    from clickhouse_clickhouse_spark.functions import ipcodecs, textcodecs
+    from clickhouse_clickhouse_spark.functions import kernels
+
     rows = {}
-    # session-registered compat UDFs (cityHash64/sipHash64, codecs, ...)
-    # with their exact spellings (the Spark catalog lowercases names)
-    for n in (C._UDF_NAMES | textcodecs.REGISTERED_NAMES
-              | ipcodecs.REGISTERED_NAMES):
+    # the Arrow kernel table, reference spellings (the Spark catalog
+    # lowercases names); "__" kernels are template-internal
+    for n in kernels.names():
         if not n.startswith("__"):
             rows[n] = (n, "System", False)
     for n in C._FUNCS:

@@ -298,3 +298,13 @@ def test_block_order_partitioned_parallel(spark, sf_dir):
     assert "Exchange SinglePartition" not in plan, plan
     assert "hashpartitioning(user_id" in plan, plan
     assert out.count() > 0
+
+
+def test_kernel_batteries_evaluate_in_one_python_node(spark, sf_dir):
+    """Every curves-battery kernel (hilbert, morton, gcd/lcm, readable
+    sizes, geo distance, geohash) and the siphash128 family must share
+    ONE ArrowEvalPython node per query: a split would pay the Arrow
+    round trip and the Python worker per kernel."""
+    for name in ("ch_sql_round10_curves", "ch_sql_siphash128"):
+        plan = _plan(spark, name, sf_dir)
+        assert plan.count("ArrowEvalPython") == 1, (name, plan)
