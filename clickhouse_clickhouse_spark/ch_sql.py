@@ -55,6 +55,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_clickhouse_spark.session import local_frame
+
 # name -> template with {0}, {1}... arg slots (already-rewritten args)
 # accurateCast type argument: quoted upstream type name -> Spark type
 _ACC_CAST_TYPES = {
@@ -10177,8 +10179,8 @@ def ch_insert(spark: SparkSession, sql: str,
                              "lines passed separately (client contract) "
                              "or inline after the statement")
         if isinstance(data, list):
-            data = spark.createDataFrame([(ln,) for ln in data],
-                                         "line string")
+            data = local_frame(spark, [(ln,) for ln in data],
+                                      "line string")
         else:
             data = data.toDF("line")
     if fmt not in ("Values", "JSONEachRow", "CSV", "TSV", "TabSeparated"):
@@ -10667,7 +10669,7 @@ def ch_create_table(spark: SparkSession, sql: str) -> TableSpec:
             raise ValueError(f"layout key {key!r} is not a column "
                              f"(expressions in PARTITION BY/ORDER BY are "
                              f"not supported here — pre-compute a column)")
-    spark.createDataFrame([], schema).createOrReplaceTempView(spec.name)
+    local_frame(spark, [], schema).createOrReplaceTempView(spec.name)
     return spec
 
 
@@ -10675,19 +10677,20 @@ def insert_into_table(spark: SparkSession, spec: TableSpec,
                       rows: DataFrame, path: str | None = None) -> None:
     """INSERT honoring the DDL's layout: with a ``path``, write
     partitioned+sorted parquet (MergeTree part shape) and re-register the
-    view over the files; without, append to the in-memory view (Memory
-    engine)."""
+    view over the files with the table's current schema; without, append
+    to the in-memory view (Memory engine)."""
     if path is None or spec.engine.lower() in ("memory", "null"):
         if spec.engine.lower() != "null":
             append_to_view(spark, spec.name, rows)
         return
     from clickhouse_clickhouse_spark.sources.write import (
-        insert_partitioned,
+        insert_partitioned, read_parts,
     )
 
+    schema = spark.table(spec.name).schema
     insert_partitioned(rows, path, partition_by=spec.partition_by,
                        sort_by=spec.order_by, mode="append")
-    spark.read.parquet(path).createOrReplaceTempView(spec.name)
+    read_parts(spark, path, schema).createOrReplaceTempView(spec.name)
 
 
 # ----------------------------------------------------------- statements
@@ -10729,8 +10732,8 @@ def ch_statement(spark: SparkSession, sql: str,
             name, _, val = item.partition("=")
             settings[name.strip()] = val.strip().strip("'\"")
         applied = apply_ch_settings(spark, settings)
-        return spark.createDataFrame(
-            [(k, conf, val) for k, (conf, val) in applied.items()],
+        return local_frame(
+            spark, [(k, conf, val) for k, (conf, val) in applied.items()],
             "setting string, spark_conf string, value string")
     if kw == "SYSTEM":
         sm = re.match(r"SYSTEM\s+REFRESH\s+VIEW\s+(\w+)$",
@@ -10741,8 +10744,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 raise ValueError(f"{name!r} is not a refreshable "
                                  "materialized view")
             n = _do_refresh(spark, name)
-            return spark.createDataFrame([(name, n)],
-                                         "refreshed string, rows long")
+            return local_frame(spark, [(name, n)],
+                                      "refreshed string, rows long")
         raise ValueError("unsupported SYSTEM statement (SYSTEM REFRESH "
                          "VIEW <name> is)")
     if kw == "CREATE":
@@ -10762,8 +10765,8 @@ def ch_statement(spark: SparkSession, sql: str,
             if len(set(params)) != len(params):
                 raise ValueError("CREATE FUNCTION: duplicate parameter")
             _SQL_UDFS[name] = (params, fm.group("b").strip())
-            return spark.createDataFrame(
-                [(name, len(params))], "function string, arity int")
+            return local_frame(
+                spark, [(name, len(params))], "function string, arity int")
         if re.match(r"CREATE\s+FUNCTION\b", sql.strip(),
                     re.IGNORECASE):
             raise ValueError(
@@ -10836,8 +10839,8 @@ def ch_statement(spark: SparkSession, sql: str,
                         f"dictionary {name!r} already exists — "
                         "DROP DICTIONARY first or use IF NOT EXISTS")
                 d = _DICTIONARIES[name.lower()]
-                return spark.createDataFrame(
-                    [(name, d["table"], d["key"])],
+                return local_frame(
+                    spark, [(name, d["table"], d["key"])],
                     "dictionary string, source_table string, key string")
             _DICTIONARIES[name.lower()] = {
                 "table": tm.group(1), "key": key,
@@ -10846,8 +10849,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 "layout": layout, "rmin": rmin, "rmax": rmax,
                 "parent": parent}
             _DICT_GEN[0] += 1          # invalidate the translate memo
-            return spark.createDataFrame(
-                [(name, tm.group(1), key)],
+            return local_frame(
+                spark, [(name, tm.group(1), key)],
                 "dictionary string, source_table string, key string")
         mvm = re.match(
             r"CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -10881,9 +10884,9 @@ def ch_statement(spark: SparkSession, sql: str,
             }
             n = _do_refresh(spark, name)   # initial refresh (reference
                                            # behavior: runs on create)
-            return spark.createDataFrame(
-                [(name, mvm.group("to") or name,
-                  int(mvm.group("rn")) * _REFRESH_UNITS[unit], n)],
+            return local_frame(
+                spark, [(name, mvm.group("to") or name,
+                         int(mvm.group("rn")) * _REFRESH_UNITS[unit], n)],
                 "name string, target string, interval_s long, rows long")
         if mvm:
             # Batch MATERIALIZED VIEW (upstream StorageMaterializedView):
@@ -10907,7 +10910,7 @@ def ch_statement(spark: SparkSession, sql: str,
             try:
                 spark.table(target)
             except Exception:
-                spark.createDataFrame([], transformed.schema) \
+                local_frame(spark, [], transformed.schema) \
                     .createOrReplaceTempView(target)
             _MATVIEWS.setdefault(source.lower(), []).append(
                 (mv, target, tsql))
@@ -10920,8 +10923,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 # late-bound as the target re-registers on each insert
                 spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {mv} "
                           f"AS SELECT * FROM {target}")
-            return spark.createDataFrame(
-                [(mv, target, source, populate)],
+            return local_frame(
+                spark, [(mv, target, source, populate)],
                 "name string, target string, source string, "
                 "populated boolean")
         vm = re.match(
@@ -10938,8 +10941,8 @@ def ch_statement(spark: SparkSession, sql: str,
             _register_udfs(spark)
             spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW "
                       f"{vm.group('v')} AS {translate(vm.group('q'))}")
-            return spark.createDataFrame([(vm.group("v"), "View")],
-                                         "name string, engine string")
+            return local_frame(spark, [(vm.group("v"), "View")],
+                                      "name string, engine string")
         cm = re.match(
             r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<t>\w+)\s+"
             r"ENGINE\s*=\s*(?P<e>\w+)(?:\([^)]*\))?\s*"
@@ -10971,9 +10974,9 @@ def ch_statement(spark: SparkSession, sql: str,
                 import os as _os
                 spec.path = _os.path.join(data_dir, spec.name)
             _remember_spec(spark, spec)
-        return spark.createDataFrame(
-            [(spec.name, spec.engine, ",".join(spec.partition_by),
-              ",".join(spec.order_by))],
+        return local_frame(
+            spark, [(spec.name, spec.engine, ",".join(spec.partition_by),
+                     ",".join(spec.order_by))],
             "name string, engine string, partition_by string, "
             "order_by string")
     if kw == "INSERT":
@@ -10983,11 +10986,11 @@ def ch_statement(spark: SparkSession, sql: str,
         if spec is not None and spec.path:
             n = rows.count()
             insert_into_table(spark, spec, rows, spec.path)
-            return spark.createDataFrame([(m.group("table"), n)],
-                                         "table string, written long")
+            return local_frame(spark, [(m.group("table"), n)],
+                                      "table string, written long")
         append_to_view(spark, m.group("table"), rows)
-        return spark.createDataFrame([(m.group("table"), rows.count())],
-                                     "table string, written long")
+        return local_frame(spark, [(m.group("table"), rows.count())],
+                                  "table string, written long")
     if kw == "DESCRIBE" or kw == "DESC":
         rest = sql.strip().split(None, 1)[1].strip().rstrip(";")
         if rest.upper().startswith("TABLE "):
@@ -11005,7 +11008,7 @@ def ch_statement(spark: SparkSession, sql: str,
             t = spark.table(rest)
         rows = [(f.name, spark_type_to_ch(f.dataType, f.nullable))
                 for f in t.schema.fields]
-        return spark.createDataFrame(rows, "name string, type string")
+        return local_frame(spark, rows, "name string, type string")
     if kw == "SHOW":
         rest = sql.strip()[4:].strip().rstrip(";")
         if rest.upper().startswith("TABLES"):
@@ -11031,7 +11034,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 stmt += f"\nPARTITION BY ({', '.join(spec.partition_by)})"
             if spec.order_by:
                 stmt += f"\nORDER BY ({', '.join(spec.order_by)})"
-            return spark.createDataFrame([(stmt,)], "statement string")
+            return local_frame(spark, [(stmt,)], "statement string")
         fm = re.match(r"FUNCTIONS(?:\s+LIKE\s+'([^']*)')?$", rest,
                       re.IGNORECASE)
         if fm:
@@ -11050,8 +11053,8 @@ def ch_statement(spark: SparkSession, sql: str,
         if first == "SYNTAX":
             # the reference's EXPLAIN SYNTAX shows the rewritten query —
             # here that IS the dialect translation
-            return spark.createDataFrame(
-                [(translate(rest.split(None, 1)[1]),)],
+            return local_frame(
+                spark, [(translate(rest.split(None, 1)[1]),)],
                 "rewritten_query string")
         variants = {"ESTIMATE": "EXPLAIN COST",
                     "PIPELINE": "EXPLAIN FORMATTED",
@@ -11064,24 +11067,25 @@ def ch_statement(spark: SparkSession, sql: str,
                 plan = routed._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode
                     .fromString("formatted"))
-                return spark.createDataFrame(
-                    [("== Answered from aggregate projection ==\n"
-                      + plan,)], "plan string")
+                return local_frame(
+                    spark, [("== Answered from aggregate projection ==\n"
+                             + plan,)], "plan string")
             return spark.sql(f"{variants[first]} {translate(body)}")
         joined = _try_strictness_join(spark, rest, None)
         if joined is not None:
             plan = joined._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("simple"))
-            return spark.createDataFrame(
-                [("== Strictness join (operator route) ==\n" + plan,)],
+            return local_frame(
+                spark, [("== Strictness join (operator route) ==\n" + plan,)],
                 "plan string")
         routed = _try_projection_route(spark, rest)
         if routed is not None:
             plan = routed._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("simple"))
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [("== Answered from aggregate projection ==\n" + plan,)],
                 "plan string")
         return spark.sql(f"EXPLAIN {translate(rest)}")
@@ -11090,7 +11094,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if name.upper().startswith("TABLE "):
             name = name.split(None, 1)[1]
         ok = spark.catalog.tableExists(name)
-        return spark.createDataFrame([(1 if ok else 0,)], "result int")
+        return local_frame(spark, [(1 if ok else 0,)], "result int")
     if kw == "DROP":
         fdm = re.match(r"DROP\s+FUNCTION\s+(?:IF\s+EXISTS\s+)?(\w+)",
                        sql.strip().rstrip(";"), re.IGNORECASE)
@@ -11100,8 +11104,8 @@ def ch_statement(spark: SparkSession, sql: str,
                                              re.IGNORECASE):
                 raise ValueError(
                     f"DROP FUNCTION: {fdm.group(1)!r} does not exist")
-            return spark.createDataFrame(
-                [(fdm.group(1), dropped)],
+            return local_frame(
+                spark, [(fdm.group(1), dropped)],
                 "function string, dropped boolean")
         ddm = re.match(r"DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?(\w+)",
                        sql.strip().rstrip(";"), re.IGNORECASE)
@@ -11109,15 +11113,19 @@ def ch_statement(spark: SparkSession, sql: str,
             dropped = _DICTIONARIES.pop(ddm.group(1).lower(),
                                         None) is not None
             _DICT_GEN[0] += 1          # invalidate the translate memo
-            return spark.createDataFrame(
-                [(ddm.group(1), dropped)],
+            return local_frame(
+                spark, [(ddm.group(1), dropped)],
                 "dictionary string, dropped boolean")
         mm = re.match(r"DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?(\w+)",
                       sql.strip(), re.IGNORECASE)
         if not mm:
             raise ValueError("unsupported DROP statement")
         spark.catalog.dropTempView(mm.group(1))
-        _SPECS.pop((id(spark), mm.group(1).lower()), None)
+        spec = _SPECS.pop((id(spark), mm.group(1).lower()), None)
+        if spec is not None and spec.path:
+            from clickhouse_clickhouse_spark.sources.write import drop_parts
+
+            drop_parts(spark, spec.path)
         _forget_block_hashes(mm.group(1))
         _REFRESHABLES.pop(mm.group(1).lower(), None)
         from clickhouse_clickhouse_spark.plans.summary import (
@@ -11131,7 +11139,7 @@ def ch_statement(spark: SparkSession, sql: str,
                                   if t[0].lower() != mm.group(1).lower()]
             if not _MATVIEWS[src_tbl]:
                 del _MATVIEWS[src_tbl]
-        return spark.createDataFrame([(mm.group(1),)], "dropped string")
+        return local_frame(spark, [(mm.group(1),)], "dropped string")
     if kw == "ALTER":
         from pyspark.sql import functions as F
 
@@ -11160,15 +11168,15 @@ def ch_statement(spark: SparkSession, sql: str,
             out = base.withColumn(om.group(1), F.lit(None).cast(dt))
             out.createOrReplaceTempView(name)
             _rebuild()
-            return spark.createDataFrame([(name, om.group(1))],
-                                         "table string, added string")
+            return local_frame(spark, [(name, om.group(1))],
+                                      "table string, added string")
         om = re.match(r"DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)$",
                       op, re.IGNORECASE)
         if om:
             base.drop(om.group(1)).createOrReplaceTempView(name)
             _rebuild()
-            return spark.createDataFrame([(name, om.group(1))],
-                                         "table string, dropped string")
+            return local_frame(spark, [(name, om.group(1))],
+                                      "table string, dropped string")
         om = re.match(r"DELETE\s+WHERE\s+(.+)$", op,
                       re.IGNORECASE | re.DOTALL)
         if om:
@@ -11179,7 +11187,7 @@ def ch_statement(spark: SparkSession, sql: str,
             out = base.filter(f"NOT ({cond})")
             out.createOrReplaceTempView(name)
             _rebuild()
-            return spark.createDataFrame([(name,)], "mutated string")
+            return local_frame(spark, [(name,)], "mutated string")
         om = re.match(r"UPDATE\s+(.+?)\s+WHERE\s+(.+)$", op,
                       re.IGNORECASE | re.DOTALL)
         if om:
@@ -11194,7 +11202,7 @@ def ch_statement(spark: SparkSession, sql: str,
                                 f"ELSE {col} END"))
             out.createOrReplaceTempView(name)
             _rebuild()
-            return spark.createDataFrame([(name,)], "mutated string")
+            return local_frame(spark, [(name,)], "mutated string")
         om = re.match(r"ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)"
                       r"\s*\(\s*SELECT\s+(.+?)\s+GROUP\s+BY\s+(.+?)\s*\)$",
                       op, re.IGNORECASE | re.DOTALL)
@@ -11230,8 +11238,8 @@ def ch_statement(spark: SparkSession, sql: str,
             s = SummaryTable(path, tuple(keys), measures)
             s.build(base)
             register_projection(name, pname, s)
-            return spark.createDataFrame(
-                [(name, pname, ",".join(keys), len(measures))],
+            return local_frame(
+                spark, [(name, pname, ",".join(keys), len(measures))],
                 "table string, projection string, keys string, "
                 "measures int")
         om = re.match(r"DROP\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(\w+)$",
@@ -11242,8 +11250,8 @@ def ch_statement(spark: SparkSession, sql: str,
             )
 
             dropped = drop_projection(name, om.group(1))
-            return spark.createDataFrame(
-                [(name, om.group(1), bool(dropped))],
+            return local_frame(
+                spark, [(name, om.group(1), bool(dropped))],
                 "table string, projection string, dropped boolean")
         raise ValueError(f"unsupported ALTER operation: {op!r}")
     if kw == "DELETE":
@@ -11264,7 +11272,7 @@ def ch_statement(spark: SparkSession, sql: str,
         )
 
         rebuild_projections(spark, mm.group("t"))
-        return spark.createDataFrame([(mm.group("t"),)], "mutated string")
+        return local_frame(spark, [(mm.group("t"),)], "mutated string")
     if kw == "OPTIMIZE":
         mm = re.match(r"OPTIMIZE\s+TABLE\s+(\w+)(?:\s+FINAL)?"
                       r"(?:\s+(DEDUPLICATE)(?:\s+BY\s+(.+))?)?\s*$",
@@ -11282,10 +11290,10 @@ def ch_statement(spark: SparkSession, sql: str,
                 # file-backed table: the dedup is a PART REWRITE, not a
                 # view swap — write back and re-register over the files
                 from clickhouse_clickhouse_spark.sources.write import (
-                    _rewrite,
+                    _rewrite, read_parts,
                 )
                 _rewrite(spark, deduped, spec.path, spec.partition_by)
-                spark.read.parquet(spec.path) \
+                read_parts(spark, spec.path, t.schema) \
                     .createOrReplaceTempView(name)
             else:
                 deduped.createOrReplaceTempView(name)
@@ -11294,11 +11302,13 @@ def ch_statement(spark: SparkSession, sql: str,
             # background-merge analog on files: compact to fewer sorted
             # parts, keeping the partition-directory layout
             from clickhouse_clickhouse_spark.sources.write import (
-                optimize_compact,
+                optimize_compact, read_parts,
             )
+            schema = spark.table(name).schema
             optimize_compact(spark, spec.path, sort_by=spec.order_by,
-                             partition_by=spec.partition_by)
-            spark.read.parquet(spec.path).createOrReplaceTempView(name)
+                             partition_by=spec.partition_by, schema=schema)
+            read_parts(spark, spec.path, schema) \
+                .createOrReplaceTempView(name)
         # merge-time projection maintenance (upstream: merges merge
         # projection parts): re-aggregating compacts the incremental
         # per-insert partials back to one row per key
@@ -11307,8 +11317,8 @@ def ch_statement(spark: SparkSession, sql: str,
         )
 
         n = rebuild_projections(spark, name)
-        return spark.createDataFrame(
-            [(name, bool(mm.group(2)), n)],
+        return local_frame(
+            spark, [(name, bool(mm.group(2)), n)],
             "optimized string, deduplicated boolean, "
             "projections_compacted int")
     if kw == "RENAME":
@@ -11337,7 +11347,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 spec.name = b
                 _remember_spec(spark, spec)
             moved.append((a, b))
-        return spark.createDataFrame(moved, "from string, to string")
+        return local_frame(spark, moved, "from string, to string")
     if kw == "EXCHANGE":
         mm = re.match(r"EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)$",
                       sql.strip().rstrip(";"), re.IGNORECASE)
@@ -11364,19 +11374,26 @@ def ch_statement(spark: SparkSession, sql: str,
         if sb is not None:
             sb.name = a
             _remember_spec(spark, sb)
-        return spark.createDataFrame([(a, b)],
-                                     "exchanged string, with string")
+        return local_frame(spark, [(a, b)],
+                                  "exchanged string, with string")
     if kw == "TRUNCATE":
         mm = re.match(r"TRUNCATE\s+(?:TABLE\s+)?(\w+)", sql.strip(),
                       re.IGNORECASE)
         name = mm.group(1)
         schema = spark.table(name).schema
-        spark.createDataFrame([], schema).createOrReplaceTempView(name)
+        spec = _SPECS.get((id(spark), name.lower()))
+        if spec is not None and spec.path:
+            from clickhouse_clickhouse_spark.sources.write import (
+                truncate_parts,
+            )
+
+            truncate_parts(spark, spec.path)
+        local_frame(spark, [], schema).createOrReplaceTempView(name)
         _forget_block_hashes(name)
         from clickhouse_clickhouse_spark.plans.summary import (
             rebuild_projections,
         )
 
         rebuild_projections(spark, name)
-        return spark.createDataFrame([(name,)], "truncated string")
+        return local_frame(spark, [(name,)], "truncated string")
     return ch_sql(spark, sql)

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from clickhouse_clickhouse_spark.session import local_frame
+
 # Typed metadata carried alongside the opaque payload.
 IMAGE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -49,7 +51,7 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
         rng = np.random.default_rng(seed=i)
         payload = rng.integers(0, 256, size=64, dtype=np.uint8).tobytes()
         rows.append((i, bytearray(payload), ("fake/raw", 8, 8)))
-    return spark.createDataFrame(rows, IMAGE_SCHEMA)
+    return local_frame(spark, rows, IMAGE_SCHEMA)
 
 
 def _decode_stub(payload: bytes) -> np.ndarray:
@@ -93,7 +95,7 @@ def synthetic_png_media(spark, n: int = 16) -> DataFrame:
         img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
         rows.append((i, bytearray(png_encode(np.asarray(img))),
                      ("image/png", w, h)))
-    return spark.createDataFrame(rows, IMAGE_SCHEMA)
+    return local_frame(spark, rows, IMAGE_SCHEMA)
 
 
 _PROBE_SCHEMA = T.StructType([
@@ -300,7 +302,7 @@ def synthetic_wav_media(spark, n: int = 8, rate: int = 8000,
         freq, amp = 200.0 * (i + 1), 0.1 * (i + 1)
         wav = wav_encode(rate, amp * np.sin(2 * np.pi * freq * t))
         rows.append((i, bytearray(wav), ("audio/wav", None, None)))
-    return spark.createDataFrame(rows, IMAGE_SCHEMA)
+    return local_frame(spark, rows, IMAGE_SCHEMA)
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
@@ -396,7 +398,7 @@ def synthetic_jpeg_media(spark, n: int = 12) -> DataFrame:
         payload = jpeg_encode(img, quality=92, subsampling=subs[i % 3],
                               restart_interval=i % 3)
         rows.append((i, bytearray(payload), ("image/jpeg", w, h)))
-    return spark.createDataFrame(rows, IMAGE_SCHEMA)
+    return local_frame(spark, rows, IMAGE_SCHEMA)
 
 
 def _gradient_rgb(h: int, w: int) -> np.ndarray:
@@ -475,7 +477,7 @@ def synthetic_mjpeg_media(spark, n: int = 4, frames: int = 6) -> DataFrame:
         rows.append((i, bytearray(build_mp4(payloads, codec="jpeg",
                                             width=w, height=h)),
                      ("video/mp4", w, h)))
-    return spark.createDataFrame(rows, IMAGE_SCHEMA)
+    return local_frame(spark, rows, IMAGE_SCHEMA)
 
 
 def _mjpeg_frame(j: int, h: int, w: int) -> np.ndarray:

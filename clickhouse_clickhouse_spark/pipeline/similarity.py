@@ -24,6 +24,7 @@ from clickhouse_clickhouse_spark.functions.vectors import (
     dot_product,
     l2_norm,
 )
+from clickhouse_clickhouse_spark.session import local_frame
 
 
 def _paired_cosine(cv, qv, cn, qn):
@@ -433,8 +434,8 @@ def kmeans_centroids(corpus: DataFrame, k: int, iterations: int = 2,
         if not state:
             break
         state = _kmeans_lloyd_step(corpus, vec, state)
-    return corpus.sparkSession.createDataFrame(
-        [(cid, cw) for cid, cw in state],
+    return local_frame(
+        corpus.sparkSession, [(cid, cw) for cid, cw in state],
         "centroid_id int, centroid array<double>")
 
 
@@ -700,8 +701,8 @@ def pq_train(corpus: DataFrame, *, m: int = 8, codes: int = 16, dim: int,
         if not state:
             break
         state = _pq_lloyd_step(subs, state)
-    return corpus.sparkSession.createDataFrame(
-        [(s, c, cw) for s, c, cw in state],
+    return local_frame(
+        corpus.sparkSession, [(s, c, cw) for s, c, cw in state],
         f"sub int, code_id int, codeword array<{et}>")
 
 
@@ -851,8 +852,7 @@ def pq_encode(corpus: DataFrame, codebook: DataFrame, *, m: int, dim: int,
     if not sub_list:
         # empty codebook: the old inner join emptied the assignment and
         # the groupBy produced zero rows
-        return (base.sparkSession
-                .createDataFrame([], out_schema))
+        return local_frame(base.sparkSession, [], out_schema)
 
     def gen(batches):
         for b in batches:

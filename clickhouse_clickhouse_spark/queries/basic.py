@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from clickhouse_clickhouse_spark.registry import register
+from clickhouse_clickhouse_spark.session import local_frame
 from clickhouse_clickhouse_spark.tables import load_table
 
 
@@ -118,7 +119,7 @@ SELECT * FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c')) AS t(id, tag) WHERE id >= 2
 """)
 def values_inline(spark, sf):
     """VALUES / inline table source (table function surface §2.1)."""
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, tag string")
+    df = local_frame(spark, [(1, "a"), (2, "b"), (3, "c")], "id int, tag string")
     return df.filter(F.col("id") >= 2)
 
 

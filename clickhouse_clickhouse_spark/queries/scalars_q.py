@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from clickhouse_clickhouse_spark.functions.datetime_fmt import format_date_time
 from clickhouse_clickhouse_spark.registry import register
+from clickhouse_clickhouse_spark.session import local_frame
 from clickhouse_clickhouse_spark.tables import load_table
 
 
@@ -962,8 +963,8 @@ def ip_funcs_v6(spark, sf):
         with_ipv6_in_range,
     )
 
-    df = spark.createDataFrame([(a, p) for a, p, *_ in _IPV6_ROWS],
-                               "addr string, prefix int")
+    df = local_frame(spark, [(a, p) for a, p, *_ in _IPV6_ROWS],
+                            "addr string, prefix int")
     d = df.withColumn("__bin", ipv6_string_to_num(F.col("addr")))
     d = with_ipv6_canonical(d, "__bin", "canonical")
     d = with_ipv6_cidr_range(d, "addr", "prefix", "__lo", "__hi")
@@ -1019,7 +1020,7 @@ def hash_parity(spark, sf):
         city_hash64, sip_hash64,
     )
 
-    df = spark.createDataFrame([(s,) for s, *_ in _HASH_ROWS], "s string")
+    df = local_frame(spark, [(s,) for s, *_ in _HASH_ROWS], "s string")
     return df.select("s", sip_hash64(F.col("s")).alias("sip_hash64"),
                      city_hash64(F.col("s")).alias("city_hash64"))
 

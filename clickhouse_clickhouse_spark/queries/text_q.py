@@ -17,6 +17,7 @@ from clickhouse_clickhouse_spark.pipeline.dedup import (
 )
 from clickhouse_clickhouse_spark.functions import text as TXT
 from clickhouse_clickhouse_spark.registry import register
+from clickhouse_clickhouse_spark.session import local_frame
 from clickhouse_clickhouse_spark.tables import load_table
 
 P = MINHASH_PRIME
@@ -1857,8 +1858,8 @@ def video_mjpeg_decode(spark, sf):
             ref = _mjpeg_frame(j, h, w)
             expect.append((i, j, [float(ref[..., c].mean())
                                   for c in range(3)]))
-    exp = spark.createDataFrame(
-        expect, "media_id long, sample_idx int, want array<double>")
+    exp = local_frame(
+        spark, expect, "media_id long, sample_idx int, want array<double>")
     return (frames.join(F.broadcast(exp), ["media_id", "sample_idx"])
             .select("media_id", "sample_idx", "codec", "width", "height",
                     (F.aggregate(

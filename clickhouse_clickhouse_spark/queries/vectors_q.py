@@ -15,6 +15,7 @@ from clickhouse_clickhouse_spark.pipeline.similarity import (
     brute_force_topk, label_centroids, lsh_bucketed_topk,
 )
 from clickhouse_clickhouse_spark.registry import register
+from clickhouse_clickhouse_spark.session import local_frame
 from clickhouse_clickhouse_spark.tables import load_table
 
 
@@ -466,8 +467,8 @@ def ann_recall_gate(spark, sf):
         ivf_ok, lsh_ok = fivf.result() >= 0.6, flsh.result() >= 0.2
     exact.unpersist()   # round-15 advice: recalls are computed, the
     # returned relation is a driver literal - don't leak the cache
-    return spark.createDataFrame([(ivf_ok, lsh_ok)],
-                                 "ivf_ok boolean, lsh_ok boolean")
+    return local_frame(spark, [(ivf_ok, lsh_ok)],
+                              "ivf_ok boolean, lsh_ok boolean")
 
 
 @register("ann_pq_tuned_topk", oracle="""
@@ -551,8 +552,8 @@ def ann_tuned_recall_gate(spark, sf):
             F.col("corpus_id").alias("nid")))
         pq_ok, ivfpq_ok = fpq.result() >= 0.9, fivfpq.result() >= 0.9
     exact.unpersist()   # round-15 advice: see ann_recall_gate
-    return spark.createDataFrame([(pq_ok, ivfpq_ok)],
-                                 "pq_ok boolean, ivfpq_ok boolean")
+    return local_frame(spark, [(pq_ok, ivfpq_ok)],
+                              "pq_ok boolean, ivfpq_ok boolean")
 
 
 @register("ann_scaled_recall_gate", oracle="""
@@ -603,5 +604,5 @@ def ann_scaled_recall_gate(spark, sf):
             F.col("corpus_id").alias("nid")))
         pq_ok, ivfpq_ok = fpq.result() >= 0.9, fivfpq.result() >= 0.9
     exact.unpersist()   # round-15 advice: see ann_recall_gate
-    return spark.createDataFrame([(pq_ok, ivfpq_ok)],
-                                 "pq_ok boolean, ivfpq_ok boolean")
+    return local_frame(spark, [(pq_ok, ivfpq_ok)],
+                              "pq_ok boolean, ivfpq_ok boolean")

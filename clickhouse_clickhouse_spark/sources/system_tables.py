@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_clickhouse_spark.session import local_frame
+
 
 def system_one(spark: SparkSession) -> DataFrame:
     """``system.one`` — a single row, single ``dummy`` column (the FROM
@@ -34,17 +36,16 @@ def system_tables(spark: SparkSession) -> DataFrame:
     rows = [((t.namespace[0] if t.namespace else ""),
              t.name, t.tableType, t.isTemporary)
             for t in spark.catalog.listTables()]
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def system_columns(spark: SparkSession, table: str) -> DataFrame:
     """``system.columns`` for one catalog table."""
     rows = [(table, c.name, c.dataType, c.nullable)
             for c in spark.catalog.listColumns(table)]
-    return spark.createDataFrame(
-        rows, "table string, name string, type string, nullable boolean")
+    return local_frame(
+        spark, rows,
+        "table string, name string, type string, nullable boolean")
 
 
 def system_columns_all(spark: SparkSession) -> DataFrame:
@@ -67,15 +68,13 @@ def system_columns_all(spark: SparkSession) -> DataFrame:
         except Exception:       # noqa: BLE001 — dropped mid-iteration
             continue
     schema = "database string, table string, name string, type string"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def system_databases(spark: SparkSession) -> DataFrame:
     """``system.databases`` over the Spark catalog."""
     rows = [(d.name,) for d in spark.catalog.listDatabases()]
-    return spark.createDataFrame(rows or [("default",)], "name string")
+    return local_frame(spark, rows or [("default",)], "name string")
 
 
 def system_parts(spark: SparkSession, path: str,
@@ -95,8 +94,8 @@ def system_parts(spark: SparkSession, path: str,
                 files.append((table or os.path.basename(base),
                               "" if part_val == "." else part_val,
                               n, os.path.getsize(p), p))
-    df = spark.createDataFrame(
-        files or [("", "", "", 0, "")],
+    df = local_frame(
+        spark, files or [("", "", "", 0, "")],
         "table string, partition string, name string, bytes_on_disk long, "
         "path string")
     if not files:
@@ -128,8 +127,8 @@ def system_settings(spark: SparkSession) -> DataFrame:
             effective[k] = spark.conf.get(k)
         except Exception:
             pass
-    return spark.createDataFrame(sorted(effective.items()),
-                                 "name string, value string")
+    return local_frame(spark, sorted(effective.items()),
+                              "name string, value string")
 
 
 # CH setting -> (spark conf, value translator). Only settings with a real
@@ -187,8 +186,8 @@ def system_formats(spark: SparkSession) -> DataFrame:
              ("Pretty", True, False), ("Vertical", True, False),
              ("Parquet", True, True), ("ORC", True, True),
              ("JSON", True, True), ("Text", True, True), ("XML", True, True)]
-    return spark.createDataFrame(
-        rows, "name string, is_output boolean, is_input boolean")
+    return local_frame(
+        spark, rows, "name string, is_output boolean, is_input boolean")
 
 
 # ------------------------------------------------------------ query_log
@@ -222,9 +221,7 @@ def system_query_log(spark: SparkSession) -> DataFrame:
     rows = _QUERY_LOG.get(id(spark), [])
     schema = ("event_time timestamp, query_kind string, query string, "
               "normalized_query string, translated_query string")
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def system_projections(spark: SparkSession) -> DataFrame:
@@ -242,9 +239,7 @@ def system_projections(spark: SparkSession) -> DataFrame:
                          s.path))
     schema = ("table string, name string, keys string, measures string, "
               "path string")
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def system_view_refreshes(spark: SparkSession) -> DataFrame:
@@ -260,9 +255,7 @@ def system_view_refreshes(spark: SparkSession) -> DataFrame:
     schema = ("view string, target string, interval_s long, "
               "last_refresh_time double, next_refresh_time double, "
               "refresh_count long, last_rows long")
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def system_functions(spark: SparkSession) -> DataFrame:
@@ -288,6 +281,6 @@ def system_functions(spark: SparkSession) -> DataFrame:
         rows[n] = (n, "System", True)
     for n in C._SQL_UDFS:
         rows[n] = (n, "SQLUserDefined", False)
-    return spark.createDataFrame(
-        sorted(rows.values()),
+    return local_frame(
+        spark, sorted(rows.values()),
         "name string, origin string, is_parametric boolean")

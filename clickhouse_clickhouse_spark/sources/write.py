@@ -20,6 +20,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def insert_partitioned(df: DataFrame, path: str,
@@ -47,15 +48,29 @@ def insert_partitioned(df: DataFrame, path: str,
     writer.parquet(path)
 
 
+def read_parts(spark: SparkSession, path: str,
+               schema: StructType) -> DataFrame:
+    """The parquet parts of a table under ``path``, read with the table's
+    current ``schema``: no footer-inference job, columns in the table's
+    order (Spark otherwise moves partition columns last), and a column
+    an ALTER added after older parts were written reads as NULL there."""
+    return spark.read.schema(schema).parquet(path) \
+        .select(*schema.fieldNames())
+
+
 def optimize_compact(spark: SparkSession, path: str,
                      sort_by: Sequence[str] = (),
                      target_files: int = 1,
-                     partition_by: Sequence[str] = ()) -> None:
+                     partition_by: Sequence[str] = (),
+                     schema: StructType | None = None) -> None:
     """OPTIMIZE / background merge: rewrite the layout with fewer, sorted
     files. Stages through a temp dir then swaps (the poor-man's atomic
     rename the reference does per part). ``partition_by`` preserves the
-    table's partition-directory layout across the rewrite."""
-    df = spark.read.parquet(path)
+    table's partition-directory layout across the rewrite. A table's
+    ``schema`` reads the parts through ``read_parts``; without one the
+    schema is inferred from the files."""
+    df = (spark.read.parquet(path) if schema is None
+          else read_parts(spark, path, schema))
     compacted = df.coalesce(target_files)
     if sort_by:
         compacted = compacted.sortWithinPartitions(*sort_by)
@@ -99,17 +114,36 @@ def _swap_dirs(spark: SparkSession, tmp: str, path: str) -> None:
     when the process died between the two; now the live directory is
     moved aside first, so a crash leaves either the old or the new
     table in place (plus a recoverable ``__old`` directory)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(conf)
-    old_p = Path(path + "__old")
+    fs, live = _hadoop_path(spark, path)
+    _, old_p = _hadoop_path(spark, path + "__old")
+    _, tmp_p = _hadoop_path(spark, tmp)
     fs.delete(old_p, True)
-    if fs.exists(Path(path)):
-        fs.rename(Path(path), old_p)
-    fs.rename(Path(tmp), Path(path))
+    if fs.exists(live):
+        fs.rename(live, old_p)
+    fs.rename(tmp_p, live)
     fs.delete(old_p, True)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the JVM Hadoop FS API."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(conf), p
+
+
+def truncate_parts(spark: SparkSession, path: str) -> None:
+    """``TRUNCATE`` of a file-backed table: delete every part under
+    ``path``; the table directory stays."""
+    fs, p = _hadoop_path(spark, path)
+    if fs.exists(p):
+        for status in fs.listStatus(p):
+            fs.delete(status.getPath(), True)
+
+
+def drop_parts(spark: SparkSession, path: str) -> None:
+    """``DROP TABLE`` of a file-backed table: remove its directory."""
+    fs, p = _hadoop_path(spark, path)
+    fs.delete(p, True)
 
 
 def detach_partition(path: str, partition_col: str, value) -> str:
