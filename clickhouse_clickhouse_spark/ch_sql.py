@@ -51,11 +51,10 @@ import itertools
 import math
 import random
 import re
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhouse_clickhouse_spark.session import local_frame
+from clickhouse_clickhouse_spark.session import engine_state, local_frame
 
 # name -> template with {0}, {1}... arg slots (already-rewritten args)
 # accurateCast type argument: quoted upstream type name -> Spark type
@@ -485,10 +484,10 @@ def _read_wkt_polygon_tpl(a: list[str]) -> str:
 
 
 # CREATE FUNCTION name AS (params) -> expr ([U] UserDefinedSQLFunction
-# — lambda-expression UDFs): name -> (params, body). Session-global
-# like the dictionary registry; calls expand by textual substitution
-# at translate time, so the body's dialect functions translate through
-# the normal path afterwards.
+# — lambda-expression UDFs): name -> (params, body). Process-wide like
+# the dictionary registry (see _CATALOG_GEN); calls expand by textual
+# substitution at translate time, so the body's dialect functions
+# translate through the normal path afterwards.
 _SQL_UDFS: dict[str, tuple[list[str], str]] = {}
 
 
@@ -2341,7 +2340,6 @@ def _morton_decode_tpl(a: list[str]) -> str:
 # bit-parity with upstream's state-machine LUT ([U] src/Functions/
 # hilbertEncode2DLUT.h) — documented like the hex_bin/H3 stance.
 # Coordinates are guarded to [0, 2^31) so d < 2^62 (no ANSI overflow).
-_HILBERT_N1 = (1 << 31) - 1
 
 
 def _hilbert_encode_tpl(a: list[str]) -> str:
@@ -2510,16 +2508,6 @@ def _array_compact_tpl(a: list[str]) -> str:
     if len(parts) == 1:
         return _bind_once({"a": a[0]}, parts[0])
     return _bind_once({"a": a[0]}, "CONCAT(" + ", ".join(parts) + ")")
-
-
-_READABLE_UNITS = {
-    "B": "1", "KB": "1000", "KIB": "1024",
-    "MB": "1000000", "MIB": "1048576",
-    "GB": "1000000000", "GIB": "1073741824",
-    "TB": "1000000000000", "TIB": "1099511627776",
-    "PB": "1000000000000000", "PIB": "1125899906842624",
-    "EB": "1000000000000000000", "EIB": "1152921504606846976",
-}
 
 
 def _parse_readable_size_tpl(a: list[str], mode: str) -> str:
@@ -8056,12 +8044,16 @@ def _numbers_subquery(start: int, count: int) -> str:
 # translate() is a pure text transform; ch_sql() calls it twice per
 # statement (once for system.query_log, once for execution) and the
 # differential fuzz suites re-translate identical texts thousands of
-# times — a small memo collapses that. The ONLY mutable input is the
-# dictionary registry (dictGet templates resolve names at translate
-# time), so the cache key carries a generation counter bumped by
-# CREATE/DROP DICTIONARY.
+# times — a small memo collapses that. Its only mutable inputs are the
+# CREATE FUNCTION and CREATE DICTIONARY registries (_SQL_UDFS,
+# _DICTIONARIES: calls expand and dictGet resolves at translate time),
+# so the cache key carries a generation counter that every CREATE/DROP
+# FUNCTION and DICTIONARY bumps. These three stay process-wide while
+# table metadata is per session (session.EngineState): the reference
+# holds UDFs and dictionaries server-wide, and translate(sql) is a
+# session-free text function.
 _TRANSLATE_CACHE: dict = {}
-_DICT_GEN = [0]
+_CATALOG_GEN = [0]
 
 
 def translate(sql: str,
@@ -8080,7 +8072,7 @@ def translate(sql: str,
     # the only template whose expansion is not a pure text transform
     if re.search(r"\brandConstant\b", sql):
         return _translate_impl(sql, final_keys)
-    key = (sql, fk_key, _DICT_GEN[0])
+    key = (sql, fk_key, _CATALOG_GEN[0])
     hit = _TRANSLATE_CACHE.get(key)
     if hit is not None:
         return hit
@@ -9225,13 +9217,9 @@ def _apply_array_join(q: str) -> str:
     raise ValueError("ARRAY JOIN: nesting beyond 64 levels")
 
 
-# sessions already holding the kernel table, held weakly: keying on
-# id(spark) false-skips a NEW session whose id reuses a collected one
-_REGISTERED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-
 def _register_udfs(spark: SparkSession) -> None:
-    if spark in _REGISTERED:
+    st = engine_state(spark)
+    if st.kernels_registered:
         return
     # every ch_sql/ch_statement entry pins the dialect's semantic confs
     # (ANSI off: reference-permissive arithmetic — 1/0 → inf, overflow
@@ -9241,7 +9229,7 @@ def _register_udfs(spark: SparkSession) -> None:
     ensure_engine_confs(spark)
     from clickhouse_clickhouse_spark.functions import kernels
     kernels.register(spark)
-    _REGISTERED.add(spark)
+    st.kernels_registered = True
 
 
 def _register_system_views(spark: SparkSession, sql: str) -> None:
@@ -9497,9 +9485,7 @@ def _try_projection_route(spark: SparkSession, sql: str):
     """Answer a simple single-table aggregation from a registered
     projection when one subsumes it; None = not routable (normal
     translation proceeds — always correct, just unrouted)."""
-    from clickhouse_clickhouse_spark.plans.summary import (
-        _merge, projections_for,
-    )
+    from clickhouse_clickhouse_spark.plans.summary import _merge
 
     text = sql.strip().rstrip(";")
     if _masked_search(_PROJ_BLOCKERS, text):
@@ -9508,7 +9494,7 @@ def _try_projection_route(spark: SparkSession, sql: str):
     if not m:
         return None
     table = m.group("t")
-    summaries = projections_for(table)
+    summaries = list(engine_state(spark).projections_for(table).values())
     if not summaries:
         return None
     group_keys = [g.strip() for g in m.group("g").split(",") if g.strip()]
@@ -10190,16 +10176,14 @@ def ch_insert(spark: SparkSession, sql: str,
 
 # Batch materialized views (upstream StorageMaterializedView): an MV is
 # an INSERT trigger — it transforms each INSERTED BLOCK (never history)
-# and appends the result to its target table. source -> list of
-# (mv name, target view, translated transform SQL). Cascades compose
-# because the target append re-enters append_to_view; a visited set
-# breaks accidental cycles.
-_MATVIEWS: dict[str, list[tuple[str, str, str]]] = {}
-
-
+# and appends the result to its target table. The triggers live in the
+# session's EngineState.matviews. Cascades compose because the target
+# append re-enters append_to_view; a visited set breaks accidental
+# cycles.
 def _mv_fire(spark: SparkSession, source: str, block: DataFrame,
              _seen: frozenset) -> None:
-    for mv_name, target, tsql in _MATVIEWS.get(source.lower(), []):
+    for mv_name, target, tsql in engine_state(spark).matviews.get(
+            source.lower(), []):
         if mv_name in _seen:
             continue
         block_view = f"__mv_block_{mv_name}"
@@ -10219,8 +10203,8 @@ def _mv_fire(spark: SparkSession, source: str, block: DataFrame,
 # atomically replaces the target's contents. The snapshot materializes
 # to parquet (distributed write — the analog of the atomic table swap),
 # so reads between refreshes see a CONSISTENT point-in-time result, not
-# a late-bound view. name -> state dict.
-_REFRESHABLES: dict[str, dict] = {}
+# a late-bound view. The per-view state dicts live in the session's
+# EngineState.refreshables.
 
 # CREATE DICTIONARY registry: name -> {"table": source view, "key":
 # key column, "attrs": [attr names]} (upstream src/Dictionaries/ —
@@ -10497,7 +10481,7 @@ def _do_refresh(spark: SparkSession, name: str,
     time under a logical tick made views never/always due)."""
     import time as _time
 
-    r = _REFRESHABLES[name.lower()]
+    r = engine_state(spark).refreshables[name.lower()]
     out = spark.sql(r["tsql"])
     out.write.mode("overwrite").parquet(r["path"])
     snap = spark.read.parquet(r["path"])
@@ -10520,26 +10504,16 @@ def refresh_tick(spark: SparkSession, now: float | None = None) -> list[str]:
 
     now = _time.time() if now is None else now
     done = []
-    for name, r in list(_REFRESHABLES.items()):
+    for name, r in list(engine_state(spark).refreshables.items()):
         if now >= r["next_refresh"]:
             _do_refresh(spark, name, now=now)
             done.append(name)
     return done
 
 
-# Recent inserted-block checksums per view, newest last (the reference's
-# replicated-table dedup window of block ids — default window 100).
-_INSERT_BLOCK_HASHES: dict[str, list[int]] = {}
+# Insert-dedup window per view (the reference's replicated-table dedup
+# window of block ids — default 100), in EngineState.block_hashes.
 _DEDUP_WINDOW = 100
-
-
-def _forget_block_hashes(*names: str) -> None:
-    """Drop a table's insert-dedup window. The reference clears block
-    ids when the parts holding them are dropped — without this,
-    re-inserting identical data after TRUNCATE/DROP/OPTIMIZE
-    DEDUPLICATE would be silently skipped (data loss)."""
-    for n in names:
-        _INSERT_BLOCK_HASHES.pop(n.lower(), None)
 
 
 def _block_hash(rows: DataFrame) -> int:
@@ -10573,21 +10547,20 @@ def append_to_view(spark: SparkSession, view: str,
     block's partial states append to the summary (upstream: each
     inserted part writes its own projection part); only rewriting
     mutations (UPDATE/DELETE/column DDL) invalidate."""
-    from clickhouse_clickhouse_spark.plans.summary import (
-        append_block, projections_for,
-    )
+    from clickhouse_clickhouse_spark.plans.summary import append_block
 
+    st = engine_state(spark)
     if spark.conf.get(
             "spark.clickhouse_clickhouse_spark.insertDeduplicate",
             "false") == "true":
         key = view.lower()
         h = _block_hash(rows)
-        seen_hashes = _INSERT_BLOCK_HASHES.setdefault(key, [])
+        seen_hashes = st.block_hashes.setdefault(key, [])
         if h in seen_hashes:
             return spark.table(view)
         seen_hashes.append(h)
         del seen_hashes[:-_DEDUP_WINDOW]
-    for s in projections_for(view):
+    for s in list(st.projections_for(view).values()):
         append_block(s, rows)
     base = spark.table(view)
     # materialize the union so the block's lineage (and its __mv_block
@@ -10695,15 +10668,6 @@ def insert_into_table(spark: SparkSession, spec: TableSpec,
 
 # ----------------------------------------------------------- statements
 
-# DDL registry for SHOW CREATE TABLE (session-keyed, like the reference's
-# metadata store)
-_SPECS: dict[tuple[int, str], "TableSpec"] = {}
-
-
-def _remember_spec(spark: SparkSession, spec: "TableSpec") -> None:
-    _SPECS[(id(spark), spec.name.lower())] = spec
-
-
 def ch_statement(spark: SparkSession, sql: str,
                  data: "DataFrame | list[str] | None" = None) -> DataFrame:
     """One entry point for the reference's statement surface — dispatches
@@ -10714,6 +10678,7 @@ def ch_statement(spark: SparkSession, sql: str,
     prints)."""
     head = sql.strip().split(None, 2)
     kw = head[0].upper() if head else ""
+    st = engine_state(spark)
     if kw in ("SET", "CREATE", "INSERT", "DESCRIBE", "DESC", "SHOW",
               "EXPLAIN", "EXISTS", "DROP", "ALTER", "DELETE", "TRUNCATE",
               "RENAME", "EXCHANGE", "OPTIMIZE", "SYSTEM"):
@@ -10740,7 +10705,7 @@ def ch_statement(spark: SparkSession, sql: str,
                       sql.strip().rstrip(";"), re.IGNORECASE)
         if sm:
             name = sm.group(1)
-            if name.lower() not in _REFRESHABLES:
+            if name.lower() not in st.refreshables:
                 raise ValueError(f"{name!r} is not a refreshable "
                                  "materialized view")
             n = _do_refresh(spark, name)
@@ -10765,6 +10730,7 @@ def ch_statement(spark: SparkSession, sql: str,
             if len(set(params)) != len(params):
                 raise ValueError("CREATE FUNCTION: duplicate parameter")
             _SQL_UDFS[name] = (params, fm.group("b").strip())
+            _CATALOG_GEN[0] += 1       # invalidate the translate memo
             return local_frame(
                 spark, [(name, len(params))], "function string, arity int")
         if re.match(r"CREATE\s+FUNCTION\b", sql.strip(),
@@ -10848,7 +10814,7 @@ def ch_statement(spark: SparkSession, sql: str,
                           if c != key and c not in (rmin, rmax)],
                 "layout": layout, "rmin": rmin, "rmax": rmax,
                 "parent": parent}
-            _DICT_GEN[0] += 1          # invalidate the translate memo
+            _CATALOG_GEN[0] += 1       # invalidate the translate memo
             return local_frame(
                 spark, [(name, tm.group(1), key)],
                 "dictionary string, source_table string, key string")
@@ -10872,7 +10838,7 @@ def ch_statement(spark: SparkSession, sql: str,
             name = mvm.group("v")
             _register_udfs(spark)
             tsql = translate(mvm.group("q").strip())
-            _REFRESHABLES[name.lower()] = {
+            st.refreshables[name.lower()] = {
                 "name": name,
                 "target": mvm.group("to") or name,
                 "tsql": tsql,
@@ -10912,7 +10878,7 @@ def ch_statement(spark: SparkSession, sql: str,
             except Exception:
                 local_frame(spark, [], transformed.schema) \
                     .createOrReplaceTempView(target)
-            _MATVIEWS.setdefault(source.lower(), []).append(
+            st.matviews.setdefault(source.lower(), []).append(
                 (mv, target, tsql))
             if populate:
                 append_to_view(spark, target, transformed,
@@ -10960,7 +10926,6 @@ def ch_statement(spark: SparkSession, sql: str,
             spec = TableSpec(cm.group("t"), rows.schema, cm.group("e"),
                              _key_list(cm.group("part")),
                              _key_list(cm.group("order")))
-            _remember_spec(spark, spec)
         else:
             spec = ch_create_table(spark, sql)
             # With a configured dataDir, MergeTree-family tables become
@@ -10973,7 +10938,7 @@ def ch_statement(spark: SparkSession, sql: str,
             if data_dir and spec.engine.lower().endswith("mergetree"):
                 import os as _os
                 spec.path = _os.path.join(data_dir, spec.name)
-            _remember_spec(spark, spec)
+        st.remember(spec)
         return local_frame(
             spark, [(spec.name, spec.engine, ",".join(spec.partition_by),
                      ",".join(spec.order_by))],
@@ -10982,7 +10947,7 @@ def ch_statement(spark: SparkSession, sql: str,
     if kw == "INSERT":
         rows = ch_insert(spark, sql, data)
         m = _INSERT_RE.match(sql)
-        spec = _SPECS.get((id(spark), m.group("table").lower()))
+        spec = st.spec(m.group("table"))
         if spec is not None and spec.path:
             n = rows.count()
             insert_into_table(spark, spec, rows, spec.path)
@@ -11018,7 +10983,7 @@ def ch_statement(spark: SparkSession, sql: str,
             return system_tables(spark).select("name")
         mm = re.match(r"CREATE\s+TABLE\s+(\w+)", rest, re.IGNORECASE)
         if mm:
-            spec = _SPECS.get((id(spark), mm.group(1).lower()))
+            spec = st.spec(mm.group(1))
             if spec is None:
                 raise ValueError(f"no DDL recorded for {mm.group(1)!r} "
                                  "(created outside ch_statement?)")
@@ -11100,6 +11065,7 @@ def ch_statement(spark: SparkSession, sql: str,
                        sql.strip().rstrip(";"), re.IGNORECASE)
         if fdm:
             dropped = _SQL_UDFS.pop(fdm.group(1), None) is not None
+            _CATALOG_GEN[0] += 1       # invalidate the translate memo
             if not dropped and not re.search(r"IF\s+EXISTS", sql,
                                              re.IGNORECASE):
                 raise ValueError(
@@ -11112,7 +11078,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if ddm:
             dropped = _DICTIONARIES.pop(ddm.group(1).lower(),
                                         None) is not None
-            _DICT_GEN[0] += 1          # invalidate the translate memo
+            _CATALOG_GEN[0] += 1       # invalidate the translate memo
             return local_frame(
                 spark, [(ddm.group(1), dropped)],
                 "dictionary string, dropped boolean")
@@ -11121,24 +11087,11 @@ def ch_statement(spark: SparkSession, sql: str,
         if not mm:
             raise ValueError("unsupported DROP statement")
         spark.catalog.dropTempView(mm.group(1))
-        spec = _SPECS.pop((id(spark), mm.group(1).lower()), None)
+        spec = st.drop(mm.group(1))
         if spec is not None and spec.path:
             from clickhouse_clickhouse_spark.sources.write import drop_parts
 
             drop_parts(spark, spec.path)
-        _forget_block_hashes(mm.group(1))
-        _REFRESHABLES.pop(mm.group(1).lower(), None)
-        from clickhouse_clickhouse_spark.plans.summary import (
-            invalidate_projections,
-        )
-
-        invalidate_projections(mm.group(1))
-        # unregister any materialized-view trigger with this name
-        for src_tbl in list(_MATVIEWS):
-            _MATVIEWS[src_tbl] = [t for t in _MATVIEWS[src_tbl]
-                                  if t[0].lower() != mm.group(1).lower()]
-            if not _MATVIEWS[src_tbl]:
-                del _MATVIEWS[src_tbl]
         return local_frame(spark, [(mm.group(1),)], "dropped string")
     if kw == "ALTER":
         from pyspark.sql import functions as F
@@ -11209,9 +11162,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if om:
             import tempfile
 
-            from clickhouse_clickhouse_spark.plans.summary import (
-                SummaryTable, register_projection,
-            )
+            from clickhouse_clickhouse_spark.plans.summary import SummaryTable
 
             pname = om.group(1)
             keys = [k.strip() for k in om.group(3).split(",") if k.strip()]
@@ -11237,7 +11188,7 @@ def ch_statement(spark: SparkSession, sql: str,
             path = tempfile.mkdtemp(prefix=f"ch_proj_{name}_{pname}_")
             s = SummaryTable(path, tuple(keys), measures)
             s.build(base)
-            register_projection(name, pname, s)
+            st.projections.setdefault(name.lower(), {})[pname.lower()] = s
             return local_frame(
                 spark, [(name, pname, ",".join(keys), len(measures))],
                 "table string, projection string, keys string, "
@@ -11245,13 +11196,10 @@ def ch_statement(spark: SparkSession, sql: str,
         om = re.match(r"DROP\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(\w+)$",
                       op, re.IGNORECASE)
         if om:
-            from clickhouse_clickhouse_spark.plans.summary import (
-                drop_projection,
-            )
-
-            dropped = drop_projection(name, om.group(1))
+            dropped = st.projections_for(name).pop(om.group(1).lower(),
+                                                   None) is not None
             return local_frame(
-                spark, [(name, om.group(1), bool(dropped))],
+                spark, [(name, om.group(1), dropped)],
                 "table string, projection string, dropped boolean")
         raise ValueError(f"unsupported ALTER operation: {op!r}")
     if kw == "DELETE":
@@ -11280,7 +11228,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if not mm:
             raise ValueError("unsupported OPTIMIZE statement")
         name = mm.group(1)
-        spec = _SPECS.get((id(spark), name.lower()))
+        spec = st.spec(name)
         if mm.group(2):
             cols = [c.strip() for c in (mm.group(3) or "").split(",")
                     if c.strip()]
@@ -11297,7 +11245,7 @@ def ch_statement(spark: SparkSession, sql: str,
                     .createOrReplaceTempView(name)
             else:
                 deduped.createOrReplaceTempView(name)
-            _forget_block_hashes(name)   # parts rewritten → block ids gone
+            st.forget_blocks(name)   # parts rewritten → block ids gone
         elif spec is not None and spec.path:
             # background-merge analog on files: compact to fewer sorted
             # parts, keeping the partition-directory layout
@@ -11333,19 +11281,9 @@ def ch_statement(spark: SparkSession, sql: str,
             if not pm:
                 raise ValueError(f"RENAME TABLE: bad clause {pair!r}")
             a, b = pm.group(1), pm.group(2)
-            from clickhouse_clickhouse_spark.plans.summary import (
-                invalidate_projections, move_projections,
-            )
-
-            invalidate_projections(b)      # overwritten target's are gone
-            move_projections(a, b)         # data unchanged: no rebuild
-            _forget_block_hashes(a, b)     # block-id windows don't follow
             spark.table(a).createOrReplaceTempView(b)
             spark.catalog.dropTempView(a)
-            spec = _SPECS.pop((id(spark), a.lower()), None)
-            if spec is not None:
-                spec.name = b
-                _remember_spec(spark, spec)
+            st.rename(a, b)
             moved.append((a, b))
         return local_frame(spark, moved, "from string, to string")
     if kw == "EXCHANGE":
@@ -11354,26 +11292,10 @@ def ch_statement(spark: SparkSession, sql: str,
         if not mm:
             raise ValueError("unsupported EXCHANGE statement")
         a, b = mm.group(1), mm.group(2)
-        from clickhouse_clickhouse_spark.plans.summary import (
-            move_projections,
-        )
-
-        # projections follow their data through the swap
-        _forget_block_hashes(a, b)
-        move_projections(a, "__xchg_tmp__")
-        move_projections(b, a)
-        move_projections("__xchg_tmp__", b)
         da, db = spark.table(a), spark.table(b)
         db.createOrReplaceTempView(a)
         da.createOrReplaceTempView(b)
-        sa = _SPECS.pop((id(spark), a.lower()), None)
-        sb = _SPECS.pop((id(spark), b.lower()), None)
-        if sa is not None:
-            sa.name = b
-            _remember_spec(spark, sa)
-        if sb is not None:
-            sb.name = a
-            _remember_spec(spark, sb)
+        st.exchange(a, b)
         return local_frame(spark, [(a, b)],
                                   "exchanged string, with string")
     if kw == "TRUNCATE":
@@ -11381,7 +11303,7 @@ def ch_statement(spark: SparkSession, sql: str,
                       re.IGNORECASE)
         name = mm.group(1)
         schema = spark.table(name).schema
-        spec = _SPECS.get((id(spark), name.lower()))
+        spec = st.spec(name)
         if spec is not None and spec.path:
             from clickhouse_clickhouse_spark.sources.write import (
                 truncate_parts,
@@ -11389,7 +11311,7 @@ def ch_statement(spark: SparkSession, sql: str,
 
             truncate_parts(spark, spec.path)
         local_frame(spark, [], schema).createOrReplaceTempView(name)
-        _forget_block_hashes(name)
+        st.forget_blocks(name)
         from clickhouse_clickhouse_spark.plans.summary import (
             rebuild_projections,
         )

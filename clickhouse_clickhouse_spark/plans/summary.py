@@ -37,6 +37,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_clickhouse_spark.session import engine_state
+
 # measure name -> (source column, partial op). Mergeable ops only.
 # "quantile:p" (e.g. "quantile:0.5") stores one KLL sketch regardless of p;
 # p applies at read time.
@@ -150,44 +152,6 @@ def route_aggregation(spark: SparkSession, base: DataFrame,
     return base.groupBy(*group_keys).agg(*aggs)
 
 
-# ---------------------------------------------------------------- registry
-# Dialect-visible projection registry: ALTER TABLE t ADD PROJECTION p
-# (SELECT keys, aggs GROUP BY keys) materializes a SummaryTable here and
-# ch_sql's SELECT router consults it (the executable analog of upstream
-# ProjectionsDescription + optimizeUseAggregateProjection).
-_PROJECTIONS: dict[str, dict[str, SummaryTable]] = {}
-
-
-def register_projection(table: str, name: str,
-                        summary: SummaryTable) -> None:
-    _PROJECTIONS.setdefault(table.lower(), {})[name.lower()] = summary
-
-
-def drop_projection(table: str, name: str) -> bool:
-    t = _PROJECTIONS.get(table.lower(), {})
-    return t.pop(name.lower(), None) is not None
-
-
-def projections_for(table: str) -> list[SummaryTable]:
-    return list(_PROJECTIONS.get(table.lower(), {}).values())
-
-
-def clear_projections() -> None:
-    _PROJECTIONS.clear()
-
-
-def invalidate_projections(*tables: str) -> int:
-    """Drop every projection of the named tables — called by each dialect
-    mutation path (INSERT / ALTER UPDATE-DELETE-COLUMN / DELETE /
-    TRUNCATE / DROP / RENAME / EXCHANGE). The reference rebuilds
-    projections during the mutation's part rewrite; a registry engine
-    must not serve stale partials, and an explicit re-ADD is the rebuild."""
-    n = 0
-    for t in tables:
-        n += len(_PROJECTIONS.pop(t.lower(), {}))
-    return n
-
-
 def append_block(summary: SummaryTable, block: DataFrame) -> None:
     """Incremental projection maintenance (upstream: each inserted part
     writes its own projection part): aggregate the inserted block's
@@ -208,7 +172,7 @@ def rebuild_projections(spark: SparkSession, table: str) -> int:
     instead — the reference errors on such ALTERs unless the projection
     is dropped first; dropping is the permissive equivalent."""
     n = 0
-    t = _PROJECTIONS.get(table.lower(), {})
+    t = engine_state(spark).projections_for(table)
     for name in list(t):
         s = t[name]
         try:
@@ -217,11 +181,3 @@ def rebuild_projections(spark: SparkSession, table: str) -> int:
         except Exception:
             del t[name]
     return n
-
-
-def move_projections(old: str, new: str) -> None:
-    """RENAME/EXCHANGE support: projections follow their table (the data
-    is unchanged, so no rebuild)."""
-    entry = _PROJECTIONS.pop(old.lower(), None)
-    if entry is not None:
-        _PROJECTIONS[new.lower()] = entry

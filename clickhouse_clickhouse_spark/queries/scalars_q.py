@@ -1366,7 +1366,6 @@ def projection_routed_agg(spark, sf):
     import uuid
 
     from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import drop_projection
 
     view = f"events_proj_{uuid.uuid4().hex[:8]}"
     load_table(spark, sf, "events").createOrReplaceTempView(view)
@@ -1381,7 +1380,7 @@ def projection_routed_agg(spark, sf):
         FROM {view} GROUP BY event_type""")
     assert any("ch_proj" in f for f in routed.inputFiles()), \
         "projection did not route"
-    drop_projection(view, "p_rt")
+    ch_statement(spark, f"ALTER TABLE {view} DROP PROJECTION p_rt")
     return routed.select("event_type", "n", F.round("sv", 6).alias("sv"),
                          "mn", "mx")
 
@@ -1399,7 +1398,6 @@ def projection_routed_having(spark, sf):
     import uuid
 
     from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import drop_projection
 
     view = f"events_projh_{uuid.uuid4().hex[:8]}"
     load_table(spark, sf, "events").createOrReplaceTempView(view)
@@ -1412,7 +1410,7 @@ def projection_routed_having(spark, sf):
         FROM {view} GROUP BY event_type HAVING n > 1000""")
     assert any("ch_proj" in f for f in routed.inputFiles()), \
         "projection did not route with HAVING"
-    drop_projection(view, "p_hv")
+    ch_statement(spark, f"ALTER TABLE {view} DROP PROJECTION p_hv")
     return routed.select("event_type", "n", F.round("sv", 6).alias("sv"))
 
 
@@ -1436,7 +1434,6 @@ def projection_routed_uniq(spark, sf):
     import uuid
 
     from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import drop_projection
 
     view = f"events_projU_{uuid.uuid4().hex[:8]}"
     ev = load_table(spark, sf, "events")
@@ -1452,7 +1449,7 @@ def projection_routed_uniq(spark, sf):
         FROM {view} GROUP BY event_type""")
     assert any("ch_proj" in f for f in routed.inputFiles()), \
         "sketch measures did not route"
-    drop_projection(view, "p_u")
+    ch_statement(spark, f"ALTER TABLE {view} DROP PROJECTION p_u")
     exact = (ev.groupBy("event_type")
              .agg(F.countDistinct("user_id").alias("exact_uu"),
                   F.percentile("value", F.lit(0.9)).alias("e90"),

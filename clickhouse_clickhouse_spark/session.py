@@ -20,6 +20,7 @@ side automatically).
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Iterable
 from typing import Any
 
@@ -114,6 +115,114 @@ def local_frame(spark: SparkSession, rows: Iterable[Any],
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema)
     return spark.createDataFrame(table, schema)
+
+
+class EngineState:
+    """What the engine knows about one SparkSession's tables: the analog
+    of a table's storage metadata in the reference (``IStorage``: its DDL,
+    projections, materialized-view triggers, insert-dedup block ids) plus
+    the session's ``system.query_log``. A table here is a session temp
+    view, so its metadata lives and dies with the session. Table-keyed
+    dicts use lower-cased names. Reached only through ``engine_state``."""
+
+    def __init__(self) -> None:
+        self.specs: dict[str, Any] = {}          # name -> ch_sql.TableSpec
+        # table -> projection name -> plans.summary.SummaryTable
+        self.projections: dict[str, dict[str, Any]] = {}
+        # source table -> [(mv name, target view, translated SQL)]
+        self.matviews: dict[str, list[tuple[str, str, str]]] = {}
+        self.refreshables: dict[str, dict] = {}  # refreshable MV state
+        # recent inserted-block checksums, newest last
+        self.block_hashes: dict[str, list[int]] = {}
+        self.query_log: list[tuple] = []
+        # (sf_dir, fixture table) -> analyzed relation (tables.load_table)
+        self.relations: dict[tuple[str, str], DataFrame] = {}
+        self.shipped = False             # package zip sent to executors
+        self.kernels_registered = False  # Arrow kernel table registered
+
+    def spec(self, table: str):
+        return self.specs.get(table.lower())
+
+    def remember(self, spec) -> None:
+        self.specs[spec.name.lower()] = spec
+
+    def projections_for(self, table: str) -> dict[str, Any]:
+        """The table's projections by name; a throwaway empty dict when
+        it has none."""
+        return self.projections.get(table.lower(), {})
+
+    def forget_blocks(self, *tables: str) -> None:
+        """Drop the tables' insert-dedup windows. The reference clears
+        block ids with the parts holding them; keeping them would
+        silently skip re-inserting identical data after TRUNCATE, DROP
+        or OPTIMIZE DEDUPLICATE."""
+        for t in tables:
+            self.block_hashes.pop(t.lower(), None)
+
+    def drop(self, table: str):
+        """DROP TABLE/VIEW: forget everything recorded for ``table``,
+        including the triggers of a materialized view of that name.
+        Returns the dropped ``TableSpec`` (or None)."""
+        t = table.lower()
+        self.forget_blocks(t)
+        self.refreshables.pop(t, None)
+        self.projections.pop(t, None)
+        for source, mvs in list(self.matviews.items()):
+            kept = [mv for mv in mvs if mv[0].lower() != t]
+            if kept:
+                self.matviews[source] = kept
+            else:
+                del self.matviews[source]
+        return self.specs.pop(t, None)
+
+    def rename(self, old: str, new: str) -> None:
+        """RENAME TABLE: the DDL and projections follow the unchanged
+        data; ``new``'s own projections and both dedup windows go."""
+        a, b = old.lower(), new.lower()
+        self.forget_blocks(a, b)
+        self.projections.pop(b, None)
+        if a in self.projections:
+            self.projections[b] = self.projections.pop(a)
+        spec = self.specs.pop(a, None)
+        if spec is not None:
+            spec.name = new
+            self.specs[b] = spec
+
+    def exchange(self, a: str, b: str) -> None:
+        """EXCHANGE TABLES: DDL and projections swap with the data; both
+        dedup windows go."""
+        ka, kb = a.lower(), b.lower()
+        self.forget_blocks(ka, kb)
+        for d in (self.projections, self.specs):
+            va, vb = d.pop(ka, None), d.pop(kb, None)
+            if va is not None:
+                d[kb] = va
+            if vb is not None:
+                d[ka] = vb
+        for name, k in ((a, ka), (b, kb)):
+            if k in self.specs:
+                self.specs[k].name = name
+
+
+_STATE_ATTR = "_ch_engine_state"
+_STATE_LOCK = threading.Lock()
+
+
+def engine_state(spark: SparkSession) -> EngineState:
+    """The session's ``EngineState``, created on first use. It is an
+    attribute of the session object, so it is freed with the session and
+    a new session never inherits another's state: a key on the session's
+    ``id()`` can be reused after it is collected, and a weak-keyed dict
+    would keep the session alive through its own cached DataFrames,
+    which reference it."""
+    st = getattr(spark, _STATE_ATTR, None)
+    if st is None:
+        with _STATE_LOCK:
+            st = getattr(spark, _STATE_ATTR, None)
+            if st is None:
+                st = EngineState()
+                setattr(spark, _STATE_ATTR, st)
+    return st
 
 
 def stop_spark() -> None:

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_clickhouse_spark.session import local_frame
+from clickhouse_clickhouse_spark.session import engine_state, local_frame
 
 
 def system_one(spark: SparkSession) -> DataFrame:
@@ -194,12 +194,10 @@ def system_formats(spark: SparkSession) -> DataFrame:
 #
 # ``system.query_log`` (reference StorageSystemQueryLog /
 # src/Interpreters/QueryLog.cpp): one row per dialect statement the
-# session has executed. Session-keyed in-process storage — the reference
-# buffers log rows in memory and flushes to a MergeTree table; here the
-# session IS the scope, and rows are materialized as a DataFrame on
-# read (computed-on-read like every system table in this module).
-
-_QUERY_LOG: dict[int, list] = {}
+# session has executed. Kept in the session's ``EngineState`` — the
+# reference buffers log rows in memory and flushes to a MergeTree table;
+# here the session IS the scope, and rows are materialized as a DataFrame
+# on read (computed-on-read like every system table in this module).
 
 
 def log_query(spark: SparkSession, query: str, kind: str,
@@ -213,12 +211,12 @@ def log_query(spark: SparkSession, query: str, kind: str,
     q = " ".join(query.split())
     norm = re.sub(r"'([^'\\]|\\.)*'", "?", q)
     norm = re.sub(r"\b\d+(\.\d+)?\b", "?", norm)
-    _QUERY_LOG.setdefault(id(spark), []).append(
+    engine_state(spark).query_log.append(
         (datetime.datetime.now(), kind, q, norm, translated))
 
 
 def system_query_log(spark: SparkSession) -> DataFrame:
-    rows = _QUERY_LOG.get(id(spark), [])
+    rows = engine_state(spark).query_log
     schema = ("event_time timestamp, query_kind string, query string, "
               "normalized_query string, translated_query string")
     return local_frame(spark, rows, schema)
@@ -228,10 +226,8 @@ def system_projections(spark: SparkSession) -> DataFrame:
     """``system.projections`` (upstream StorageSystemProjections): one row
     per registered aggregate projection — table, name, group keys, and
     the measure list as ``alias=op(src)`` strings."""
-    from clickhouse_clickhouse_spark.plans.summary import _PROJECTIONS
-
     rows = []
-    for table, projs in _PROJECTIONS.items():
+    for table, projs in list(engine_state(spark).projections.items()):
         for name, s in projs.items():
             rows.append((table, name, ",".join(s.keys),
                          ",".join(f"{a}={op}({src})"
@@ -246,12 +242,10 @@ def system_view_refreshes(spark: SparkSession) -> DataFrame:
     """``system.view_refreshes`` (upstream StorageSystemViewRefreshes):
     one row per refreshable materialized view — schedule, last/next
     refresh times (epoch seconds), run count, last snapshot row count."""
-    from clickhouse_clickhouse_spark.ch_sql import _REFRESHABLES
-
     rows = [(r["name"], r["target"], int(r["interval_s"]),
              float(r["last_refresh"]), float(r["next_refresh"]),
              int(r["refresh_count"]), int(r["last_rows"]))
-            for r in _REFRESHABLES.values()]
+            for r in list(engine_state(spark).refreshables.values())]
     schema = ("view string, target string, interval_s long, "
               "last_refresh_time double, next_refresh_time double, "
               "refresh_count long, last_rows long")

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_clickhouse_spark.session import engine_state
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -19,14 +21,6 @@ TABLES = (
 
 # Dimension tables small enough to broadcast at any scale factor.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "customer", "part"})
-
-
-# Sessions already shipped to, held weakly: keying on id(spark) could
-# false-skip a NEW session whose id reuses a GC'd one (round-14 ADVICE
-# fix). WeakSet drops entries when the session is collected.
-import weakref
-
-_SHIPPED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -43,11 +37,13 @@ def _ship_package(spark: SparkSession) -> None:
     - ``sc.addPyFile`` of a package zip: the cluster-grade path —
       shipped to every executor and appended to worker sys.path, which
       also covers daemons that are already running."""
-    if spark in _SHIPPED:
+    st = engine_state(spark)
+    if st.shipped:
         return
-    _SHIPPED.add(spark)
+    st.shipped = True
     import os
     import tempfile
+    import threading
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -60,7 +56,10 @@ def _ship_package(spark: SparkSession) -> None:
         zpath = os.path.join(tempfile.gettempdir(),
                              f"__ch_spark_pkg_{os.getpid()}.zip")
         if not os.path.exists(zpath):
-            with zipfile.ZipFile(zpath, "w") as z:
+            # written aside and renamed into place: a session shipping
+            # from another thread must never add a half-written zip
+            tmp = f"{zpath}.{threading.get_ident()}"
+            with zipfile.ZipFile(tmp, "w") as z:
                 for root, _dirs, files in os.walk(pkg_dir):
                     for f in files:
                         if not f.endswith(".py"):
@@ -69,6 +68,7 @@ def _ship_package(spark: SparkSession) -> None:
                         z.write(full, os.path.join(
                             os.path.basename(pkg_dir),
                             os.path.relpath(full, pkg_dir)))
+            os.replace(tmp, zpath)
         spark.sparkContext.addPyFile(zpath)
     except AttributeError:
         pass  # Connect sessions have no sparkContext; env path stands
@@ -118,21 +118,19 @@ def ensure_engine_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(cores))
 
 
-# Analyzed-relation cache: fixture tables are immutable, so re-listing the
-# files and re-reading parquet footers on every query build is pure
-# overhead. Keyed by session so a fresh session (new driver round, tests)
-# rebuilds cleanly. Holds unresolved plans only — no data is pinned.
-_RELATION_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Plain ``spark.read.parquet`` so Catalyst
-    keeps full pushdown/pruning freedom."""
+    keeps full pushdown/pruning freedom.
+
+    Fixture tables are immutable, so the relation is cached in the
+    session's state: re-listing the files and re-reading parquet footers
+    on every query build is pure overhead. A fresh session rebuilds
+    cleanly. The cache holds unresolved plans only; no data is pinned."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_engine_confs(spark)
-    key = (id(spark), sf_dir, name)
-    cached = _RELATION_CACHE.get(key)
+    relations = engine_state(spark).relations
+    cached = relations.get((sf_dir, name))
     if cached is not None:
         return cached
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -151,7 +149,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         df = df.withColumns(
             {c: F.col(c).cast("timestamp") for c in ntz_cols})
-    _RELATION_CACHE[key] = df
+    relations[(sf_dir, name)] = df
     return df
 
 

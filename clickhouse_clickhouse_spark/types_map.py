@@ -29,8 +29,6 @@ _SIMPLE: dict[str, T.DataType] = {
     "Nothing": T.NullType(),
 }
 
-_WRAPPERS_TRANSPARENT = ("LowCardinality", "SimpleAggregateFunction")
-
 
 def parse_ch_type(s: str,
                   uint64_as_decimal: bool = False) -> tuple[T.DataType, bool]:

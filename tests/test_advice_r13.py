@@ -37,10 +37,10 @@ def test_distinct_body_hoist_refuses():
     assert "__ch_rn" in out and "__ch_ob" not in out
 
 
-def test_sql_udf_simultaneous_splice():
+def test_sql_udf_simultaneous_splice(spark):
     import clickhouse_clickhouse_spark.ch_sql as cs
 
-    cs._SQL_UDFS["__r13fxy"] = (["x", "y"], "x + y * x")
+    cs.ch_statement(spark, "CREATE FUNCTION __r13fxy AS (x, y) -> x + y * x")
     try:
         out = cs._expand_sql_udfs("SELECT __r13fxy(y, 2) FROM t")
         # the caller's column y must survive; only params rewrite
@@ -48,7 +48,7 @@ def test_sql_udf_simultaneous_splice():
         out = cs._expand_sql_udfs("SELECT __r13fxy(y, x) FROM t")
         assert "(y) + (x) * (y)" in out
     finally:
-        del cs._SQL_UDFS["__r13fxy"]
+        cs.ch_statement(spark, "DROP FUNCTION __r13fxy")
 
 
 def test_union_branch_clause_rewrites(spark):

@@ -23,12 +23,19 @@ def test_registry_stable_order_optout(monkeypatch):
     assert registry._round_salt() == registry._round_salt()
 
 
-def test_ship_package_weak_keyed():
-    import weakref
+def test_ship_package_once_per_session(spark, monkeypatch):
+    """The package ships once per session: a new session is shipped
+    (nothing carries over from another session), a second call is not."""
+    from clickhouse_clickhouse_spark.session import engine_state
+    from clickhouse_clickhouse_spark.tables import ensure_engine_confs
 
-    from clickhouse_clickhouse_spark import tables
-
-    assert isinstance(tables._SHIPPED, weakref.WeakSet)
+    shipped = []
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+    s = spark.newSession()
+    assert not engine_state(s).shipped
+    ensure_engine_confs(s)
+    ensure_engine_confs(s)
+    assert engine_state(s).shipped and len(shipped) == 1
 
 
 @pytest.fixture(scope="module")

@@ -1055,7 +1055,7 @@ def test_projection_rebuilt_by_mutation(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import projections_for
+    from clickhouse_clickhouse_spark.session import engine_state
     from clickhouse_clickhouse_spark.tables import load_table
 
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nat_mut")
@@ -1070,7 +1070,7 @@ def test_projection_rebuilt_by_mutation(spark, sf_dir):
     # mutation
     ch_statement(spark, "ALTER TABLE nat_mut UPDATE n_regionkey = 9 "
                         "WHERE n_regionkey = 0")
-    assert len(projections_for("nat_mut")) == 1
+    assert len(engine_state(spark).projections_for("nat_mut")) == 1
     routed = ch_sql(spark, q)
     assert any("ch_proj" in f for f in routed.inputFiles())
     got = {r.n_regionkey: r.n for r in routed.collect()}
@@ -1082,14 +1082,14 @@ def test_projection_rebuilt_by_mutation(spark, sf_dir):
 
     # DELETE rebuilds too
     ch_statement(spark, "DELETE FROM nat_mut WHERE n_regionkey = 9")
-    assert len(projections_for("nat_mut")) == 1
+    assert len(engine_state(spark).projections_for("nat_mut")) == 1
     routed2 = {r.n_regionkey: r.n for r in ch_sql(spark, q).collect()}
     assert 9 not in routed2 and sum(routed2.values()) == 20
 
     # dropping the projection's own column drops the projection (the
     # permissive form of the reference's refusal)
     ch_statement(spark, "ALTER TABLE nat_mut DROP COLUMN n_regionkey")
-    assert projections_for("nat_mut") == []
+    assert engine_state(spark).projections_for("nat_mut") == {}
 
     spark.catalog.dropTempView("nat_mut")
 
@@ -1199,7 +1199,7 @@ def test_projection_incremental_on_insert(spark):
     — upstream per-part projection writes): the routed answer includes
     freshly inserted rows and still reads the projection parquet."""
     from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import projections_for
+    from clickhouse_clickhouse_spark.session import engine_state
 
     ch_statement(spark, "CREATE TABLE pri_t (g String, v Int64) "
                         "ENGINE = Memory")
@@ -1210,7 +1210,7 @@ def test_projection_incremental_on_insert(spark):
     try:
         ch_statement(spark, "INSERT INTO pri_t VALUES ('a', 10), ('c', 5)")
         # projection survived the insert
-        assert len(projections_for("pri_t")) == 1
+        assert len(engine_state(spark).projections_for("pri_t")) == 1
         q = "SELECT g, count() AS n, sum(v) AS sv FROM pri_t GROUP BY g"
         routed = ch_sql(spark, q)
         assert any("ch_proj" in f for f in routed.inputFiles())
@@ -1227,7 +1227,7 @@ def test_optimize_statement_and_explain_routing(spark):
     projection maintenance); EXPLAIN reveals when a SELECT is answered
     from a projection."""
     from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import projections_for
+    from clickhouse_clickhouse_spark.session import engine_state
 
     ch_statement(spark, "CREATE TABLE opt_t (g String, v Int64) "
                         "ENGINE = Memory")
@@ -1245,7 +1245,8 @@ def test_optimize_statement_and_explain_routing(spark):
                                   "FROM opt_t GROUP BY v").collect()
         assert "aggregate projection" not in str(ex2[0])
 
-        path = projections_for("opt_t")[0].path
+        [proj] = engine_state(spark).projections_for("opt_t").values()
+        path = proj.path
         assert len(spark.read.parquet(path).collect()) == 3  # 2 blocks
         r = ch_statement(spark,
                          "OPTIMIZE TABLE opt_t DEDUPLICATE").collect()[0]

@@ -389,7 +389,6 @@ def proj_env(spark):
     """events view with a two-key projection registered for the whole
     module; torn down after."""
     from clickhouse_clickhouse_spark.ch_sql import ch_statement
-    from clickhouse_clickhouse_spark.plans.summary import drop_projection
 
     load_table(spark, SF_DIR, "events") \
         .createOrReplaceTempView("events_fz")
@@ -399,7 +398,7 @@ def proj_env(spark):
                 min(value) AS mn, max(value) AS mx
          GROUP BY event_type, user_id)""")
     yield spark
-    drop_projection("events_fz", "p_fz")
+    ch_statement(spark, "ALTER TABLE events_fz DROP PROJECTION p_fz")
     spark.catalog.dropTempView("events_fz")
 
 
@@ -438,7 +437,7 @@ def test_fuzz_projection_route_equals_direct(proj_env):
     import itertools
 
     from clickhouse_clickhouse_spark.ch_sql import ch_sql
-    from clickhouse_clickhouse_spark.plans import summary as S
+    from clickhouse_clickhouse_spark.session import engine_state
 
     spark = proj_env
     agg_pool = [("count() AS n", "n"), ("sum(value) AS sv", "sv"),
@@ -472,7 +471,8 @@ def test_fuzz_projection_route_equals_direct(proj_env):
     run_parallel(sqls, lambda s: got.__setitem__(
         s, _normalize([tuple(r) for r in routed[s].collect()])))
 
-    saved = S._PROJECTIONS.pop("events_fz")
+    projections = engine_state(spark).projections
+    saved = projections.pop("events_fz")
     try:
         direct = {}
         for sql in sqls:
@@ -483,7 +483,7 @@ def test_fuzz_projection_route_equals_direct(proj_env):
         run_parallel(sqls, lambda s: want.__setitem__(
             s, _normalize([tuple(r) for r in direct[s].collect()])))
     finally:
-        S._PROJECTIONS["events_fz"] = saved
+        projections["events_fz"] = saved
     for sql in sqls:
         assert got[sql] == want[sql], sql
 

@@ -308,3 +308,16 @@ def test_kernel_batteries_evaluate_in_one_python_node(spark, sf_dir):
     for name in ("ch_sql_round10_curves", "ch_sql_siphash128"):
         plan = _plan(spark, name, sf_dir)
         assert plan.count("ArrowEvalPython") == 1, (name, plan)
+
+
+def test_json_prop_bucket_filter_stays_above_the_aggregate(spark, sf_dir):
+    """``cb_json_prop_buckets`` filters on ``WHEN n >= 0 THEN k_bucket END
+    IS NOT NULL``: referencing the aggregate's count keeps Catalyst from
+    pushing the filter below the aggregate, where it would parse every
+    document a second time. No ``from_json`` may sit in a Filter."""
+    df = all_queries()["cb_json_prop_buckets"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln for ln in plan.splitlines()
+               if re.match(r"[\s:+\-|]*Filter\b", ln)]
+    assert filters, plan
+    assert not [f for f in filters if "from_json" in f], plan

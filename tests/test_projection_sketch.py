@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
-from clickhouse_clickhouse_spark.plans.summary import drop_projection
+from clickhouse_clickhouse_spark.session import engine_state
 from clickhouse_clickhouse_spark.tables import load_table
 
 
@@ -26,7 +26,7 @@ def sketch_proj(spark, sf_dir):
                 uniq(user_id) AS uu, quantile(0.5)(value) AS qv
          GROUP BY event_type, user_id)""")
     yield spark, view
-    drop_projection(view, "p_sk")
+    ch_statement(spark, f"ALTER TABLE {view} DROP PROJECTION p_sk")
     spark.catalog.dropTempView(view)
 
 
@@ -64,14 +64,13 @@ def test_routed_quantile_readtime_p(sketch_proj):
 
 
 def test_having_routed_equals_direct(sketch_proj):
-    from clickhouse_clickhouse_spark.plans import summary as S
-
     spark, view = sketch_proj
     sql = (f"SELECT event_type, count() AS n, sum(value) AS sv "
            f"FROM {view} GROUP BY event_type HAVING n > 1000 AND sv > 0")
     routed = ch_sql(spark, sql)
     assert any("ch_proj" in f for f in routed.inputFiles())
-    saved = S._PROJECTIONS.pop(view.lower())
+    projections = engine_state(spark).projections
+    saved = projections.pop(view.lower())
     try:
         direct = ch_sql(spark, sql)
         assert not any("ch_proj" in f for f in direct.inputFiles())
@@ -81,7 +80,7 @@ def test_having_routed_equals_direct(sketch_proj):
                    for r in direct.collect())
         assert a == b
     finally:
-        S._PROJECTIONS[view.lower()] = saved
+        projections[view.lower()] = saved
 
 
 def test_having_on_nonalias_falls_back(sketch_proj):

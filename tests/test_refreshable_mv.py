@@ -7,11 +7,11 @@ refreshes are point-in-time consistent.
 import pytest
 
 from clickhouse_clickhouse_spark.ch_sql import (
-    _REFRESHABLES,
     ch_sql,
     ch_statement,
     refresh_tick,
 )
+from clickhouse_clickhouse_spark.session import engine_state
 
 
 @pytest.fixture()
@@ -21,7 +21,7 @@ def src(spark):
     yield "rmv_src"
     ch_statement(spark, "DROP TABLE IF EXISTS rmv_tot")
     spark.catalog.dropTempView("rmv_src")
-    _REFRESHABLES.pop("rmv_tot", None)
+    engine_state(spark).refreshables.pop("rmv_tot", None)
 
 
 def test_refreshable_snapshot_and_manual_refresh(spark, src):
@@ -47,7 +47,7 @@ def test_refresh_tick_only_when_due(spark, src):
     ch_statement(spark, """
         CREATE MATERIALIZED VIEW rmv_tot REFRESH EVERY 1 HOUR AS
         SELECT count() AS n FROM rmv_src""")
-    state = _REFRESHABLES["rmv_tot"]
+    state = engine_state(spark).refreshables["rmv_tot"]
     assert state["refresh_count"] == 1
     # not due yet
     assert refresh_tick(spark) == []
@@ -79,9 +79,10 @@ def test_drop_unregisters_refreshable(spark, src):
     ch_statement(spark, """
         CREATE MATERIALIZED VIEW rmv_tot REFRESH EVERY 1 MINUTE AS
         SELECT count() AS n FROM rmv_src""")
-    assert "rmv_tot" in _REFRESHABLES
+    refreshables = engine_state(spark).refreshables
+    assert "rmv_tot" in refreshables
     ch_statement(spark, "DROP TABLE rmv_tot")
-    assert "rmv_tot" not in _REFRESHABLES
+    assert "rmv_tot" not in refreshables
     with pytest.raises(ValueError, match="refreshable"):
         ch_statement(spark, "SYSTEM REFRESH VIEW rmv_tot")
 
