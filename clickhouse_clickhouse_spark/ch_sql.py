@@ -54,6 +54,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_clickhouse_spark import sqltext
 from clickhouse_clickhouse_spark.session import engine_state, local_frame
 
 # name -> template with {0}, {1}... arg slots (already-rewritten args)
@@ -501,43 +502,34 @@ def _expand_sql_udfs(q: str) -> str:
         for name, (params, body) in _SQL_UDFS.items():
             pat = re.compile(rf"\b{re.escape(name)}\s*\(")
             while True:
-                mm = _masked_search(pat, q)
+                mm = sqltext.masked_search(pat, q)
                 if not mm:
                     break
                 open_p = q.index("(", mm.start())
-                close = _find_close(q, open_p)
+                close = sqltext.match_bracket(q, open_p)
                 if close < 0:
                     raise ValueError(f"{name}: unbalanced call")
-                args = [a.strip() for a in
-                        _split_args(q[open_p + 1:close])] \
-                    if q[open_p + 1:close].strip() else []
+                args = sqltext.split_top(q[open_p + 1:close])
                 if len(args) != len(params):
                     raise ValueError(
                         f"{name} takes {len(params)} arguments "
                         f"({', '.join(params)}), got {len(args)}")
-                # Splice manually on spans from the string-masked twin:
-                # re.sub would (a) interpret the argument text as a
-                # regex replacement TEMPLATE (backslashes in args like
-                # '\\d+' raise or corrupt), and (b) rewrite parameter
-                # names inside the body's own string literals (round-12
-                # advisor finding). All parameters splice
-                # SIMULTANEOUSLY from ONE masked scan of the original
-                # body (round-13 advisor fix): sequential passes let an
-                # argument containing a later parameter's name get
-                # macro-captured (f(y, 2) with f AS (x, y) -> x + y
-                # rewrote the caller's column y into (2)).
+                # Splice on spans from the masked body: re.sub would
+                # (a) interpret the argument text as a regex replacement
+                # TEMPLATE (backslashes in args like '\\d+' raise or
+                # corrupt), and (b) rewrite parameter names inside the
+                # body's own string literals. All parameters splice
+                # SIMULTANEOUSLY from ONE scan of the original body:
+                # sequential passes let an argument containing a later
+                # parameter's name get macro-captured (f(y, 2) with
+                # f AS (x, y) -> x + y rewrote the caller's column y
+                # into (2)).
                 if params:
                     arg_of = dict(zip(params, args))
                     pat_all = re.compile("|".join(
                         rf"\b{re.escape(p)}\b" for p in params))
-                    masked = _mask_strings(body)
-                    pieces, last = [], 0
-                    for m in pat_all.finditer(masked):
-                        pieces.append(body[last:m.start()])
-                        pieces.append(f"({arg_of[m.group(0)]})")
-                        last = m.end()
-                    pieces.append(body[last:])
-                    expanded = "".join(pieces)
+                    expanded = sqltext.masked_sub(
+                        pat_all, lambda m: f"({arg_of[m.group(0)]})", body)
                 else:
                     expanded = body
                 q = q[:mm.start()] + f"({expanded})" + q[close + 1:]
@@ -2431,12 +2423,12 @@ def _literal_array_elems(arg: str, cap: int = 24) -> list[str] | None:
     m = _ARRAY_LIT_RE.match(s)
     if not m:
         return None
-    if _find_close(s, m.end() - 1) != len(s) - 1:
+    if sqltext.match_bracket(s, m.end() - 1) != len(s) - 1:
         return None
     inner = s[m.end():-1].strip()
     if not inner:
         return None
-    elems = _split_args(inner)
+    elems = sqltext.split_top(inner)
     if len(elems) > cap or any(not e for e in elems):
         return None
     return elems
@@ -2723,14 +2715,14 @@ def _tuple_scalar_tpl(args: list[str], op: str) -> str:
     s = args[0].strip()
     m = re.fullmatch(r"(?is)named_struct\s*\((.*)\)", s)
     if m:
-        parts = _split_args(m.group(1))
+        parts = sqltext.split_top(m.group(1))
         elems = [p for i, p in enumerate(parts) if i % 2 == 1]
     else:
         m = re.fullmatch(r"\((.*)\)", s)
-        if not m or len(_split_args(m.group(1))) < 2:
+        if not m or len(sqltext.split_top(m.group(1))) < 2:
             raise ValueError("tuple-by-number arithmetic needs an "
                              "explicit tuple literal at translate time")
-        elems = _split_args(m.group(1))
+        elems = sqltext.split_top(m.group(1))
     if op == "/":   # upstream divide is always Float64
         fields = ", ".join(
             f"'_{i + 1}', (CAST({x} AS DOUBLE) / CAST({args[1]} "
@@ -5798,54 +5790,6 @@ def _compose_combinators(name: str):
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
-def _split_args(s: str) -> list[str]:
-    """Split a call's argument string at top-level commas."""
-    args, depth, start, i = [], 0, 0, 0
-    in_str = None
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == in_str and not (i + 1 < len(s) and s[i + 1] == in_str):
-                in_str = None
-            elif c == in_str:
-                i += 1
-        elif c in "'\"":
-            in_str = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append(s[start:i].strip())
-            start = i + 1
-        i += 1
-    tail = s[start:].strip()
-    if tail or args:
-        args.append(tail)
-    return args
-
-
-def _find_close(s: str, i: int) -> int:
-    """Index of the ')' matching the '(' at s[i]; -1 if unbalanced."""
-    depth = 0
-    in_str = None
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
 def _fmt_datetime_tpl(args: list[str], parse: bool) -> str:
     """formatDateTime / parseDateTime with the reference's %-codes: the
     format must be a LITERAL so it can translate to a Java pattern at
@@ -5881,11 +5825,10 @@ def _position_tpl(args: list[str], haystack_first: bool) -> str:
     if len(args) == 1:
         # SQL-standard position(needle IN haystack) — one arg at the
         # comma level; split at the first IN outside string literals
-        spans = _string_spans(args[0])
-        for m in re.finditer(r"(?i)\s+IN\s+", args[0]):
-            if not any(s0 <= m.start() <= s1 for s0, s1 in spans):
-                return (f"LOCATE({args[0][:m.start()].strip()}, "
-                        f"{args[0][m.end():].strip()})")
+        m = sqltext.masked_search(re.compile(r"(?i)\s+IN\s+"), args[0])
+        if m:
+            return (f"LOCATE({args[0][:m.start()].strip()}, "
+                    f"{args[0][m.end():].strip()})")
     if len(args) not in (2, 3):
         raise ValueError(f"position/locate take 2 or 3 args, got {len(args)}")
     h, n = (args[0], args[1]) if haystack_first else (args[1], args[0])
@@ -5903,11 +5846,11 @@ def _apply_template(tpl, args: list[str]) -> str:
         # inside a '...' literal is NOT a placeholder (fuzzer-found via
         # isIPv4String's IPv4 regex)
         used = {int(x) for x in re.findall(r"\{(\d+)\}",
-                                           _mask_strings(tpl))}
+                                           sqltext.mask(tpl))}
         if used != set(range(len(args))):
             # fail loudly instead of silently dropping an argument —
-            # including a SKIPPED index ({0}/{2} with 3 args), the exact
-            # hole the arity-only check left open (round-6 review)
+            # including a SKIPPED index ({0}/{2} with 3 args), which an
+            # arity-only check would let through
             raise ValueError(
                 f"function template {tpl!r} consumes argument indices "
                 f"{sorted(used)} but the call supplied {len(args)}: "
@@ -6903,7 +6846,7 @@ def _multi_fuzzy_tpl(args: list[str]) -> str:
         raise ValueError("multiFuzzyMatchAny: patterns must be an "
                          "array literal ['a', 'b']")
     ors = []
-    for p in _split_args(am.group(1)):
+    for p in sqltext.split_top(am.group(1)):
         pm = re.fullmatch(r"\s*'([^']*)'\s*", p)
         if not pm:
             raise ValueError(f"multiFuzzyMatchAny: pattern {p!r} must "
@@ -6928,12 +6871,12 @@ def _paren_tuple_fields(arg: str) -> list[str] | None:
     the one-element ``(a,)`` — return its field expressions, else
     None (a plain parenthesized expression has no top-level comma)."""
     s = arg.strip()
-    if not (s.startswith("(") and _find_close(s, 0) == len(s) - 1):
+    if not s.startswith("(") or sqltext.match_bracket(s, 0) != len(s) - 1:
         return None
-    inner = _split_args(s[1:-1])
-    if len(inner) == 1 and not s[1:-1].strip().endswith(","):
+    inner = sqltext.split_top(s[1:-1])
+    if len(inner) == 1:
         return None
-    return [x.strip() for x in inner if x.strip()]
+    return [x for x in inner if x]
 
 
 def _tuple_struct_fields(arg: str) -> list[str] | None:
@@ -6946,9 +6889,8 @@ def _tuple_struct_fields(arg: str) -> list[str] | None:
         return f
     s = arg.strip()
     m = re.match(r"NAMED_STRUCT\s*\(", s, re.IGNORECASE)
-    if m and _find_close(s, s.index("(", m.start())) == len(s) - 1:
-        kv = _split_args(s[s.index("(") + 1:-1])
-        return [kv[i].strip() for i in range(1, len(kv), 2)]
+    if m and sqltext.match_bracket(s, m.end() - 1) == len(s) - 1:
+        return sqltext.split_top(s[m.end():-1])[1::2]
     return None
 
 
@@ -7037,10 +6979,8 @@ def _map_apply_tpl(args: list[str]) -> str:
     if fields is None or len(fields) != 2:
         raise ValueError("mapApply's lambda must return a 2-tuple "
                          f"(k2, v2), got {body!r}")
-    bk = _subst_ident(_subst_ident(fields[0], k, "__me.key"),
-                      v, "__me.value")
-    bv = _subst_ident(_subst_ident(fields[1], k, "__me.key"),
-                      v, "__me.value")
+    bk, bv = (sqltext.subst_ident(sqltext.subst_ident(f, k, "__me.key"),
+                                  v, "__me.value") for f in fields)
     return (f"MAP_FROM_ENTRIES(TRANSFORM(MAP_ENTRIES({args[1]}), "
             f"__me -> STRUCT({bk}, {bv})))")
 
@@ -7084,8 +7024,8 @@ def _point_in_polygon_tpl(args: list[str]) -> str:
     poly = args[1].strip()
     verts = None
     m = re.match(r"(?:ARRAY\s*\(|\[)", poly, re.IGNORECASE)
-    if m and _find_close(poly, m.end() - 1) == len(poly) - 1:
-        items = _split_args(poly[m.end():-1])
+    if m and sqltext.match_bracket(poly, m.end() - 1) == len(poly) - 1:
+        items = sqltext.split_top(poly[m.end():-1])
         fields = [_tuple_struct_fields(it) for it in items]
         if all(f is not None and len(f) == 2 for f in fields):
             verts = fields
@@ -7232,11 +7172,11 @@ def _tuple_arith_tpl(args: list[str], op: str | None) -> str:
         s = s.strip()
         m = re.fullmatch(r"(?is)named_struct\s*\((.*)\)", s)
         if m:
-            parts = _split_args(m.group(1))
+            parts = sqltext.split_top(m.group(1))
             return [p for i, p in enumerate(parts) if i % 2 == 1]
         m = re.fullmatch(r"\((.*)\)", s)
-        if m and len(_split_args(m.group(1))) > 1:
-            return _split_args(m.group(1))
+        if m and len(sqltext.split_top(m.group(1))) > 1:
+            return sqltext.split_top(m.group(1))
         raise ValueError(
             "tuple arithmetic needs explicit tuple literals at "
             "translate time (tuple(a, b) or (a, b)); for struct "
@@ -7260,51 +7200,35 @@ def _tuple_arith_tpl(args: list[str], op: str | None) -> str:
     return f"NAMED_STRUCT({fields})"
 
 
+_CALL_HEAD = re.compile(r"([A-Za-z_][A-Za-z0-9_]*)[ \t\n]*\(")
+_CALL_GAP = re.compile(r"[ \t\n]*")
+
+
 def _rewrite_calls(sql: str) -> str:
     """Scan for mapped function calls and rewrite them (args first, so
     nesting works inside-out). Unmapped names pass through."""
-    i = 0
-    out = []
-    while i < len(sql):
-        c = sql[i]
-        if c in "'\"":                      # skip string literals verbatim
-            j = i + 1
-            while j < len(sql) and sql[j] != c:
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        m = _IDENT.match(sql, i)
-        if not m:
-            out.append(c)
-            i += 1
-            continue
-        name = m.group(0)
-        j = m.end()
-        while j < len(sql) and sql[j] in " \t\n":
-            j += 1
-        if j >= len(sql) or sql[j] != "(":
-            out.append(sql[i:m.end()])
-            i = m.end()
-            continue
-        close = _find_close(sql, j)
+    masked = sqltext.mask(sql)
+    out, last, i = [], 0, 0
+    while (m := _CALL_HEAD.search(masked, i)) is not None:
+        name = m.group(1)
+        j = m.end() - 1
+        close = sqltext.match_bracket(sql, j)
         if close < 0:
-            out.append(sql[i:m.end()])
-            i = m.end()
+            i = m.end(1)
             continue
+        out.append(sql[last:m.start()])
+        last = i = close + 1
         inner = _rewrite_calls(sql[j + 1:close])
         # parametric double call: name(params)(args) — whitespace
-        # INCLUDING newlines may separate the two groups (round 13:
-        # a line-wrapped parametric call fell through to the bare-call
-        # path and swallowed the param list as arguments)
-        k = close + 1
-        while k < len(sql) and sql[k] in " \t\n":
-            k += 1
+        # INCLUDING newlines may separate the two groups (else a
+        # line-wrapped parametric call would take the bare-call path
+        # and swallow the param list as arguments)
+        k = _CALL_GAP.match(sql, close + 1).end()
         # parametric names compose with a trailing -If mechanically
         # (upstream's combinator machinery: quantileIf(0.9)(x, cond),
         # topKIf(3)(x, cond), ...) — the condition is the LAST call
-        # argument and CASE-wraps every value argument (round 8).
-        # Round 9: -State/-Merge also peels (once) for the quantile
+        # argument and CASE-wraps every value argument.
+        # -State/-Merge also peels (once) for the quantile
         # family — quantileState(0.5)(x) is the canonical
         # AggregatingMergeTree column type ([U] src/AggregateFunctions/
         # Combinators/AggregateFunctionState.h); see
@@ -7330,10 +7254,10 @@ def _rewrite_calls(sql: str) -> str:
                 "input rows instead (the -If wrap cannot drop rows "
                 "from an all-events sequence)")
         if p_base in _PARAMETRIC and k < len(sql) and sql[k] == "(":
-            close2 = _find_close(sql, k)
+            close2 = sqltext.match_bracket(sql, k)
             if close2 >= 0:
-                params = _split_args(inner)
-                args = _split_args(_rewrite_calls(sql[k + 1:close2]))
+                params = sqltext.split_top(inner)
+                args = sqltext.split_top(_rewrite_calls(sql[k + 1:close2]))
                 for _ in range(p_ifs):
                     if len(args) < 2:
                         raise ValueError(
@@ -7351,9 +7275,9 @@ def _rewrite_calls(sql: str) -> str:
                     tpl = pair[0 if p_sm == "state" else 1]
                 else:
                     tpl = _PARAMETRIC[p_base]
+                last = i = close2 + 1
                 if callable(tpl):
                     out.append(tpl(params, args))
-                    i = close2 + 1
                     continue
                 text = tpl.replace("{p*}", ", ".join(params))
                 for idx, p in enumerate(params):
@@ -7365,140 +7289,37 @@ def _rewrite_calls(sql: str) -> str:
                 for idx, a in enumerate(args):
                     text = text.replace("{a%d}" % idx, a)
                 out.append(text)
-                i = close2 + 1
                 continue
         if name == "count" and inner.strip() == "":
             out.append("COUNT(*)")          # CH count() = COUNT(*)
         elif name in _FUNCS:
-            out.append(_apply_template(_FUNCS[name], _split_args(inner)))
+            out.append(_apply_template(_FUNCS[name],
+                                       sqltext.split_top(inner)))
         elif name == "multiIf":
-            a = _split_args(inner)
+            a = sqltext.split_top(inner)
             whens = "".join(f" WHEN {a[x]} THEN {a[x + 1]}"
                             for x in range(0, len(a) - 1, 2))
             out.append(f"CASE{whens} ELSE {a[-1]} END")
         elif (_comb := _compose_combinators(name)) is not None:
             # mechanically-composed combinator name (sumArrayIf,
             # countDistinctIf, avgMapOrNull, ...) — see _AGG_BASES
-            out.append(_comb(_split_args(inner)))
+            out.append(_comb(sqltext.split_top(inner)))
         else:
             # unknown name (incl. keywords like WHEN/AND before a paren):
             # keep the ORIGINAL spacing between name and '(' — collapsing
             # it would break translate-idempotence (fuzzer-found)
-            out.append(f"{name}{sql[m.end():j + 1]}{inner})")
-        i = close + 1
-    return "".join(out)
-
-
-def _split_top_commas(s: str) -> list[str]:
-    """Split on commas at paren depth 0, respecting string literals."""
-    out, buf, depth, in_str = [], [], 0, False
-    for ch in s:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    if buf:
-        out.append("".join(buf))
-    return out
-
-
-def _subst_ident(sql: str, name: str, repl: str) -> str:
-    """Replace whole-word ``name`` outside single-quoted strings."""
-    pat = re.compile(rf"\b{re.escape(name)}\b")
-    out, i = [], 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < len(sql) and sql[j] != "'":
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        nxt = sql.find("'", i)
-        chunk = sql[i:nxt] if nxt != -1 else sql[i:]
-        out.append(pat.sub(repl, chunk))
-        i = nxt if nxt != -1 else len(sql)
-    return "".join(out)
-
-
-def _subst_ident_nocase(sql: str, name: str, repl: str) -> str:
-    """Case-insensitive whole-word identifier substitution outside
-    single-quoted string literals (the MV-fire source→block rewrite)."""
-    pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
-    mask = _mask_strings(sql)
-    out, last = [], 0
-    for m in pat.finditer(mask):
-        out.append(sql[last:m.start()])
-        out.append(repl)
-        last = m.end()
+            out.append(f"{name}{sql[m.end(1):j + 1]}{inner})")
     out.append(sql[last:])
     return "".join(out)
 
 
-def _mask_strings(s: str) -> str:
-    """Length-preserving copy with single-quoted literal CONTENTS
-    replaced by NUL, so clause regexes cannot match keywords inside
-    string literals (spans stay valid on the original)."""
-    out = list(s)
-    i, n = 0, len(s)
-    while i < n:
-        if s[i] == "'":
-            j = i + 1
-            while j < n and s[j] != "'":
-                out[j] = "\x00"
-                j += 1
-            i = j + 1
-        else:
-            i += 1
-    return "".join(out)
-
-
-class _SpanMatch:
-    """Match facade: spans from a match on the masked twin, group TEXT
-    from the original string."""
-
-    def __init__(self, m: re.Match, orig: str):
-        self._m, self._o = m, orig
-
-    def group(self, i: int = 0):
-        s, e = self._m.span(i)
-        return None if s == -1 else self._o[s:e]
-
-    def start(self, i: int = 0) -> int:
-        return self._m.start(i)
-
-    def end(self, i: int = 0) -> int:
-        return self._m.end(i)
-
-
-def _masked_search(regex: re.Pattern, q: str) -> _SpanMatch | None:
-    m = regex.search(_mask_strings(q))
-    return _SpanMatch(m, q) if m else None
-
-
-# ch_compat: upstream no-GROUP-BY aggregates over an EMPTY set return
-# type defaults, not ANSI NULL ([U] docs/aggregate-functions — "empty
-# result set" semantics; Settings empty_result_for_aggregation_by_empty_
-# set = 0 default). Scope here (documented, SURVEY §2.4): the
-# type-independent family — sum*/uniq* -> 0, avg -> nan (Float64
-# upstream). min/max/any keep ANSI NULL (their upstream default is the
-# COLUMN type's zero value, unknowable at the text layer). Default-on;
-# flip off for ANSI behavior.
-CH_COMPAT_EMPTY_SET_DEFAULTS = True
-
+# Upstream no-GROUP-BY aggregates over an EMPTY set return type
+# defaults, not ANSI NULL ([U] docs/aggregate-functions — "empty result
+# set" semantics; Settings empty_result_for_aggregation_by_empty_set = 0
+# default). Scope here (documented, SURVEY §2.4): the type-independent
+# family — sum*/uniq* -> 0, avg -> nan (Float64 upstream). min/max/any
+# keep ANSI NULL (their upstream default is the COLUMN type's zero
+# value, unknowable at the text layer).
 _ESD_AGG = re.compile(
     r"\b(sum|sumIf|sumKahan|uniq|uniqExact|uniqCombined|uniqCombined64|"
     r"uniqHLL12|uniqTheta|avg|avgIf)\s*\(", re.IGNORECASE)
@@ -7510,56 +7331,25 @@ _ESD_DEFAULT = {
 def _empty_set_defaults_pass(q: str) -> str:
     """COALESCE-wrap scalar (no-GROUP-BY, non-window) aggregates so an
     empty input yields the upstream type default instead of ANSI NULL.
-    Recurses into parenthesized subselects (each is its own scope with
-    its own GROUP BY check); window (OVER) uses are left alone — a
-    window aggregate never sees an empty frame row."""
-    # recurse into subqueries first, splicing processed text back
-    out, i, last, n = [], 0, 0, len(q)
-    while i < n:
-        c = q[i]
-        if c == "'":
-            j = i + 1
-            while j < n and q[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            j = _find_close(q, i)
-            if j > 0 and re.match(r"\s*(SELECT|WITH)\b", q[i + 1:j],
-                                  re.IGNORECASE):
-                out.append(q[last:i + 1])
-                out.append(_empty_set_defaults_pass(q[i + 1:j]))
-                out.append(")")
-                last = i = j + 1
-                continue
-        i += 1
-    out.append(q[last:])
-    q = "".join(out)
-    # this scope: skip entirely if it aggregates BY keys (empty input
-    # then produces zero rows upstream too) or is not a SELECT scope
-    mask = _mask_strings(q)
-    # mask subquery contents so scope-level scans don't see them
-    mlist = list(mask)
-    i = 0
-    while i < len(mlist):
-        if mlist[i] == "(":
-            j = _find_close(mask, i)
-            if j > 0 and re.match(r"\s*(SELECT|WITH)\b", mask[i + 1:j],
-                                  re.IGNORECASE):
-                for k in range(i + 1, j):
-                    mlist[k] = "\x00"
-                i = j + 1
-                continue
-        i += 1
-    scope = "".join(mlist)
+    Each parenthesized subselect is its own scope with its own GROUP BY
+    check; window (OVER) uses are left alone — a window aggregate never
+    sees an empty frame row."""
+    return sqltext.rewrite_inside_out(q, _empty_set_defaults_scope)
+
+
+def _empty_set_defaults_scope(q: str) -> str:
+    """The empty-set wrap for one scope; subqueries are already done."""
+    # skip entirely if the scope aggregates BY keys (empty input then
+    # produces zero rows upstream too); subquery contents are blanked
+    # so scope-level scans don't see them
+    scope = sqltext.blank_spans(sqltext.mask(q), sqltext.subquery_spans(q))
     if re.search(r"\bGROUP\s+BY\b", scope, re.IGNORECASE):
         return q
     # wrap each non-window aggregate call found in this scope
     res, pos = [], 0
     for m in _ESD_AGG.finditer(scope):
         name = m.group(1)
-        op = scope.index("(", m.end(1))
-        close = _find_close(q, op)
+        close = sqltext.match_bracket(q, m.end() - 1)
         if close < 0:
             continue
         if re.match(r"\s*OVER\b", scope[close + 1:], re.IGNORECASE):
@@ -7593,7 +7383,7 @@ def _float_literal_pass(q: str) -> str:
     literals (masked), already-suffixed/identifier-adjacent numbers,
     TABLESAMPLE percentages/row counts, and unquoted INTERVAL units
     where a D suffix is not valid syntax."""
-    mask = _mask_strings(q)
+    mask = sqltext.mask(q)
     out, last = [], 0
     for m in _FLOAT_LIT.finditer(mask):
         s, e = m.span(1)
@@ -7608,25 +7398,6 @@ def _float_literal_pass(q: str) -> str:
     return "".join(out)
 
 
-def _toplevel_kw_pos(q: str, regex: re.Pattern) -> int:
-    """Start offset of the first regex match outside string literals
-    AND outside any parenthesized span (subquery-safe clause search);
-    -1 if none."""
-    mask = list(_mask_strings(q))
-    depth = 0
-    for i, c in enumerate(mask):
-        if c == "(":
-            depth += 1
-            mask[i] = "\x00"
-        elif c == ")":
-            depth -= 1
-            mask[i] = "\x00"
-        elif depth > 0:
-            mask[i] = "\x00"
-    m = regex.search("".join(mask))
-    return m.start() if m else -1
-
-
 _SET_OP = re.compile(r"\b(?:UNION|INTERSECT|EXCEPT)"
                      r"(?:\s+(?:ALL|DISTINCT))?\b", re.IGNORECASE)
 
@@ -7635,18 +7406,7 @@ def _setop_spans(q: str) -> list[tuple[int, int]]:
     """(start, end) spans of top-level set operators, outside string
     literals and parens; `* EXCEPT(...)` star-transformers (previous
     non-space char is '*') are NOT set operators and are skipped."""
-    mask = list(_mask_strings(q))
-    depth = 0
-    for i, c in enumerate(mask):
-        if c == "(":
-            depth += 1
-            mask[i] = "\x00"
-        elif c == ")":
-            depth -= 1
-            mask[i] = "\x00"
-        elif depth > 0:
-            mask[i] = "\x00"
-    masked = "".join(mask)
+    masked = sqltext.depth0(q)
     out = []
     for m in _SET_OP.finditer(masked):
         if (m.group(0).upper().startswith("EXCEPT")
@@ -7660,8 +7420,8 @@ def _branch_start(q: str, pos: int) -> int:
     """Offset just after the last top-level set operator before ``pos``
     (0 when none) — the start of the UNION/INTERSECT/EXCEPT branch
     containing ``pos``. Clause rewrites that wrap 'everything before
-    the keyword' (QUALIFY, LIMIT BY) must not swallow sibling branches
-    (round-13 advisor fix: second occurrences in later branches)."""
+    the keyword' (QUALIFY, LIMIT BY) must not swallow sibling branches,
+    and a later branch may hold a second occurrence."""
     return max((e for _, e in _setop_spans(q) if e <= pos), default=0)
 
 
@@ -7671,46 +7431,6 @@ def _next_setop_pos(q: str, pos: int) -> int:
     return min((s for s, _ in _setop_spans(q) if s >= pos), default=-1)
 
 
-def _masked_sub(regex: re.Pattern, repl, q: str) -> str:
-    """re.sub outside string literals; ``repl`` is a callable on the
-    span-match (original-text groups)."""
-    mask = _mask_strings(q)
-    out, last = [], 0
-    for m in regex.finditer(mask):
-        out.append(q[last:m.start()])
-        out.append(repl(_SpanMatch(m, q)))
-        last = m.end()
-    out.append(q[last:])
-    return "".join(out)
-
-
-def _subst_outside_subqueries(text: str, name: str, repl: str) -> str:
-    """Whole-word identifier substitution that leaves parenthesized
-    SUBQUERY spans untouched (the ARRAY JOIN element name shadows outer
-    references only — a subquery defining the array keeps its own
-    scope). Non-subquery parens (function calls) are substituted."""
-    out, i, last, n = [], 0, 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            j = _find_close(text, i)
-            if j > 0 and re.match(r"\s*(SELECT|WITH)\b", text[i + 1:j],
-                                  re.IGNORECASE):
-                out.append(_subst_ident(text[last:i], name, repl))
-                out.append(text[i:j + 1])
-                last = i = j + 1
-                continue
-        i += 1
-    out.append(_subst_ident(text[last:], name, repl))
-    return "".join(out)
-
-
 def _array_literals(q: str) -> str:
     """Rewrite CH bracket array literals ``[a, b]`` to Spark ``array(a,
     b)`` — innermost-first so nesting works. A ``[`` directly after an
@@ -7718,7 +7438,7 @@ def _array_literals(q: str) -> str:
     left alone."""
     pat = re.compile(r"(?<![\w\)\]])\[([^\[\]]*)\]")
     while True:
-        new = _masked_sub(pat, lambda m: f"array({m.group(1)})", q)
+        new = sqltext.masked_sub(pat, lambda m: f"array({m.group(1)})", q)
         if new == q:
             return q
         q = new
@@ -7734,7 +7454,7 @@ def _rewrite_tuple_dot(q: str) -> str:
     paren/bracket, not a number."""
     pos = 0
     while True:
-        m = _masked_search(_TUPLE_DOT, q[pos:])
+        m = sqltext.masked_search(_TUPLE_DOT, q[pos:])
         if not m:
             return q
         mstart = pos + m.start()
@@ -7757,20 +7477,6 @@ def _rewrite_tuple_dot(q: str) -> str:
 _SUBSCRIPT = re.compile(r"(?<=[\w\)\]])\[([^\[\]]+)\]")
 
 
-def _string_spans(q: str) -> list[tuple[int, int]]:
-    spans, i = [], 0
-    while i < len(q):
-        if q[i] == "'":
-            j = i + 1
-            while j < len(q) and q[j] != "'":
-                j += 1
-            spans.append((i, j))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
 def _rewrite_subscripts(q: str) -> str:
     """Reference subscript access ``x[i]`` is 1-BASED for arrays
     (negative = from the end) and key-based for maps ([U]
@@ -7782,43 +7488,20 @@ def _rewrite_subscripts(q: str) -> str:
     NULL (upstream returns the type's default value — the nullable
     analog, same stance as the arrayElement template)."""
     while True:
-        m = _masked_search(_SUBSCRIPT, q)
+        m = sqltext.masked_search(_SUBSCRIPT, q)
         if not m:
             return q
-        spans = _string_spans(q)
-
-        def in_span(p):
-            return next((s for s in spans if s[0] <= p <= s[1]), None)
-
-        i = m.start() - 1
-        if q[i] in ")]":
-            opener = {"]": "[", ")": "("}[q[i]]
-            closer = q[i]
-            depth, j = 0, i
-            while j >= 0:
-                sp = in_span(j)
-                if sp:
-                    j = sp[0] - 1
-                    continue
-                if q[j] == closer:
-                    depth += 1
-                elif q[j] == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            if j < 0:
+        # the subscripted value: a bracketed group back to its opener,
+        # then the dotted name (if any) the group belongs to
+        k = m.start() - 1
+        if q[k] in ")]":
+            k = sqltext.match_bracket(q, k) - 1
+            if k < -1:
                 raise ValueError("unbalanced parentheses before "
                                  "subscript")
-            k = j - 1
-            while k >= 0 and (q[k].isalnum() or q[k] in "_."):
-                k -= 1
-            start = k + 1
-        else:
-            k = i
-            while k >= 0 and (q[k].isalnum() or q[k] in "_."):
-                k -= 1
-            start = k + 1
+        while k >= 0 and (q[k].isalnum() or q[k] in "_."):
+            k -= 1
+        start = k + 1
         base, idx = q[start:m.start()], m.group(1)
         istr = idx.strip()
         if re.fullmatch(r"0+", istr):
@@ -7863,12 +7546,12 @@ def _rewrite_values_tf(q: str) -> str:
     cosmetic."""
     pos = 0
     while True:
-        m = _masked_search(_VALUES_TF_PAT, q[pos:])
+        m = sqltext.masked_search(_VALUES_TF_PAT, q[pos:])
         if not m:
             return q
         mstart = pos + m.start()
         open_p = q.index("(", mstart + len(m.group(1)))
-        close = _find_close(q, open_p)
+        close = sqltext.match_bracket(q, open_p)
         if close < 0:
             raise ValueError("values(): unbalanced call")
         # Spark's NATIVE `FROM VALUES (r1), (r2) AS t(cols)` spells each
@@ -7880,7 +7563,7 @@ def _rewrite_values_tf(q: str) -> str:
                 re.match(r"\s*AS\s+\w+\s*\(", after, re.IGNORECASE):
             pos = close + 1
             continue
-        args = _split_args(q[open_p + 1:close])
+        args = sqltext.split_top(q[open_p + 1:close])
         if not args or not args[0].strip():
             raise ValueError("values() needs at least one row")
         schema, rows = None, args
@@ -7888,7 +7571,7 @@ def _rewrite_values_tf(q: str) -> str:
             schema, rows = args[0].strip()[1:-1], args[1:]
         if schema is not None:
             cols = []
-            for colspec in _split_args(schema):
+            for colspec in sqltext.split_top(schema):
                 parts = colspec.strip().split(None, 1)
                 if len(parts) != 2:
                     raise ValueError(
@@ -7896,7 +7579,7 @@ def _rewrite_values_tf(q: str) -> str:
                 cols.append((parts[0], _values_col_type(parts[1])))
         else:
             first = rows[0].strip()
-            arity = (len(_split_args(first[1:-1]))
+            arity = (len(sqltext.split_top(first[1:-1]))
                      if first.startswith("(") else 1)
             cols = [(f"c{i + 1}", None) for i in range(arity)]
         inner = ", ".join(f"__c{i + 1}" for i in range(len(cols)))
@@ -7926,14 +7609,14 @@ def _rewrite_nonneg_derivative(q: str) -> str:
     Needs the OVER clause text (two LAGs share it), so it's a dedicated
     pre-pass rather than a _FUNCS template."""
     while True:
-        m = _masked_search(_NND_PAT, q)
+        m = sqltext.masked_search(_NND_PAT, q)
         if not m:
             return q
         open_p = q.index("(", m.start())
-        close = _find_close(q, open_p)
+        close = sqltext.match_bracket(q, open_p)
         if close < 0:
             raise ValueError("nonNegativeDerivative: unbalanced call")
-        args = _split_args(q[open_p + 1:close])
+        args = sqltext.split_top(q[open_p + 1:close])
         if len(args) not in (2, 3):
             raise ValueError("nonNegativeDerivative takes (metric, ts"
                              "[, interval])")
@@ -7944,7 +7627,7 @@ def _rewrite_nonneg_derivative(q: str) -> str:
                 "OVER (...) clause")
         wstart = close + 1 + mo.end()
         if wstart < len(q) and q[wstart] == "(":
-            wclose = _find_close(q, wstart)
+            wclose = sqltext.match_bracket(q, wstart)
             if wclose < 0:
                 raise ValueError("nonNegativeDerivative: unbalanced "
                                  "OVER clause")
@@ -8009,11 +7692,11 @@ def _map_cast_type(name: str) -> str:
 def _cast_type_names(q: str) -> str:
     """Translate CH type names inside ``CAST(... AS T)`` and ``x::T``
     (``Nullable(T)`` unwraps — Spark types are nullable already)."""
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         _CAST_AS,
         lambda m: "AS "
         + _map_cast_type(m.group(1) or m.group(2)) + m.group(3), q)
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         _CAST_COLON,
         lambda m: "::" + _map_cast_type(m.group(1) or m.group(2)), q)
     return q
@@ -8087,29 +7770,33 @@ def _translate_impl(sql: str,
                     final_keys: dict[str, tuple[list[str], str]] | None
                     = None) -> str:
     """Translate one reference-dialect query to Spark SQL text."""
-    q = sql.strip().rstrip(";")
-    # Every clause-level rewrite below goes through the string-literal
-    # mask: keywords inside '...' literals are NEVER clause syntax.
+    # comments go first: a rewrite that moves a clause's text must not
+    # carry a '--' comment into the middle of a generated line
+    q = sqltext.strip_comments(sql).strip().rstrip(";")
+    # Every clause-level rewrite below goes through the sqltext mask:
+    # keywords inside literals and quoted names are NEVER clause syntax.
     # trailing FORMAT / SETTINGS are client directives, not semantics
-    m = _masked_search(re.compile(r"\bSETTINGS\s[\s\S]*$", re.IGNORECASE), q)
+    m = sqltext.masked_search(
+        re.compile(r"\bSETTINGS\s[\s\S]*$", re.IGNORECASE), q)
     if m:
         q = q[:m.start()].rstrip()
-    m = _masked_search(re.compile(r"\bFORMAT\s+\w+\s*$", re.IGNORECASE), q)
+    m = sqltext.masked_search(
+        re.compile(r"\bFORMAT\s+\w+\s*$", re.IGNORECASE), q)
     if m:
         q = q[:m.start()].rstrip()
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"\bGLOBAL\s+(IN|JOIN|LEFT|RIGHT|INNER|ANY)\b",
                    re.IGNORECASE),
         lambda m: m.group(1), q)
-    q = _masked_sub(re.compile(r"=="), lambda m: "=", q)
+    q = sqltext.masked_sub(re.compile(r"=="), lambda m: "=", q)
     q = _array_literals(q)
     q = _rewrite_subscripts(q)
     q = _rewrite_tuple_dot(q)
     q = _cast_type_names(q)
     q = _rewrite_values_tf(q)
     q = _rewrite_nonneg_derivative(q)
-    q = _masked_sub(re.compile(r"\bsystem\.(\w+)", re.IGNORECASE),
-                    lambda m: f"__system_{m.group(1).lower()}", q)
+    q = sqltext.masked_sub(re.compile(r"\bsystem\.(\w+)", re.IGNORECASE),
+                           lambda m: f"__system_{m.group(1).lower()}", q)
     # LIMIT n WITH TIES needs rank semantics Spark SQL text can't express.
     # ch_sql() intercepts the trailing bare-column form before translate()
     # and applies the boundary-filter operator; anything that reaches here
@@ -8118,22 +7805,22 @@ def _translate_impl(sql: str,
     # except_default_mode = ALL; Spark's bare forms mean DISTINCT — a
     # silent row-count divergence on duplicates). Bare UNION errors
     # upstream (union_default_mode = '') — refuse the same way.
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"\bINTERSECT\b(?!\s+(?:ALL|DISTINCT)\b)",
                    re.IGNORECASE),
         lambda m: "INTERSECT ALL", q)
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"\bEXCEPT\b(?!\s*\()(?!\s+(?:ALL|DISTINCT)\b)",
                    re.IGNORECASE),
         lambda m: "EXCEPT ALL", q)
     # the set operation with a parenthesized right side — 'EXCEPT
     # (SELECT ...' — is also bare-ALL; only the star-projection
     # '* EXCEPT (cols)' keeps its Spark-native meaning
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"\bEXCEPT(?=\s*\(\s*(?:SELECT|WITH)\b)",
                    re.IGNORECASE),
         lambda m: "EXCEPT ALL", q)
-    if _masked_search(
+    if sqltext.masked_search(
             re.compile(r"\bUNION\b(?!\s+(?:ALL|DISTINCT)\b)",
                        re.IGNORECASE), q):
         raise ValueError(
@@ -8143,17 +7830,17 @@ def _translate_impl(sql: str,
     # doesn't have — ch_sql() resolves the FROM schema lazily and
     # rebuilds the select list (top-level form); nested/text-only use
     # refuses toward the DataFrame pattern
-    if _masked_search(re.compile(r"(\*|COLUMNS\s*\(\s*'[^']*'\s*\))\s+"
-                                 r"(REPLACE|APPLY)\s*\(",
-                                 re.IGNORECASE), q):
+    if sqltext.masked_search(re.compile(
+            r"(\*|COLUMNS\s*\(\s*'[^']*'\s*\))\s+(REPLACE|APPLY)\s*\(",
+            re.IGNORECASE), q):
         raise ValueError(
             "* REPLACE/APPLY / COLUMNS(...) APPLY need the schema — "
             "ch_sql() handles the TOP-LEVEL 'SELECT * EXCEPT/REPLACE/"
             "APPLY ... FROM ...' form; for nested use, the DataFrame "
             "column-list pattern (queries/advanced_q.star_except_"
             "replace)")
-    if _masked_search(re.compile(r"\bLIMIT\s+\d+\s+WITH\s+TIES\b",
-                                 re.IGNORECASE), q):
+    if sqltext.masked_search(
+            re.compile(r"\bLIMIT\s+\d+\s+WITH\s+TIES\b", re.IGNORECASE), q):
         raise ValueError(
             "LIMIT n WITH TIES here is not translatable to SQL text — "
             "ch_sql() handles the trailing `ORDER BY <cols> LIMIT n WITH "
@@ -8162,14 +7849,14 @@ def _translate_impl(sql: str,
     # GROUP BY k WITH TOTALS -> GROUPING SETS ((k), ()) — grouped rows
     # plus the grand-total row with NULL keys (operators.with_totals is
     # the DataFrame twin)
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"GROUP\s+BY\s+(.+?)\s+WITH\s+TOTALS",
                    re.IGNORECASE | re.DOTALL),
         lambda m: f"GROUP BY GROUPING SETS (({m.group(1).strip()}), ())",
         q)
     # numbers(N) / numbers(start, N) table function -> Spark range();
     # the reference's `number` column name maps to range's `id`
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"\b(FROM|JOIN)\s+numbers\(\s*(\d+)\s*"
                    r"(?:,\s*(\d+)\s*)?\)", re.IGNORECASE),
         lambda m: m.group(1) + _numbers_subquery(
@@ -8179,7 +7866,7 @@ def _translate_impl(sql: str,
 
     # strictness/positional joins change SEMANTICS — refuse loudly rather
     # than translate to a plain join that returns different rows
-    m = _masked_search(
+    m = sqltext.masked_search(
         re.compile(r"\b(ANY|ASOF|PASTE)\s+(?:(?:LEFT|RIGHT|INNER|OUTER)"
                    r"\s+)*JOIN\b", re.IGNORECASE), q)
     if m:
@@ -8200,10 +7887,11 @@ def _translate_impl(sql: str,
     # CH scalar WITH: ``WITH <expr> AS <name>`` (expression FIRST —
     # distinct from the CTE form ``name AS (SELECT ...)``). Constants
     # are inlined as parenthesized expressions; CTE items pass through.
-    m = _masked_search(re.compile(r"^\s*WITH\s+(.*?)\s+(SELECT\b.*)$",
-                                  re.IGNORECASE | re.DOTALL), q)
+    m = sqltext.masked_search(
+        re.compile(r"^\s*WITH\s+(.*?)\s+(SELECT\b.*)$",
+                   re.IGNORECASE | re.DOTALL), q)
     if m:
-        items = _split_top_commas(m.group(1))
+        items = sqltext.split_top(m.group(1))
         ctes, consts = [], []
         for it in items:
             it = it.strip()
@@ -8219,16 +7907,18 @@ def _translate_impl(sql: str,
         if consts:
             rest = m.group(2)
             for name, expr in consts:
-                rest = _subst_ident(rest, name, f"({expr})")
-                ctes = [_subst_ident(c, name, f"({expr})") for c in ctes]
+                rest = sqltext.subst_ident(rest, name, f"({expr})")
+                ctes = [sqltext.subst_ident(c, name, f"({expr})")
+                        for c in ctes]
             q = (f"WITH {', '.join(ctes)} {rest}" if ctes else rest)
 
     # WITH FILL / INTERPOLATE need sequence generation, not a text
     # rewrite — ch_sql() handles the clause (it extracts it BEFORE
     # translate and applies operators.fill.with_fill_bounds); reaching
     # here means translate() was called directly, so refuse loudly
-    if _masked_search(re.compile(r"\bWITH\s+FILL\b|\bINTERPOLATE\s*\(",
-                                 re.IGNORECASE), q):
+    if sqltext.masked_search(
+            re.compile(r"\bWITH\s+FILL\b|\bINTERPOLATE\s*\(",
+                       re.IGNORECASE), q):
         raise ValueError(
             "ORDER BY ... WITH FILL / INTERPOLATE is handled by ch_sql() "
             "(which runs the fill as a DataFrame op), not by translate() "
@@ -8236,7 +7926,7 @@ def _translate_impl(sql: str,
             "operators.fill.with_fill_bounds directly")
 
     # [LEFT] ARRAY JOIN -> LATERAL VIEW [OUTER] EXPLODE
-    # (_apply_array_join: three forms + subquery recursion since r12)
+    # (_apply_array_join: three forms, innermost span first)
     q = _apply_array_join(q)
 
     # FROM t FINAL -> dedup-on-read subquery (needs declared merge keys)
@@ -8252,18 +7942,18 @@ def _translate_impl(sql: str,
         return (f"FROM (SELECT * EXCEPT(__ch_rn) FROM (SELECT *, "
                 f"ROW_NUMBER() OVER (PARTITION BY {ks} ORDER BY {ver} "
                 f"DESC) AS __ch_rn FROM {t}) WHERE __ch_rn = 1) {t}")
-    q = _masked_sub(_FINAL, final_sub, q)
+    q = sqltext.masked_sub(_FINAL, final_sub, q)
 
     # PREWHERE -> merge into WHERE
-    m = _masked_search(_PREWHERE, q)
+    m = sqltext.masked_search(_PREWHERE, q)
     if m:
         pre = m.group(1).strip()
         q = q[:m.start()] + q[m.end():]
-        wm = _masked_search(re.compile(r"\bWHERE\b", re.IGNORECASE), q)
+        wm = sqltext.masked_search(re.compile(r"\bWHERE\b", re.IGNORECASE), q)
         if wm:
             q = q[:wm.end()] + f" ({pre}) AND" + q[wm.end():]
         else:
-            ins = _masked_search(
+            ins = sqltext.masked_search(
                 re.compile(r"\bGROUP\s+BY\b|\bORDER\s+BY\b|\bLIMIT\b|$",
                            re.IGNORECASE), q)
             q = q[:ins.start()] + f" WHERE {pre} " + q[ins.start():]
@@ -8274,10 +7964,10 @@ def _translate_impl(sql: str,
         frac = (float(v.split("/")[0]) / float(v.split("/")[1])
                 if "/" in v else float(v))
         return f"TABLESAMPLE ({frac * 100:g} PERCENT)"
-    q = _masked_sub(_SAMPLE, sample_sub, q)
+    q = sqltext.masked_sub(_SAMPLE, sample_sub, q)
     # SAMPLE n (approximate row-count form) -> TABLESAMPLE (n ROWS)
-    q = _masked_sub(_SAMPLE_N,
-                    lambda m: f"TABLESAMPLE ({m.group(1)} ROWS)", q)
+    q = sqltext.masked_sub(_SAMPLE_N,
+                           lambda m: f"TABLESAMPLE ({m.group(1)} ROWS)", q)
 
     # SELECT DISTINCT ON (keys) ... ([U] InterpreterSelectQuery
     # DISTINCT ON = first row per key group) — routed through the
@@ -8285,23 +7975,23 @@ def _translate_impl(sql: str,
     # deterministic-order contract; ORDER BY keys the select list
     # renamed or dropped are alias-rewritten / hoisted by
     # _wrap_order_rewrite so the survivor tracks the oracle).
-    # Subquery-safe since round 12: occurrences inside derived
-    # tables/CTEs splice within their OWN span.
+    # Occurrences inside derived tables/CTEs splice within their OWN
+    # span.
     q = _apply_distinct_on(q)
 
     # QUALIFY <cond> ([U] InterpreterSelectQuery qualify clause —
     # post-window row filter): Spark has no QUALIFY, so wrap the query
     # and filter on the projected aliases in the outer WHERE; trailing
     # ORDER BY/LIMIT/... clauses move to the outer query so they apply
-    # AFTER the filter, exactly as upstream evaluates them. Recursive
-    # since round 12: a QUALIFY inside a subquery wraps its own span.
+    # AFTER the filter, exactly as upstream evaluates them. A QUALIFY
+    # inside a subquery wraps its own span.
     q = _apply_qualify(q)
 
     # MOD infix (MySQL-compat spelling upstream accepts) -> %.
     # Anchored to infix position (operand-space-MOD-space-operand, next
     # token not a clause keyword) so mod(a, b) calls and identifiers
     # stay untouched.
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"(?<=[\w\)\]'])(\s+)MOD(\s+)"
                    r"(?!(?:FROM|WHERE|GROUP|ORDER|LIMIT|HAVING|AS|"
                    r"JOIN|ON|AND|OR)\b)(?=[\w\('-])", re.IGNORECASE),
@@ -8316,23 +8006,22 @@ def _translate_impl(sql: str,
     # LIMIT offset, count (MySQL-style CH form) -> LIMIT count OFFSET n.
     # Only at clause position and NOT followed by BY (LIMIT n BY is the
     # per-group form handled below).
-    q = _masked_sub(
+    q = sqltext.masked_sub(
         re.compile(r"\bLIMIT\s+(\d+)\s*,\s*(\d+)(?!\s*BY\b)",
                    re.IGNORECASE),
         lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}", q)
 
     # LIMIT [m,] n [OFFSET m] BY k,... -> row_number wrap of the query.
-    # Recursive since round 12: occurrences inside subqueries/CTEs wrap
-    # their OWN span (innermost first), and the body's ORDER BY is
-    # located with the depth-0 masked search (a plain regex matched
-    # ORDER BYs inside derived tables and truncated the body there).
+    # Occurrences inside subqueries/CTEs wrap their OWN span (innermost
+    # first), and the body's ORDER BY is located with the depth-0
+    # search (a plain regex would match ORDER BYs inside derived tables
+    # and truncate the body there).
     q = _apply_limit_by(q)
 
-    # empty-set type defaults (ch_compat, see flag docstring) run on
-    # dialect names BEFORE template expansion — the COALESCE wrap
-    # passes through every rendering
-    if CH_COMPAT_EMPTY_SET_DEFAULTS:
-        q = _empty_set_defaults_pass(q)
+    # empty-set type defaults (see _ESD_AGG) run on dialect names BEFORE
+    # template expansion — the COALESCE wrap passes through every
+    # rendering
+    q = _empty_set_defaults_pass(q)
     # whitespace-stable output (clause strips can leave trailing blanks;
     # keeps translate idempotent — pinned by test). Float64 literal
     # typing runs LAST, on the fully expanded SQL.
@@ -8345,6 +8034,9 @@ def _norm_expr_text(s: str) -> str:
     return re.sub(r"\s+", "", s).lower()
 
 
+_FROM_KW = re.compile(r"\bFROM\b", re.IGNORECASE)
+_WHERE_KW = re.compile(r"\bWHERE\b", re.IGNORECASE)
+_JOIN_KW = re.compile(r"\b(?:JOIN|LATERAL)\b", re.IGNORECASE)
 _ORDER_SUFFIX = re.compile(
     r"\s+(?:(?:ASC|DESC)(?:\s+NULLS\s+(?:FIRST|LAST))?|"
     r"NULLS\s+(?:FIRST|LAST))\s*$", re.IGNORECASE)
@@ -8353,7 +8045,7 @@ _ORDER_SUFFIX = re.compile(
 def _wrap_order_rewrite(body: str,
                         lists: list[str]) -> tuple[str, list[str],
                                                    list[str]]:
-    """LIMIT-BY / DISTINCT-ON wrap (round-12 verdict item 5): the
+    """LIMIT-BY / DISTINCT-ON wrap: the
     row_number subquery sees only the body's OUTPUT columns, while
     upstream resolves the BY keys and ORDER BY against the source
     relation too. Per key in each list: projected bare column -> keep;
@@ -8363,12 +8055,13 @@ def _wrap_order_rewrite(body: str,
     outer * EXCEPT). Returns (new_body, rewritten_lists,
     hoisted_names) — hoists are shared across the lists."""
     sp = re.match(r"\s*SELECT\s+(?:DISTINCT\s+)?", body, re.IGNORECASE)
-    fp = _toplevel_kw_pos(body, re.compile(r"\bFROM\b", re.IGNORECASE))
-    if not sp or fp < sp.end():
+    fm = sqltext.search_top(_FROM_KW, body)
+    if not sp or not fm or fm.start() < sp.end():
         return body, lists, []
+    fp = fm.start()
     is_distinct = bool(re.match(r"\s*SELECT\s+DISTINCT\b", body,
                                 re.IGNORECASE))
-    sel_items = [t.strip() for t in _split_args(body[sp.end():fp])]
+    sel_items = sqltext.split_top(body[sp.end():fp])
     star = any(t == "*" or t.endswith(".*")
                or re.match(r"\*\s*(EXCEPT|REPLACE|APPLY)\b", t,
                            re.IGNORECASE)
@@ -8379,8 +8072,8 @@ def _wrap_order_rewrite(body: str,
     for t in sel_items:
         ma = re.search(r"\s+AS\s+(`[^`]+`|\w+)\s*$", t, re.IGNORECASE)
         if ma:
-            alias = ma.group(1).strip("`")
-            out_names.add(alias.lower())
+            alias = ma.group(1)          # quoted as written
+            out_names.add(alias.strip("`").lower())
             expr_to_alias[_norm_expr_text(t[:ma.start()])] = alias
             positional.append(alias)
         elif re.fullmatch(r"[\w.]+", t):
@@ -8417,8 +8110,8 @@ def _wrap_order_rewrite(body: str,
             if is_distinct:
                 # hoisting into a SELECT DISTINCT body would widen the
                 # dedup key set and silently change which rows survive
-                # (round-13 advisor fix; upstream refuses ORDER BY
-                # columns outside SELECT DISTINCT)
+                # (upstream refuses ORDER BY columns outside SELECT
+                # DISTINCT)
                 raise ValueError(
                     f"LIMIT BY / DISTINCT ON over SELECT DISTINCT: "
                     f"'{expr}' is not in the DISTINCT select list — "
@@ -8429,27 +8122,12 @@ def _wrap_order_rewrite(body: str,
         return hoist_by_expr[key] + suff
 
     new_lists = [", ".join(rewrite_one(it.strip())
-                           for it in _split_args(txt))
+                           for it in sqltext.split_top(txt))
                  for txt in lists]
     if hoists:
         body = (body[:fp].rstrip() + ", " + ", ".join(hoists)
                 + " " + body[fp:])
     return body, new_lists, [h.rsplit(" AS ", 1)[-1] for h in hoists]
-
-
-def _enclosing_open(masked: str, pos: int) -> int:
-    """Index of the '(' whose span encloses ``pos`` (on the
-    string-masked twin); -1 when pos is at depth 0."""
-    depth = 0
-    for i in range(pos - 1, -1, -1):
-        c = masked[i]
-        if c == ")":
-            depth += 1
-        elif c == "(":
-            if depth == 0:
-                return i
-            depth -= 1
-    return -1
 
 
 _GMAX_MARK = re.compile(
@@ -8473,7 +8151,7 @@ def _gwin_expr(kind: str, tx: str, part: str) -> str:
         keys = f"{part}, {tx}" if part else tx
         return f"COUNT(*) OVER (PARTITION BY {keys})"
     if kind == "SUMBY":
-        e, s = _split_args(tx)
+        e, s = sqltext.split_top(tx)
         keys = f"{part}, {e}" if part else e
         return f"SUM({s}) OVER (PARTITION BY {keys})"
     if kind == "RNK":
@@ -8483,12 +8161,12 @@ def _gwin_expr(kind: str, tx: str, part: str) -> str:
         pb = f"PARTITION BY {part} " if part else ""
         return f"ROW_NUMBER() OVER ({pb}ORDER BY {tx})"
     if kind == "CUM":
-        e, s = _split_args(tx)
+        e, s = sqltext.split_top(tx)
         pb = f"PARTITION BY {part} " if part else ""
         return (f"SUM({s}) OVER ({pb}ORDER BY {e} RANGE BETWEEN "
                 f"UNBOUNDED PRECEDING AND CURRENT ROW)")
     if kind == "LAG":
-        parts = _split_args(tx)
+        parts = sqltext.split_top(tx)
         e, order = parts[0], ", ".join(parts[1:])
         pb = f"PARTITION BY {part} " if part else ""
         return f"LAG({e}) OVER ({pb}ORDER BY {order})"
@@ -8515,25 +8193,26 @@ _BARE_ALIAS_STOP = frozenset(
 def _select_alias_map(s: str, fp: int) -> dict[str, str]:
     """Map select-list aliases (lowercased) to their expressions for a
     select span ``s`` whose top-level FROM sits at ``fp``. Both the
-    ``expr AS alias`` and bare ``expr alias`` forms resolve (round 14,
-    ADVICE r13): a trailing identifier reads as an alias when it
+    ``expr AS alias`` and bare ``expr alias`` forms resolve: a trailing
+    identifier reads as an alias when it
     follows a complete expression — balanced prefix not ending in an
     operator/keyword that legally ends an expression (CASE..END,
     interval units, ...). The span's top-level SELECT may follow a CTE
-    block, so it is located positionally (round 14 — an anchored match
-    crashed on CTE sources; found by the gmax chaos battery)."""
-    spos = _toplevel_kw_pos(s, re.compile(r"\bSELECT\b", re.IGNORECASE))
-    if spos < 0:
+    block, so it is located positionally (an anchored match fails on
+    CTE sources)."""
+    sm = sqltext.search_top(re.compile(r"\bSELECT\b", re.IGNORECASE), s)
+    if not sm:
         raise ValueError("select span without SELECT")
+    spos = sm.start()
     sp = re.match(r"SELECT\s+(?:DISTINCT\s+)?", s[spos:], re.IGNORECASE)
     alias_expr: dict[str, str] = {}
-    for it in _split_args(s[spos + sp.end():fp]):
+    for it in sqltext.split_top(s[spos + sp.end():fp]):
         ma = re.search(r"\s+AS\s+(`[^`]+`|\w+)\s*$", it, re.IGNORECASE)
         if not ma:
             mb = re.search(r"\s+(`[^`]+`|[A-Za-z_]\w*)\s*$", it)
             if mb and mb.group(1).strip("`").upper() not in \
                     _BARE_ALIAS_STOP:
-                pre = _mask_strings(it[:mb.start()]).rstrip()
+                pre = sqltext.mask(it[:mb.start()]).rstrip()
                 if pre and pre.count("(") == pre.count(")") \
                         and not re.search(
                             r"[+\-*/%,<>=|&^~.(]$|\b(?:AS|AND|OR|"
@@ -8566,7 +8245,7 @@ def _resolve_group_keys(s: str, fp: int, keys: str) -> str:
     return ", ".join(
         alias_expr.get(ktok.strip().lower(), ktok.strip())
         if re.fullmatch(r"\w+", ktok.strip()) else ktok.strip()
-        for ktok in _split_args(keys))
+        for ktok in sqltext.split_top(keys))
 
 
 def _relation_alias(rel_part: str) -> str | None:
@@ -8578,7 +8257,7 @@ def _relation_alias(rel_part: str) -> str | None:
     m = re.search(r"\s+(?:AS\s+)?(`[^`]+`|[A-Za-z_]\w*)\s*$", rel,
                   re.IGNORECASE)
     if m and m.group(1).strip("`").upper() not in _BARE_ALIAS_STOP:
-        pre = _mask_strings(rel[:m.start()]).rstrip()
+        pre = sqltext.mask(rel[:m.start()]).rstrip()
         if pre and pre.count("(") == pre.count(")"):
             return m.group(1)
     if re.fullmatch(r"\w+(?:\.\w+)*", rel):
@@ -8591,26 +8270,26 @@ def _span_from_and_keys(s: str, what: str) -> tuple[int, int, str]:
     list or "") for one select span. Raises when the span has no FROM
     or a GROUP BY with no single partition (ROLLUP/CUBE/GROUPING SETS/
     ALL/positional refs) — the injected-window rewrites need both."""
-    fp = _toplevel_kw_pos(s, re.compile(r"\bFROM\b", re.IGNORECASE))
-    if fp < 0:
+    fm = sqltext.search_top(_FROM_KW, s)
+    if not fm:
         raise ValueError(
             f"{what} needs a FROM relation (the rewrite anchors a "
             f"window/sweep over it)")
-    rel = s[fp:]
-    ce = _toplevel_kw_pos(rel, re.compile(
+    fp = fm.start()
+    ce = sqltext.search_top(re.compile(
         r"\b(?:GROUP\s+BY|HAVING|WINDOW|ORDER\s+BY|LIMIT|OFFSET|"
         r"DISTRIBUTE\s+BY|SORT\s+BY|CLUSTER\s+BY|SETTINGS|FORMAT)\b",
-        re.IGNORECASE))
-    fw_end = fp + (len(rel) if ce < 0 else ce)
+        re.IGNORECASE), s, fp)
+    fw_end = ce.start() if ce else len(s)
     tail = s[fw_end:]
     gm = re.match(r"\s*GROUP\s+BY\s+", tail, re.IGNORECASE)
     keys = ""
     if gm:
         kt = tail[gm.end():]
-        ke = _toplevel_kw_pos(kt, re.compile(
+        ke = sqltext.search_top(re.compile(
             r"\b(?:HAVING|WINDOW|ORDER\s+BY|LIMIT|OFFSET|SETTINGS|"
-            r"FORMAT)\b", re.IGNORECASE))
-        keys = (kt if ke < 0 else kt[:ke]).strip()
+            r"FORMAT)\b", re.IGNORECASE), kt)
+        keys = (kt[:ke.start()] if ke else kt).strip()
         if re.search(r"\b(?:ROLLUP|CUBE|GROUPING\s+SETS)\b"
                      r"|^\s*ALL\s*$", keys, re.IGNORECASE) \
                 or re.fullmatch(r"[\d\s,]+", keys):
@@ -8630,12 +8309,12 @@ def _gmax_rewrite_select(s: str) -> str:
     fp, fw_end, keys = _span_from_and_keys(
         s, "exponentialTimeDecayed* / exponentialMovingAverage / "
            "window-path statistics")
-    masked_s = _mask_strings(s)
+    masked_s = sqltext.mask(s)
     spans: list[tuple[int, int, str, str]] = []
     for m in _GMAX_KIND.finditer(masked_s):
         pp, nested = m.start(), False
         while True:
-            op = _enclosing_open(masked_s, pp)
+            op = sqltext.enclosing_open(s, pp)
             if op < 0:
                 break
             if re.match(r"\s*SELECT\b", s[op + 1:], re.IGNORECASE):
@@ -8645,7 +8324,7 @@ def _gmax_rewrite_select(s: str) -> str:
         if nested:
             continue
         open_p = s.index("(", m.end() - 1)
-        close = _find_close(s, open_p)
+        close = sqltext.match_bracket(s, open_p)
         if close < 0:
             raise ValueError("__CH_G*__: unbalanced marker")
         spans.append((m.start(), close + 1, m.group(1),
@@ -8678,31 +8357,28 @@ def _gmax_rewrite_select(s: str) -> str:
         return "".join(seg)
 
     # The FROM(+WHERE) segment gets wrapped in a subquery, which would
-    # drop the original relation aliases from the outer scope (round-14
-    # ADVICE fix): for a single relation, alias the subquery with THAT
+    # drop the original relation aliases from the outer scope: for a
+    # single relation, alias the subquery with THAT
     # relation's alias/table name so qualified outer refs (t.col) keep
     # resolving; for joins, no single alias exists — raise a clear
     # error if the outer text still uses a FROM-side qualifier.
     out_alias = "__ch_gmsrc"
     rel_seg = s[fp + 4:fw_end]
-    wp = _toplevel_kw_pos(rel_seg, re.compile(r"\bWHERE\b",
-                                              re.IGNORECASE))
-    rel_part = (rel_seg if wp < 0 else rel_seg[:wp]).strip()
-    multi = (_toplevel_kw_pos(
-        rel_part, re.compile(r"\b(?:JOIN|LATERAL)\b",
-                             re.IGNORECASE)) >= 0
-        or len(_split_args(rel_part)) > 1)
+    wp = sqltext.search_top(_WHERE_KW, rel_seg)
+    rel_part = (rel_seg[:wp.start()] if wp else rel_seg).strip()
+    multi = (sqltext.search_top(_JOIN_KW, rel_part) is not None
+             or len(sqltext.split_top(rel_part)) > 1)
     if not multi:
         al = _relation_alias(rel_part)
         if al:
             out_alias = al
     else:
         rel_names = {t.upper() for t in
-                     re.findall(r"[A-Za-z_]\w*", _mask_strings(rel_part))}
+                     re.findall(r"[A-Za-z_]\w*", sqltext.mask(rel_part))}
         outer = splice(0, fp) + splice(fw_end, len(s))
         quals = {m.group(1) for m in
                  re.finditer(r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_`]",
-                             _mask_strings(outer))
+                             sqltext.mask(outer))
                  if m.group(1).upper() in rel_names}
         if quals:
             raise ValueError(
@@ -8718,26 +8394,24 @@ def _gmax_rewrite_select(s: str) -> str:
 
 def _apply_group_max(q: str) -> str:
     """Resolve __CH_GMAX__(t) markers (emitted by the decayed / EMA
-    aggregate templates, round 13) — each marker becomes a window
+    aggregate templates) — each marker becomes a window
     MAX(t) over its enclosing SELECT's GROUP BY keys, computed in an
     injected subquery so the anchor sees exactly the grouped rows
-    (post-WHERE). Deletes the per-group COLLECT_LIST the round-12 form
-    used: constant state per group at any skew."""
+    (post-WHERE): constant state per group at any skew."""
     for _ in range(64):
-        mg = _masked_search(_GMAX_MARK, q)
+        mg = sqltext.masked_search(_GMAX_MARK, q)
         if not mg:
             return q
-        masked = _mask_strings(q)
         base, end = 0, len(q)
         p = mg.start()
         while True:
-            op = _enclosing_open(masked, p)
+            op = sqltext.enclosing_open(q, p)
             if op < 0:
                 base = _branch_start(q, mg.start())
                 nx = _next_setop_pos(q, mg.start())
                 end = len(q) if nx < 0 else nx
                 break
-            cl = _find_close(q, op)
+            cl = sqltext.match_bracket(q, op)
             if re.match(r"\s*SELECT\b", q[op + 1:cl], re.IGNORECASE):
                 base, end = op + 1, cl
                 break
@@ -8779,14 +8453,14 @@ def _mxi_fold_sql(a: str, b: str, position: bool) -> str:
 def _mxi_fold_fallback(s: str) -> str:
     """Replace every top-level __CH_MXI[P]__ marker in the span with
     the bounded collect fold (see _mxi_fold_sql)."""
-    masked_s = _mask_strings(s)
+    masked_s = sqltext.mask(s)
     out, last = [], 0
     for m in _MXI_FIND.finditer(masked_s):
         open_p = s.index("(", m.end() - 1)
-        close = _find_close(s, open_p)
+        close = sqltext.match_bracket(s, open_p)
         if close < 0:
             raise ValueError("__CH_MXI__: unbalanced marker")
-        args = _split_args(s[open_p + 1:close])
+        args = sqltext.split_top(s[open_p + 1:close])
         if len(args) != 2:
             raise ValueError("maxIntersections[Position](start, end)")
         out.append(s[last:m.start()])
@@ -8798,7 +8472,7 @@ def _mxi_fold_fallback(s: str) -> str:
 
 def _mxi_rewrite_select(s: str) -> str:
     """Resolve every __CH_MXI[P]__(start, end) marker in THIS select
-    span into the distributed interval sweep (round 14, judge ask #6):
+    span into the distributed interval sweep:
     a derived table over a copy of the span's FROM(+WHERE) segment
     explodes each interval to (+1 at start, −1 at end) LATERAL VIEW
     rows (NULL-argument rows skipped like upstream), takes a running
@@ -8807,23 +8481,22 @@ def _mxi_rewrite_select(s: str) -> str:
     MAX(open) (floored at 0, the fold's seed) and the first sweep
     point attaining it. The result JOINs back null-safely on the
     resolved group keys; the marker becomes MIN() over the joined
-    per-group constant. Per-group state is CONSTANT at any skew — the
-    round-13 COLLECT_LIST fold held the whole group on one executor.
+    per-group constant. Per-group state is CONSTANT at any skew — a
+    COLLECT_LIST fold holds the whole group on one executor.
     Markers in nested SELECTs wait for their own pass. Spans the sweep
     cannot anchor (ROLLUP/CUBE/GROUPING SETS/ALL/positional GROUP BY,
-    FROM-less constants — round-14 review finding: these worked as a
-    plain aggregate in r13) fall back to the bounded collect fold
+    FROM-less constants) fall back to the bounded collect fold
     (_mxi_fold_sql) instead of refusing."""
     try:
         fp, fw_end, keys = _span_from_and_keys(s, "maxIntersections")
     except ValueError:
         return _mxi_fold_fallback(s)
-    masked_s = _mask_strings(s)
+    masked_s = sqltext.mask(s)
     spans: list[tuple[int, int, bool, str, str]] = []
     for m in _MXI_FIND.finditer(masked_s):
         pp, nested = m.start(), False
         while True:
-            op = _enclosing_open(masked_s, pp)
+            op = sqltext.enclosing_open(s, pp)
             if op < 0:
                 break
             if re.match(r"\s*SELECT\b", s[op + 1:], re.IGNORECASE):
@@ -8833,10 +8506,10 @@ def _mxi_rewrite_select(s: str) -> str:
         if nested:
             continue
         open_p = s.index("(", m.end() - 1)
-        close = _find_close(s, open_p)
+        close = sqltext.match_bracket(s, open_p)
         if close < 0:
             raise ValueError("__CH_MXI__: unbalanced marker")
-        args = _split_args(s[open_p + 1:close])
+        args = sqltext.split_top(s[open_p + 1:close])
         if len(args) != 2:
             raise ValueError("maxIntersections[Position](start, end)")
         spans.append((m.start(), close + 1, bool(m.group(1)),
@@ -8845,27 +8518,24 @@ def _mxi_rewrite_select(s: str) -> str:
         raise ValueError("__CH_MXI__: marker resolution did not "
                          "converge (marker outside any select list?)")
     part = _resolve_group_keys(s, fp, keys) if keys else ""
-    key_exprs = _split_args(part) if part else []
+    key_exprs = sqltext.split_top(part)
     # single-relation sources keep their alias visible inside the twin
     # (same contract as _gmax_rewrite_select); JOIN/LATERAL/comma
-    # sources must NOT adopt a trailing lateral/join alias (round-14
-    # review finding) — they wrap as __ch_mxsrc, and qualified keys or
+    # sources must NOT adopt a trailing lateral/join alias — they wrap
+    # as __ch_mxsrc, and qualified keys or
     # marker args that would dangle there refuse with guidance
     rel_seg = s[fp + 4:fw_end]
-    wp_rel = _toplevel_kw_pos(rel_seg,
-                              re.compile(r"\bWHERE\b", re.IGNORECASE))
-    rel_part = (rel_seg if wp_rel < 0 else rel_seg[:wp_rel]).strip()
-    multi_rel = (_toplevel_kw_pos(
-        rel_part, re.compile(r"\b(?:JOIN|LATERAL)\b",
-                             re.IGNORECASE)) >= 0
-        or len(_split_args(rel_part)) > 1)
+    wp_rel = sqltext.search_top(_WHERE_KW, rel_seg)
+    rel_part = (rel_seg[:wp_rel.start()] if wp_rel else rel_seg).strip()
+    multi_rel = (sqltext.search_top(_JOIN_KW, rel_part) is not None
+                 or len(sqltext.split_top(rel_part)) > 1)
     src_alias = ((not multi_rel and _relation_alias(rel_part))
                  or "__ch_mxsrc")
     qual_guard_names: set[str] = set()
     if multi_rel:
         qual_guard_names = {t.upper() for t in
                             re.findall(r"[A-Za-z_]\w*",
-                                       _mask_strings(rel_part))}
+                                       sqltext.mask(rel_part))}
     kin = ", ".join(f"{k} AS __ch_mik{i}"
                     for i, k in enumerate(key_exprs))
     kout = ", ".join(f"__ch_mik{i}" for i in range(len(key_exprs)))
@@ -8906,8 +8576,7 @@ def _mxi_rewrite_select(s: str) -> str:
             # endpoint emits no sweep events and therefore no twin row
             # — an inner join would drop the whole group (and every
             # other select column with it); upstream returns 0 there,
-            # hence the COALESCE on the replacement below (round-14
-            # review finding)
+            # hence the COALESCE on the replacement below
             cond = " AND ".join(
                 f"({k}) <=> __ch_mit{j}.__ch_mik{i}"
                 for i, k in enumerate(key_exprs))
@@ -8938,14 +8607,14 @@ def _mxi_rewrite_select(s: str) -> str:
         # wrap the WHOLE FROM(+WHERE) segment as a derived table and
         # join the twin against that. Any surviving qualified ref
         # (keys, marker args, or the outer select/tail) would dangle:
-        # refuse with guidance (round-14 review finding; same contract
-        # as _gmax_rewrite_select).
+        # refuse with guidance (same contract as
+        # _gmax_rewrite_select).
         outer_txt = (repl(0, fp) + " " + keys + " "
                      + " ".join(f"{a} {b}" for _, _, _, a, b in spans)
                      + " " + repl(fw_end, len(s)))
         quals = {m.group(1) for m in
                  re.finditer(r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_`]",
-                             _mask_strings(outer_txt))
+                             sqltext.mask(outer_txt))
                  if m.group(1).upper() in qual_guard_names}
         if quals:
             raise ValueError(
@@ -8956,32 +8625,31 @@ def _mxi_rewrite_select(s: str) -> str:
                 "or aggregate over a pre-projected derived table")
         return (f"{repl(0, fp)} FROM (SELECT * {s[fp:fw_end]}) "
                 f"__ch_mxout{''.join(joins)} {repl(fw_end, len(s))}")
-    insert_at = (fp + 4 + wp_rel) if wp_rel >= 0 else fw_end
+    insert_at = (fp + 4 + wp_rel.start()) if wp_rel else fw_end
     return (repl(0, insert_at) + "".join(joins) + " "
             + repl(insert_at, len(s)))
 
 
 def _apply_max_intersections(q: str) -> str:
-    """Resolve __CH_MXI[P]__ markers (maxIntersections[Position],
-    round 14) — each marker's select span gets the distributed
+    """Resolve __CH_MXI[P]__ markers (maxIntersections[Position]) —
+    each marker's select span gets the distributed
     interval-sweep twin joined into its FROM. Runs BEFORE
     _apply_group_max so a later group-window wrap sees the final FROM
     segment."""
     for _ in range(16):
-        mg = _masked_search(_MXI_FIND, q)
+        mg = sqltext.masked_search(_MXI_FIND, q)
         if not mg:
             return q
-        masked = _mask_strings(q)
         base, end = 0, len(q)
         p = mg.start()
         while True:
-            op = _enclosing_open(masked, p)
+            op = sqltext.enclosing_open(q, p)
             if op < 0:
                 base = _branch_start(q, mg.start())
                 nx = _next_setop_pos(q, mg.start())
                 end = len(q) if nx < 0 else nx
                 break
-            cl = _find_close(q, op)
+            cl = sqltext.match_bracket(q, op)
             if re.match(r"\s*SELECT\b", q[op + 1:cl], re.IGNORECASE):
                 base, end = op + 1, cl
                 break
@@ -8998,32 +8666,29 @@ def _apply_distinct_on(q: str) -> str:
     per key is arbitrary (same contract as upstream)."""
     pat = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
     for _ in range(32):
-        mm = _masked_search(pat, q)
+        mm = sqltext.masked_search(pat, q)
         if not mm:
             return q
         open_k = q.rindex("(", mm.start(), mm.end())
-        close_k = _find_close(q, open_k)
+        close_k = sqltext.match_bracket(q, open_k)
         if close_k < 0:
             raise ValueError("DISTINCT ON: unbalanced key list")
         keys = q[open_k + 1:close_k].strip()
-        masked = _mask_strings(q)
-        pre = masked[:mm.start()]
-        if pre.count("(") - pre.count(")") == 0:
+        open_p = sqltext.enclosing_open(q, mm.start())
+        if open_p < 0:
             # stop at the next top-level set operator: DISTINCT ON in
             # one UNION branch must not splice its LIMIT 1 BY after the
-            # sibling branches (round-13, same family as the QUALIFY /
-            # LIMIT BY branch fix)
+            # sibling branches
             nx = _next_setop_pos(q, close_k + 1)
             span_end = len(q) if nx < 0 else nx
         else:
-            span_end = _find_close(q, _enclosing_open(masked,
-                                                      mm.start()))
+            span_end = sqltext.match_bracket(q, open_p)
         tail = q[close_k + 1:span_end].strip()
-        lp = _toplevel_kw_pos(
-            tail, re.compile(r"\b(?:LIMIT|OFFSET)\b", re.IGNORECASE))
-        if lp >= 0:
-            new = ("SELECT " + tail[:lp].rstrip()
-                   + f" LIMIT 1 BY {keys} " + tail[lp:])
+        lm = sqltext.search_top(
+            re.compile(r"\b(?:LIMIT|OFFSET)\b", re.IGNORECASE), tail)
+        if lm:
+            new = ("SELECT " + tail[:lm.start()].rstrip()
+                   + f" LIMIT 1 BY {keys} " + tail[lm.start():])
         else:
             new = f"SELECT {tail} LIMIT 1 BY {keys}"
         # the space keeps the splice from gluing the key list onto a
@@ -9032,28 +8697,26 @@ def _apply_distinct_on(q: str) -> str:
     raise ValueError("DISTINCT ON: nesting beyond 32 levels")
 
 
+_LIMIT_BY_HINT = re.compile(r"\bLIMIT\s+\d+(?:\s+OFFSET\s+\d+|,\s*\d+)?"
+                            r"\s+BY\b", re.IGNORECASE)
+
+
 def _apply_limit_by(q: str) -> str:
     """Apply the LIMIT [m,] n BY row_number wrap to every occurrence,
     innermost subquery first (each wraps its OWN span, so derived
-    tables and CTEs carrying LIMIT BY translate correctly). The
-    lightweight HINT pattern locates occurrences anywhere (the full
-    _LIMIT_BY anchors its keys at end-of-text, which only holds once
-    the enclosing span is peeled off by the recursion)."""
-    hint = re.compile(r"\bLIMIT\s+\d+(?:\s+OFFSET\s+\d+|,\s*\d+)?"
-                      r"\s+BY\b", re.IGNORECASE)
+    tables and CTEs carrying LIMIT BY translate correctly)."""
+    return sqltext.rewrite_inside_out(q, _limit_by_spans, _LIMIT_BY_HINT)
+
+
+def _limit_by_spans(q: str) -> str:
+    """The LIMIT BY wrap for each depth-0 occurrence in one span. The
+    light hint pattern locates an occurrence; the full _LIMIT_BY, whose
+    keys run to the end of the text, must match at the same place."""
     for _ in range(32):
-        mh = _masked_search(hint, q)
+        mh = sqltext.search_top(_LIMIT_BY_HINT, q)
         if not mh:
             return q
-        masked = _mask_strings(q)
-        pre = masked[:mh.start()]
-        if pre.count("(") - pre.count(")") > 0:
-            open_p = _enclosing_open(masked, mh.start())
-            close = _find_close(q, open_p)
-            inner = _apply_limit_by(q[open_p + 1:close])
-            q = q[:open_p + 1] + inner + q[close:]
-            continue
-        m = _masked_search(_LIMIT_BY, q)
+        m = sqltext.masked_search(_LIMIT_BY, q)
         if not m or m.start() != mh.start():
             raise ValueError(
                 "LIMIT n BY: could not parse the BY key list (keys "
@@ -9066,18 +8729,16 @@ def _apply_limit_by(q: str) -> str:
         keys = m.group(4).strip()
         rest = q[m.end():].strip()
         # wrap only the current set-operation BRANCH; loop on (don't
-        # return) so later branches' LIMIT BY translate too (round-13
-        # advisor fix)
+        # return) so later branches' LIMIT BY translate too
         bs = _branch_start(q, mh.start())
         prefix = q[:bs]
         body = q[bs:m.start()].strip()
-        op = _toplevel_kw_pos(body,
-                              re.compile(r"\bORDER\s+BY\b",
-                                         re.IGNORECASE))
-        if op >= 0:
-            order_txt = re.sub(r"^\s*ORDER\s+BY\s*", "", body[op:],
+        om = sqltext.search_top(
+            re.compile(r"\bORDER\s+BY\b", re.IGNORECASE), body)
+        if om:
+            order_txt = re.sub(r"^\s*ORDER\s+BY\s*", "", body[om.start():],
                                flags=re.IGNORECASE).strip()
-            body = body[:op].strip()
+            body = body[:om.start()].strip()
             body, (keys, order), hoisted = _wrap_order_rewrite(
                 body, [keys, order_txt])
         else:
@@ -9100,39 +8761,46 @@ def _apply_limit_by(q: str) -> str:
     raise ValueError("LIMIT BY: more than 32 occurrences")
 
 
+_QUALIFY_KW = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
+
+
 def _apply_qualify(q: str) -> str:
     """Rewrite every QUALIFY — top-level or inside a subquery span —
     into the outer-WHERE wrap (innermost first)."""
-    kw = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
+    return sqltext.rewrite_inside_out(q, _qualify_spans, _QUALIFY_KW)
+
+
+def _qualify_spans(q: str) -> str:
+    """The QUALIFY wrap for each depth-0 occurrence in one span."""
     for _ in range(32):
-        mq = _masked_search(kw, q)
+        mq = sqltext.search_top(_QUALIFY_KW, q)
         if not mq:
             return q
-        masked = _mask_strings(q)
-        pre = masked[:mq.start()]
-        if pre.count("(") - pre.count(")") > 0:
-            open_p = _enclosing_open(masked, mq.start())
-            close = _find_close(q, open_p)
-            inner = _apply_qualify(q[open_p + 1:close])
-            q = q[:open_p + 1] + inner + q[close:]
-            continue
         qp = mq.start()
-        # wrap only the current set-operation BRANCH (round-13 advisor
-        # fix): body back to the whole prefix would swallow sibling
-        # UNION branches, and returning here would leave a second
-        # depth-0 QUALIFY in a later branch untranslated
+        # wrap only the current set-operation BRANCH: body back to the
+        # whole prefix would swallow sibling UNION branches, and
+        # returning here would leave a second depth-0 QUALIFY in a
+        # later branch untranslated
         bs = _branch_start(q, qp)
         body, rest = q[bs:qp].rstrip(), q[qp + len("QUALIFY"):]
-        tp = _toplevel_kw_pos(rest, re.compile(
+        tm = sqltext.search_top(re.compile(
             r"\b(?:ORDER\s+BY|LIMIT|OFFSET|SETTINGS|FORMAT|UNION|"
-            r"INTERSECT|EXCEPT)\b", re.IGNORECASE))
-        cond, tail = (rest, "") if tp < 0 else (rest[:tp], rest[tp:])
+            r"INTERSECT|EXCEPT)\b", re.IGNORECASE), rest)
+        cond, tail = ((rest[:tm.start()], rest[tm.start():]) if tm
+                      else (rest, ""))
         if not cond.strip():
             raise ValueError("QUALIFY needs a condition")
         q = (q[:bs] + (" " if bs else "")
              + f"SELECT * FROM ({body}) __ch_qualify "
              f"WHERE {cond.strip()} {tail}")
     raise ValueError("QUALIFY: more than 32 occurrences")
+
+
+_ARRAY_JOIN_KW = re.compile(r"\bARRAY\s+JOIN\b", re.IGNORECASE)
+_ARRAY_JOIN = re.compile(r"\b(LEFT\s+)?ARRAY\s+JOIN\s+(.+?)"
+                         r"(?=\s+WHERE\b|\s+GROUP\s+BY\b|\s+ORDER\s+BY\b|"
+                         r"\s+LIMIT\b|\s+HAVING\b|\s*$)",
+                         re.IGNORECASE | re.DOTALL)
 
 
 def _apply_array_join(q: str) -> str:
@@ -9147,35 +8815,21 @@ def _apply_array_join(q: str) -> str:
                                          the array name mean its element)
     Multi-form items must be PLAIN column names ([AS alias]) — complex
     expressions have no stable arrays_zip field name and are refused.
-    Subquery-recursive since round 12: an ARRAY JOIN inside a derived
-    table rewrites (and substitutes) within its OWN span."""
-    hint = re.compile(r"\bARRAY\s+JOIN\b", re.IGNORECASE)
-    aj_re = re.compile(r"\b(LEFT\s+)?ARRAY\s+JOIN\s+(.+?)"
-                       r"(?=\s+WHERE\b|\s+GROUP\s+BY\b|\s+ORDER\s+BY\b|"
-                       r"\s+LIMIT\b|\s+HAVING\b|\s*$)",
-                       re.IGNORECASE | re.DOTALL)
+    An ARRAY JOIN inside a derived table rewrites (and substitutes)
+    within its OWN span."""
+    return sqltext.rewrite_inside_out(q, _array_join_spans, _ARRAY_JOIN_KW)
+
+
+def _array_join_spans(q: str) -> str:
+    """The ARRAY JOIN rewrite for each depth-0 occurrence in one span."""
     for _ in range(64):
-        # depth check on the keyword HINT only — the items capture of
-        # the full regex is paren-blind, so it may run only once the
-        # enclosing span has been peeled by the recursion
-        mh = _masked_search(hint, q)
-        if not mh:
-            return q
-        masked_q = _mask_strings(q)
-        pre_m = masked_q[:mh.start()]
-        if pre_m.count("(") - pre_m.count(")") > 0:
-            open_p = _enclosing_open(masked_q, mh.start())
-            close = _find_close(q, open_p)
-            inner = _apply_array_join(q[open_p + 1:close])
-            q = q[:open_p + 1] + inner + q[close:]
-            continue
-        m = _masked_search(aj_re, q)
+        m = sqltext.search_top(_ARRAY_JOIN, q)
         if not m:
             return q
         outer = "OUTER " if m.group(1) else ""
         items = [(it, re.match(r"^(.*?)\s+AS\s+(\w+)$", it.strip(),
                                re.IGNORECASE | re.DOTALL))
-                 for it in _split_top_commas(m.group(2))]
+                 for it in sqltext.split_top(m.group(2))]
         parsed = [(mm.group(1).strip(), mm.group(2)) if mm
                   else (it.strip(), None) for it, mm in items]
         subs: dict[str, str] = {}
@@ -9211,10 +8865,12 @@ def _apply_array_join(q: str) -> str:
                 subs[nm] = f"__ch_z.{nm}"
         pre, post = q[:m.start()], q[m.end():]
         for name, target in subs.items():
-            pre = _subst_outside_subqueries(pre, name, target)
-            post = _subst_outside_subqueries(post, name, target)
+            pre = sqltext.subst_ident(pre, name, target,
+                                      outside_subqueries=True)
+            post = sqltext.subst_ident(post, name, target,
+                                       outside_subqueries=True)
         q = f"{pre}{repl}{post}"
-    raise ValueError("ARRAY JOIN: nesting beyond 64 levels")
+    raise ValueError("ARRAY JOIN: more than 64 occurrences")
 
 
 def _register_udfs(spark: SparkSession) -> None:
@@ -9307,10 +8963,11 @@ def _register_file_views(spark: SparkSession, sql: str) -> str:
         r.format(src).load(path).createOrReplaceTempView(name)
         return name
 
-    out = _masked_sub(pat, repl, sql)
+    out = sqltext.masked_sub(pat, repl, sql)
     # network-backed table functions are environment-gated, loudly
     for fn in ("url", "s3", "hdfs", "remote", "mysql", "postgresql"):
-        if _masked_search(re.compile(rf"\b{fn}\(\s*'", re.IGNORECASE), out):
+        if sqltext.masked_search(
+                re.compile(rf"\b{fn}\(\s*'", re.IGNORECASE), out):
             raise NotImplementedError(
                 f"{fn}() needs network/connector access absent from this "
                 "environment; file() covers local data, and the same "
@@ -9488,7 +9145,7 @@ def _try_projection_route(spark: SparkSession, sql: str):
     from clickhouse_clickhouse_spark.plans.summary import _merge
 
     text = sql.strip().rstrip(";")
-    if _masked_search(_PROJ_BLOCKERS, text):
+    if sqltext.masked_search(_PROJ_BLOCKERS, text):
         return None
     m = _PROJ_SELECT_RE.match(text)
     if not m:
@@ -9501,7 +9158,7 @@ def _try_projection_route(spark: SparkSession, sql: str):
     if any(not re.fullmatch(r"\w+", g) for g in group_keys):
         return None
     parsed = [_parse_proj_item(i)
-              for i in _split_top_commas(m.group("items"))]
+              for i in sqltext.split_top(m.group("items"))]
     if any(p is None for p in parsed):
         return None
     sel_keys = [p[1] for p in parsed if p[0] == "key"]
@@ -9520,7 +9177,7 @@ def _try_projection_route(spark: SparkSession, sql: str):
             # literals are masked so their contents don't read as
             # identifiers
             idents = {i.lower() for i in
-                      re.findall(r"[A-Za-z_]\w*", _mask_strings(cond))}
+                      re.findall(r"[A-Za-z_]\w*", sqltext.mask(cond))}
             if not idents <= {k.lower() for k in s.keys} | \
                     {"and", "or", "not", "in", "between", "like"}:
                 continue
@@ -9553,7 +9210,7 @@ def _try_projection_route(spark: SparkSession, sql: str):
                 # filter evaluates on the routed frame; anything else
                 # falls back to the translated path
                 idents = {i.lower() for i in
-                          re.findall(r"[A-Za-z_]\w*", _mask_strings(hv))}
+                          re.findall(r"[A-Za-z_]\w*", sqltext.mask(hv))}
                 if not idents <= {c.lower() for c in order} | \
                         {"and", "or", "not", "in", "between", "like",
                          "is", "null"}:
@@ -9606,23 +9263,6 @@ _ASOF_OPS = {">=": ("backward", False), ">": ("backward", True),
 _FLIP = {">=": "<=", "<=": ">=", ">": "<", "<": ">", "=": "="}
 
 
-def _split_top_and(s: str) -> list[str]:
-    """Split on word-boundary AND at paren depth 0, outside literals."""
-    mask = _mask_strings(s)
-    parts, last, depth = [], 0, 0
-    for m in re.finditer(r"[()]|\bAND\b", mask, re.IGNORECASE):
-        t = m.group(0)
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            parts.append(s[last:m.start()])
-            last = m.end()
-    parts.append(s[last:])
-    return [p for p in (x.strip() for x in parts) if p]
-
-
 # FINAL/SAMPLE are modifiers, not aliases: swallowing them as an alias
 # would silently skip dedup-on-read semantics — leaving them unparsed
 # makes the scanner bail so translate() refuses LOUDLY instead
@@ -9638,7 +9278,7 @@ def _parse_rel(q: str, i: int):
     while i < n and q[i].isspace():
         i += 1
     if i < n and q[i] == "(":
-        j = _find_close(q, i)
+        j = sqltext.match_bracket(q, i)
         if j < 0:
             return None
         expr, k, is_sub = q[i + 1:j], j + 1, True
@@ -9654,20 +9294,6 @@ def _parse_rel(q: str, i: int):
     return expr, is_sub, alias, k
 
 
-def _depth0_search(mask: str, pattern: str, start: int = 0):
-    """First match of ``pattern`` at paren depth 0 in masked text."""
-    depth = 0
-    for m in re.finditer(rf"[()]|{pattern}", mask[start:], re.IGNORECASE):
-        t = m.group(0)
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            return start + m.start(), start + m.end(), m
-    return None
-
-
 _STRICT_VIEW_SEQ = itertools.count()
 
 
@@ -9681,22 +9307,23 @@ def _try_strictness_join(spark: SparkSession, sql: str, final_keys):
     q = sql.strip().rstrip(";")
     # GLOBAL is distribution advice, not semantics (same strip as
     # translate()): GLOBAL ANY JOIN == ANY JOIN here
-    q = _masked_sub(re.compile(r"\bGLOBAL\s+(?=ANY\b|ASOF\b)",
-                               re.IGNORECASE), lambda _m: "", q)
-    mask = _mask_strings(q)
-    jk = _depth0_search(
-        mask, r"\b(ANY|ASOF)\s+(?:(?:LEFT|RIGHT|INNER|OUTER)\s+)*JOIN\b")
-    if jk is None:
+    q = sqltext.masked_sub(re.compile(r"\bGLOBAL\s+(?=ANY\b|ASOF\b)",
+                                      re.IGNORECASE), lambda _m: "", q)
+    mask = sqltext.mask(q)
+    jm = sqltext.search_top(re.compile(
+        r"\b(ANY|ASOF)\s+(?:(?:LEFT|RIGHT|INNER|OUTER)\s+)*JOIN\b",
+        re.IGNORECASE), q)
+    if jm is None:
         return None
-    j_start, j_end, jm = jk
+    j_start, j_end = jm.start(), jm.end()
     pm = re.match(r"\s*SELECT\s+", mask, re.IGNORECASE)
     if not pm:
         return None
-    fm = _depth0_search(mask, r"\bFROM\b", pm.end())
-    if fm is None or fm[0] > j_start:
+    fm = sqltext.search_top(_FROM_KW, q, pm.end())
+    if fm is None or fm.start() > j_start:
         return None
-    sel = q[pm.end():fm[0]].strip()
-    lp = _parse_rel(q, fm[1])
+    sel = q[pm.end():fm.start()].strip()
+    lp = _parse_rel(q, fm.end())
     if lp is None:
         return None
     lexpr, lsub, la_raw, k = lp
@@ -9713,13 +9340,12 @@ def _try_strictness_join(spark: SparkSession, sql: str, final_keys):
     # JOIN — the remaining joins re-run over the flattened strictness
     # result (SELECT ... FROM __ch_strict_join LEFT JOIN c ...), so
     # mixed-join chains translate too
-    rm = _depth0_search(
-        mask,
+    rm = sqltext.search_top(re.compile(
         r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT"
         r"|(?:ANY|ASOF|PASTE|GLOBAL|LEFT|RIGHT|INNER|FULL|CROSS)\s+"
         r"(?:(?:ANY|ASOF|LEFT|RIGHT|INNER|OUTER)\s+)*JOIN|JOIN)\b",
-        om.end())
-    cond_end = rm[0] if rm else len(q)
+        re.IGNORECASE), q, om.end())
+    cond_end = rm.start() if rm else len(q)
     cond_text = q[om.end():cond_end].strip()
     rest = (" " + q[cond_end:].strip()) if rm else ""
 
@@ -9767,7 +9393,7 @@ def _try_strictness_join(spark: SparkSession, sql: str, final_keys):
         else:
             keys = cols
     else:
-        for cond in _split_top_and(cond_text):
+        for cond in filter(None, sqltext.split_top(cond_text, "AND")):
             cm = _ON_COND_RE.match(cond.strip())
             if not cm:
                 raise ValueError(
@@ -9797,8 +9423,8 @@ def _try_strictness_join(spark: SparkSession, sql: str, final_keys):
     for src, dst in renames.items():
         right = right.withColumnRenamed(src, dst)
     # same-named payload columns on BOTH sides would collide in the flat
-    # joined view (round-6 review: `p.value, c.value` raised
-    # AMBIGUOUS_REFERENCE): prefix the build side's copy and map
+    # joined view (`p.value, c.value` raised AMBIGUOUS_REFERENCE):
+    # prefix the build side's copy and map
     # `ra.col` references onto it below
     asof_ts_name = ineq[1] if (kind == "ASOF" and ineq) else None
     col_map: dict[str, str] = {}
@@ -9846,28 +9472,28 @@ def _try_strictness_join(spark: SparkSession, sql: str, final_keys):
         # the matched right-side timestamp surfaces as asof_<col>
         ts_ref = re.compile(rf"\b{re.escape(ra)}\.{re.escape(plain)}\b",
                             re.IGNORECASE)
-        sel = _masked_sub(ts_ref, lambda _m: f"asof_{plain}", sel)
-        rest = _masked_sub(ts_ref, lambda _m: f"asof_{plain}", rest)
+        sel = sqltext.masked_sub(ts_ref, lambda _m: f"asof_{plain}", sel)
+        rest = sqltext.masked_sub(ts_ref, lambda _m: f"asof_{plain}", rest)
     # ON a.k1 = b.k2 renamed the right key to the left name — remap
     # `ra.k2` references onto the (view-qualified) joined key so SELECT/
     # WHERE written against the original right name still resolve
     for src, dst in renames.items():
         ref = re.compile(rf"\b{re.escape(ra)}\.{re.escape(src)}\b",
                          re.IGNORECASE)
-        sel = _masked_sub(ref, lambda _m, n=dst: f"{view}.{n}", sel)
-        rest = _masked_sub(ref, lambda _m, n=dst: f"{view}.{n}", rest)
+        sel = sqltext.masked_sub(ref, lambda _m, n=dst: f"{view}.{n}", sel)
+        rest = sqltext.masked_sub(ref, lambda _m, n=dst: f"{view}.{n}", rest)
     for orig, new in col_map.items():
         ref = re.compile(rf"\b{re.escape(ra)}\.{re.escape(orig)}\b",
                          re.IGNORECASE)
-        sel = _masked_sub(ref, lambda _m, n=new: n, sel)
-        rest = _masked_sub(ref, lambda _m, n=new: n, rest)
+        sel = sqltext.masked_sub(ref, lambda _m, n=new: n, sel)
+        rest = sqltext.masked_sub(ref, lambda _m, n=new: n, rest)
     # re-qualify side aliases to the flat joined view (a bare strip
     # would turn `l.k` into an AMBIGUOUS `k` when trailing plain joins
     # bring their own `k`)
     strip = re.compile(rf"\b({re.escape(la)}|{re.escape(ra)})\.",
                        re.IGNORECASE)
-    sel = _masked_sub(strip, lambda _m: f"{view}.", sel)
-    rest = _masked_sub(strip, lambda _m: f"{view}.", rest)
+    sel = sqltext.masked_sub(strip, lambda _m: f"{view}.", sel)
+    rest = sqltext.masked_sub(strip, lambda _m: f"{view}.", rest)
     try:
         return ch_sql(spark, f"SELECT {sel} FROM {view}{rest}",
                       final_keys=final_keys)
@@ -9927,7 +9553,7 @@ def substitute_params(sql: str, params: dict | None) -> str:
                              "(pass params={...})")
         return _render_param(params[name], ctype)
 
-    return _masked_sub(_PARAM_RE, one, sql)
+    return sqltext.masked_sub(_PARAM_RE, one, sql)
 
 
 _STAR_TRANSFORM_RE = re.compile(
@@ -9944,7 +9570,7 @@ def _try_star_transformers(spark: SparkSession, sql: str, final_keys):
     REPLACE/APPLY expressions then translate through the normal path.
     Top-level single-SELECT form; transformers chain left-to-right."""
     s = sql.strip().rstrip(";")
-    masked = _mask_strings(s)
+    masked = sqltext.mask(s)
     mm = _STAR_TRANSFORM_RE.match(masked)
     if not mm:
         return None
@@ -9959,7 +9585,7 @@ def _try_star_transformers(spark: SparkSession, sql: str, final_keys):
             break
         op = km.group(1).upper()
         open_p = i + km.end() - 1
-        close = _find_close(s, open_p)
+        close = sqltext.match_bracket(s, open_p)
         if close < 0:
             raise ValueError(f"* {op}: unbalanced parentheses")
         chain.append((op, s[open_p + 1:close]))
@@ -9984,7 +9610,7 @@ def _try_star_transformers(spark: SparkSession, sql: str, final_keys):
             sel_cols = [(n, e) for n, e in sel_cols if n not in drop]
         elif op == "REPLACE":
             repl = {}
-            for part in _split_args(body):
+            for part in sqltext.split_top(body):
                 rm = re.match(r"(?s)^\s*(.*?)\s+AS\s+`?(\w+)`?\s*$",
                               part)
                 if not rm:
@@ -10027,7 +9653,7 @@ def ch_sql(spark: SparkSession, sql: str,
 
     ``params``: ``{name:Type}`` query parameters, substituted as typed
     literals before translation."""
-    if params is not None or _masked_search(_PARAM_RE, sql):
+    if params is not None or sqltext.masked_search(_PARAM_RE, sql):
         sql = substitute_params(sql, params)
     _register_udfs(spark)
     _register_system_views(spark, sql)
@@ -10048,7 +9674,7 @@ def ch_sql(spark: SparkSession, sql: str,
     joined = _try_strictness_join(spark, sql, final_keys)
     if joined is not None:
         return joined
-    m = _masked_search(_LIMIT_TIES_RE, sql.strip().rstrip(";"))
+    m = sqltext.masked_search(_LIMIT_TIES_RE, sql.strip().rstrip(";"))
     if m:
         from clickhouse_clickhouse_spark.operators.windows import (
             _sort_cols,
@@ -10061,7 +9687,7 @@ def ch_sql(spark: SparkSession, sql: str,
         out = limit_with_ties(inner, int(m.group(2)), spec)
         # re-apply the presentation order the stripped clause asked for
         return out.orderBy(*_sort_cols(spec))
-    m = _masked_search(_WITH_FILL_RE, sql.strip().rstrip(";"))
+    m = sqltext.masked_search(_WITH_FILL_RE, sql.strip().rstrip(";"))
     if m:
         from clickhouse_clickhouse_spark.operators.fill import (
             with_fill_bounds,
@@ -10191,7 +9817,7 @@ def _mv_fire(spark: SparkSession, source: str, block: DataFrame,
         # identifier-aware substitution: never rewrites matches inside
         # string literals or quoted text (a blind re.sub corrupted
         # transforms whose literals contained the source table's name)
-        body = _subst_ident_nocase(tsql, source, block_view)
+        body = sqltext.subst_ident(tsql, source, block_view, nocase=True)
         out = spark.sql(body)
         append_to_view(spark, target, out,
                        _seen=_seen | {mv_name})
@@ -10610,9 +10236,10 @@ def _key_list(expr: str | None) -> list[str]:
     if not expr:
         return []
     expr = expr.strip()
-    if expr.startswith("(") and expr.endswith(")"):
+    if expr.startswith("(") and \
+            sqltext.match_bracket(expr, 0) == len(expr) - 1:
         expr = expr[1:-1]
-    return [e.strip() for e in _split_top_commas(expr) if e.strip()]
+    return [e for e in sqltext.split_top(expr) if e]
 
 
 def ch_create_table(spark: SparkSession, sql: str) -> TableSpec:
@@ -10693,7 +10320,9 @@ def ch_statement(spark: SparkSession, sql: str,
         )
 
         settings = {}
-        for item in _split_top_commas(sql.strip()[3:].rstrip(";")):
+        for item in sqltext.split_top(sql.strip()[3:].rstrip(";")):
+            if not item:
+                continue
             name, _, val = item.partition("=")
             settings[name.strip()] = val.strip().strip("'\"")
         applied = apply_ch_settings(spark, settings)
@@ -10758,7 +10387,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 raise ValueError("CREATE DICTIONARY: SOURCE(CLICKHOUSE("
                                  "TABLE 'name')) is the supported form")
             col_texts = [c.strip()
-                         for c in _split_top_commas(dm.group("cols"))
+                         for c in sqltext.split_top(dm.group("cols"))
                          if c.strip()]
             cols = [re.match(r"`?(\w+)`?", c).group(1)
                     for c in col_texts]
@@ -10864,8 +10493,8 @@ def ch_statement(spark: SparkSession, sql: str,
             q = mvm.group("q").strip()
             target = mvm.group("to") or mv
             populate = mvm.group("pop") is not None
-            fm = _masked_search(re.compile(r"\bFROM\s+(\w+)",
-                                           re.IGNORECASE), q)
+            fm = sqltext.masked_search(
+                re.compile(r"\bFROM\s+(\w+)", re.IGNORECASE), q)
             if not fm:
                 raise ValueError("materialized view query needs a FROM "
                                  "table to attach the insert trigger to")
@@ -10966,7 +10595,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if rest.startswith("("):
             # DESCRIBE TABLE (SELECT ...) — subquery schema ([U]
             # InterpreterDescribeQuery.cpp); LIMIT 0 keeps it plan-only
-            close = _find_close(rest, 0)
+            close = sqltext.match_bracket(rest, 0)
             body = translate(rest[1:close])
             t = spark.sql(f"SELECT * FROM ({body}) __dq LIMIT 0")
         else:
@@ -11146,7 +10775,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if om:
             cond = _rewrite_calls(om.group(2))
             out = base
-            for assign in _split_top_commas(om.group(1)):
+            for assign in sqltext.split_top(om.group(1)):
                 col, expr = assign.split("=", 1)
                 col = col.strip()
                 expr = _rewrite_calls(expr.strip())
@@ -11170,7 +10799,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 raise ValueError("projection GROUP BY must list bare "
                                  "columns")
             measures: dict[str, tuple[str, str]] = {}
-            for item in _split_top_commas(om.group(2)):
+            for item in sqltext.split_top(om.group(2)):
                 p = _parse_proj_item(item)
                 if p is None:
                     raise ValueError(
@@ -11275,7 +10904,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if not mm:
             raise ValueError("unsupported RENAME statement")
         moved = []
-        for pair in _split_top_commas(mm.group(1)):
+        for pair in sqltext.split_top(mm.group(1)):
             pm = re.match(r"(\w+)\s+TO\s+(\w+)$", pair.strip(),
                           re.IGNORECASE)
             if not pm:

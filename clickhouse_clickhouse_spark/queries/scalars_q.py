@@ -2611,8 +2611,8 @@ def ch_sql_empty_set_defaults(spark, sf):
     """Round-11 verdict item 5: upstream no-GROUP-BY aggregates over an
     empty set return type defaults (sum -> 0, uniq -> 0, avg -> nan
     Float64), not ANSI NULL ([U] aggregate-function empty-set
-    semantics). ch_compat COALESCE wrap, scalar non-window positions
-    only (CH_COMPAT_EMPTY_SET_DEFAULTS). The oracle IS the literal
+    semantics). COALESCE wrap, scalar non-window positions only
+    (ch_sql._empty_set_defaults_pass). The oracle IS the literal
     upstream defaults — DuckDB itself returns NULLs here, so agreement
     can only come from the compat wrap."""
     from clickhouse_clickhouse_spark.ch_sql import ch_sql

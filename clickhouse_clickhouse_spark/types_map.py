@@ -14,6 +14,8 @@ import re
 
 from pyspark.sql import types as T
 
+from clickhouse_clickhouse_spark import sqltext
+
 _SIMPLE: dict[str, T.DataType] = {
     "Int8": T.ByteType(), "Int16": T.ShortType(), "Int32": T.IntegerType(),
     "Int64": T.LongType(),
@@ -59,18 +61,18 @@ def parse_ch_type(s: str,
         return parse_ch_type(inner, u64)
     if head == "SimpleAggregateFunction":
         # SimpleAggregateFunction(f, T) stores plain T (§1.2)
-        return parse_ch_type(_split_args(inner)[-1], u64)
+        return parse_ch_type(sqltext.split_top(inner)[-1], u64)
     if head == "Array":
         dt, null = parse_ch_type(inner, u64)
         return T.ArrayType(dt, containsNull=null), False
     if head == "Map":
-        k, v = _split_args(inner)
+        k, v = sqltext.split_top(inner)
         kt, _ = parse_ch_type(k, u64)
         vt, vnull = parse_ch_type(v, u64)
         return T.MapType(kt, vt, valueContainsNull=vnull), False
     if head == "Tuple":
         fields = []
-        for i, part in enumerate(_split_args(inner)):
+        for i, part in enumerate(sqltext.split_top(inner)):
             nm = re.match(r"^(\w+)\s+(.+)$", part.strip(), re.DOTALL)
             if nm and not re.match(r"^(\w+)\s*\(", part.strip()):
                 name, typ = nm.group(1), nm.group(2)
@@ -83,7 +85,7 @@ def parse_ch_type(s: str,
         inner_struct, _ = parse_ch_type(f"Tuple({inner})", u64)
         return T.ArrayType(inner_struct, containsNull=False), False
     if head == "Decimal":
-        p, sc = [int(x) for x in _split_args(inner)]
+        p, sc = [int(x) for x in sqltext.split_top(inner)]
         if p > 38:
             raise ValueError(f"Decimal precision {p} > 38 unsupported (documented)")
         return T.DecimalType(p, sc), False
@@ -108,7 +110,7 @@ def parse_ch_type(s: str,
         # so `INSERT ... SELECT fState(x)` lands in a column that
         # `fMerge(col)` reads back in a later statement. Parameters
         # (quantile(0.9)) don't change the state type.
-        parts = _split_args(inner)
+        parts = sqltext.split_top(inner)
         fm = re.match(r"^\s*(\w+)", parts[0])
         if not fm:
             raise ValueError(f"unsupported reference type: {s!r}")
@@ -168,31 +170,13 @@ def _agg_state_type(fname: str, argts: list[T.DataType],
         "other bases (SURVEY.md §4.3 item 1)")
 
 
-def _split_args(s: str) -> list[str]:
-    """Split on top-level commas (respects nested parens)."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
 def ch_schema_to_struct(ddl: str,
                         uint64_as_decimal: bool = False) -> T.StructType:
     """Map a reference DDL column list (``name Type, name Type, ...``) to
     a Spark StructType. ``uint64_as_decimal`` threads through to
     :func:`parse_ch_type`."""
     fields = []
-    for part in _split_args(ddl):
+    for part in sqltext.split_top(sqltext.strip_comments(ddl)):
         part = part.strip()
         if not part:
             continue

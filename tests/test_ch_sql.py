@@ -3707,8 +3707,8 @@ def test_round11_advice_fixes(spark):
 
 
 def test_round11_empty_set_defaults(spark):
-    """ch_compat empty-set defaults (CH_COMPAT_EMPTY_SET_DEFAULTS,
-    default on): scalar no-GROUP-BY sum/uniq -> 0 and avg -> nan over
+    """Empty-set defaults (ch_sql._empty_set_defaults_pass, always
+    applied): scalar no-GROUP-BY sum/uniq -> 0 and avg -> nan over
     an empty set, per upstream type-default semantics; grouped and
     window scopes untouched (grouped empty set -> zero rows); the wrap
     is translate-idempotent."""

@@ -36,6 +36,8 @@ DECOYS = [
     ")) HAVING ((",
     "O''Reilly ORDER BY",          # embedded escaped quote
     "back\\\\slash LIMIT 2 BY",
+    "it\\'s ORDER BY",              # backslash-escaped quote
+    "x\\' LIMIT 3 BY k",
 ]
 
 
@@ -52,6 +54,11 @@ def chaos_view(spark):
 
 def _lit(s: str) -> str:
     return "'" + s + "'"
+
+
+def _value(s: str) -> str:
+    """The string a decoy literal evaluates to."""
+    return s.replace("''", "'").replace("\\\\", "\\").replace("\\'", "'")
 
 
 def test_decoy_literals_survive_translation():
@@ -77,8 +84,7 @@ def test_decoys_with_real_limit_by(spark, chaos_view):
             ORDER BY v LIMIT 1 BY k""").collect()
         assert sorted((r.k, r.v) for r in rows) == \
             [(1, "a"), (2, "c"), (3, "e")], d
-        want = d.replace("''", "'").replace("\\\\", "\\")
-        assert all(r.decoy == want for r in rows), d
+        assert all(r.decoy == _value(d) for r in rows), d
 
 
 def test_decoys_with_real_qualify(spark, chaos_view):
@@ -132,8 +138,7 @@ def test_decoys_inside_sql_udf_arguments(spark, chaos_view):
             row = ch_sql(spark, f"""
                 SELECT chaos_tag13({_lit(d)}, v) AS tagged
                 FROM {chaos_view} WHERE k = 3""").collect()[0]
-            want = d.replace("''", "'").replace("\\\\", "\\") + "|e"
-            assert row.tagged == want, d
+            assert row.tagged == _value(d) + "|e", d
     finally:
         ch_statement(spark, "DROP FUNCTION chaos_tag13")
 
@@ -151,3 +156,52 @@ def test_decoy_as_ema_adjacent_literal(spark, chaos_view):
         GROUP BY k ORDER BY k""").collect()
     assert [r.decoy for r in rows] == ["__CH_GMAX__(t)"] * 3
     assert rows[2].ema == 40.0  # single-point group: ema == value
+
+
+# Tokens that hide a quote character: each must stay opaque, or the
+# quote inside reads as the start of a literal and every clause after
+# it goes untranslated.
+OPAQUE_LEADS = [
+    "'it\\'s' AS s, ",
+    "-- don't\n",
+    "/* it's */ ",
+    "\"it's\" AS s, ",
+    "v AS `it's`, ",
+]
+
+
+@pytest.mark.parametrize("lead", OPAQUE_LEADS)
+@pytest.mark.parametrize("tail,want", [
+    ("arr[1] AS r FROM chaos_t WHERE v = 'c'", [30]),
+    ("lengthUTF8(v) + arr[1] AS r FROM chaos_t WHERE k = 3", [41]),
+    ("toStartOfMonth(DATE '2024-05-17') AS r FROM chaos_t WHERE k = 3 "
+     "LIMIT 0, 5", ["2024-05-01 00:00:00"]),
+    ("k AS r FROM chaos_t ORDER BY k LIMIT 0, 1", [1]),
+    ("k AS r FROM chaos_t ORDER BY v LIMIT 1 BY k", [1, 2, 3]),
+    ("k AS r FROM chaos_t PREWHERE k = 2 WHERE v = 'c'", [2]),
+    ("k AS r FROM chaos_t WHERE k = 3 SETTINGS max_threads = 1", [3]),
+])
+def test_rewrites_after_opaque_token(spark, chaos_view, lead, tail, want):
+    from clickhouse_clickhouse_spark.ch_sql import ch_sql
+
+    rows = ch_sql(spark, f"SELECT {lead}{tail}").collect()
+    assert sorted(str(r.r) for r in rows) == [str(w) for w in want]
+
+
+def test_string_param_with_quote_keeps_subscripts(spark, chaos_view):
+    """substitute_params renders it's as 'it\\'s'; the rest of the
+    query must still translate."""
+    from clickhouse_clickhouse_spark.ch_sql import ch_sql
+
+    row = ch_sql(spark, f"""
+        SELECT {{v:String}} AS v, arr[1] AS e
+        FROM {chaos_view} WHERE v = 'c'""", params={"v": "it's"}).collect()[0]
+    assert (row.v, row.e) == ("it's", 30)
+
+
+def test_literal_next_to_escaped_quote_is_untouched():
+    from clickhouse_clickhouse_spark.ch_sql import translate
+
+    out = translate("SELECT 'a\\'b' AS s, 'version 1.5' AS v, 1.5 AS f")
+    assert "'a\\'b'" in out and "'version 1.5'" in out, out
+    assert "1.5D AS f" in out, out

@@ -310,6 +310,35 @@ def test_kernel_batteries_evaluate_in_one_python_node(spark, sf_dir):
         assert plan.count("ArrowEvalPython") == 1, (name, plan)
 
 
+def test_url_param_regex_has_one_evaluation_site(spark, sf_dir):
+    """The ``cb_url`` twins group on a ``regexp_extract`` bucket and drop
+    the NULL bucket after the aggregate, behind the count-output
+    barrier: a filter on the bucket itself is pushed below the
+    aggregate and evaluates the regex a second time per row. At most
+    one node of the optimized plan may carry ``regexp_extract``."""
+    for name in ("cb_url_query_param_buckets",
+                 "cb_url_query_param_buckets_fast"):
+        df = all_queries()[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        sites = [ln for ln in plan.splitlines() if "regexp_extract" in ln]
+        assert len(sites) <= 1, (name, plan)
+
+
+def test_curves_projection_is_whole_stage_codegen(spark, sf_dir):
+    """The projection over the curves battery's kernel outputs must fuse
+    into a whole-stage codegen stage (the "*(n)" prefix); a
+    CodegenFallback expression in it drops it to the interpreted path.
+    Whole-stage codegen is switched on for this plan only, as in
+    test_wholestage_codegen_everywhere_simple."""
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    try:
+        plan = _plan(spark, "ch_sql_round10_curves", sf_dir)
+    finally:
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    assert re.search(r"^[\s+\-:|]*\*\(\d+\) Project \[.*pythonUDF", plan,
+                     re.MULTILINE), plan
+
+
 def test_json_prop_bucket_filter_stays_above_the_aggregate(spark, sf_dir):
     """``cb_json_prop_buckets`` filters on ``WHEN n >= 0 THEN k_bucket END
     IS NOT NULL``: referencing the aggregate's count keeps Catalyst from

@@ -86,3 +86,22 @@ def test_schema_ddl_roundtrip(spark):
     assert df.schema == schema
     assert [f.name for f in schema] == ["id", "name", "tags", "price", "ts", "props"]
     assert schema["name"].nullable and not schema["id"].nullable
+
+
+def test_enum_labels_with_bracket_and_comma_keep_later_columns(spark):
+    """Enum labels are string literals: a '(' or ',' inside one must not
+    end the column list split (it dropped every column after ``e``)."""
+    from clickhouse_clickhouse_spark.ch_sql import ch_statement
+
+    ch_statement(spark, "DROP TABLE IF EXISTS tm_enum_t")
+    ch_statement(spark, "CREATE TABLE tm_enum_t (e Enum8('a(' = 1, "
+                        "'b,c' = 2), x Int32) ENGINE = Memory")
+    rows = ch_statement(spark, "DESCRIBE tm_enum_t").collect()
+    assert [r[0] for r in rows] == ["e", "x"]
+    ch_statement(spark, "DROP TABLE tm_enum_t")
+
+
+def test_schema_ddl_comments_are_whitespace():
+    schema = ch_schema_to_struct(
+        "x Int32, -- the key, really\n y String /* a, b */")
+    assert [f.name for f in schema] == ["x", "y"]
