@@ -9733,12 +9733,12 @@ def ch_insert(spark: SparkSession, sql: str,
     lines, or a list of line strings — the clickhouse-client contract,
     where FORMAT data follows the statement).
 
-    Returns the typed rows to insert, parsed DISTRIBUTED via the format
-    parsers in ``sources/render.py`` and cast against the target table's
-    catalog schema. The caller appends them (``append_to_view`` for temp
-    views, ``.write.insertInto`` for warehouse tables) — same separation
-    as the reference's parse-then-squash insert pipeline (upstream
-    src/Interpreters/InterpreterInsertQuery.cpp)."""
+    Returns the typed rows to insert, parsed by the format parsers in
+    ``sources/render.py`` and cast against the target table's catalog
+    schema; Spark folds the parse of a driver-side payload into a
+    ``LocalRelation``. The caller appends them (``insert_into_table``) —
+    same separation as the reference's parse-then-squash insert pipeline
+    (upstream src/Interpreters/InterpreterInsertQuery.cpp)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -9763,9 +9763,11 @@ def ch_insert(spark: SparkSession, sql: str,
                 f"INSERT SELECT arity mismatch: query returns "
                 f"{len(rows.columns)} columns, target expects "
                 f"{len(schema.fields)}")
-        out = [rows[rows.columns[i]].cast(f.dataType).alias(f.name)
-               for i, f in enumerate(schema.fields)]
-        return rows.select(*out)
+        # rename by position first: two SELECT items may share a name
+        # (`SELECT id, 0, 0`), which a lookup by name cannot tell apart
+        rows = rows.toDF(*schema.fieldNames())
+        return rows.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                             for f in schema.fields])
     if m.group("values"):
         # Evaluate through Spark's own VALUES clause (after CH function
         # renames), so tuples may contain EXPRESSIONS — toDate('...'),
@@ -9804,7 +9806,7 @@ def ch_insert(spark: SparkSession, sql: str,
 # an INSERT trigger — it transforms each INSERTED BLOCK (never history)
 # and appends the result to its target table. The triggers live in the
 # session's EngineState.matviews. Cascades compose because the target
-# append re-enters append_to_view; a visited set breaks accidental
+# append re-enters insert_into_table; a visited set breaks accidental
 # cycles.
 def _mv_fire(spark: SparkSession, source: str, block: DataFrame,
              _seen: frozenset) -> None:
@@ -10158,43 +10160,19 @@ def _block_hash(rows: DataFrame) -> int:
 def append_to_view(spark: SparkSession, view: str,
                    rows: DataFrame,
                    _seen: frozenset = frozenset()) -> DataFrame:
-    """Append parsed rows to a temp view (the Memory-engine insert path):
-    union by name with null-fill for omitted columns, re-register — then
-    fire any materialized views registered on this table with the
-    inserted block (reference semantics: the MV transform sees ONLY the
-    new block, not history).
+    """Append parsed rows to table ``view`` through ``insert_into_table``
+    (under the table's recorded DDL; a plain temp view inserts as a
+    Memory table) and return the table."""
+    spec = _sink_spec(spark, view)
+    insert_into_table(spark, spec, rows, spec.path, _seen)
+    return spark.table(view)
 
-    With ``SET insert_deduplicate = 1`` (reference replicated-table
-    retry protection), a block whose content checksum matches one of the
-    view's last 100 inserted blocks is silently skipped — the idempotent
-    client-retry contract.
 
-    Registered projections are maintained INCREMENTALLY on insert — the
-    block's partial states append to the summary (upstream: each
-    inserted part writes its own projection part); only rewriting
-    mutations (UPDATE/DELETE/column DDL) invalidate."""
-    from clickhouse_clickhouse_spark.plans.summary import append_block
-
-    st = engine_state(spark)
-    if spark.conf.get(
-            "spark.clickhouse_clickhouse_spark.insertDeduplicate",
-            "false") == "true":
-        key = view.lower()
-        h = _block_hash(rows)
-        seen_hashes = st.block_hashes.setdefault(key, [])
-        if h in seen_hashes:
-            return spark.table(view)
-        seen_hashes.append(h)
-        del seen_hashes[:-_DEDUP_WINDOW]
-    for s in list(st.projections_for(view).values()):
-        append_block(s, rows)
-    base = spark.table(view)
-    # materialize the union so the block's lineage (and its __mv_block
-    # temp view) isn't re-read after later re-registrations
-    out = base.unionByName(rows, allowMissingColumns=True)
-    out.createOrReplaceTempView(view)
-    _mv_fire(spark, view, rows, _seen)
-    return out
+def _sink_spec(spark: SparkSession, table: str) -> "TableSpec":
+    """The recorded DDL of ``table``; a temp view created without one
+    (``createOrReplaceTempView``) is a Memory table."""
+    return engine_state(spark).spec(table) or \
+        TableSpec(table, None, "Memory", [], [])
 
 
 # -------------------------------------------------------------- CREATE TABLE
@@ -10274,23 +10252,93 @@ def ch_create_table(spark: SparkSession, sql: str) -> TableSpec:
 
 
 def insert_into_table(spark: SparkSession, spec: TableSpec,
-                      rows: DataFrame, path: str | None = None) -> None:
-    """INSERT honoring the DDL's layout: with a ``path``, write
-    partitioned+sorted parquet (MergeTree part shape) and re-register the
-    view over the files with the table's current schema; without, append
-    to the in-memory view (Memory engine)."""
-    if path is None or spec.engine.lower() in ("memory", "null"):
-        if spec.engine.lower() != "null":
-            append_to_view(spark, spec.name, rows)
-        return
+                      rows: DataFrame, path: str | None = None,
+                      _seen: frozenset = frozenset()) -> int:
+    """INSERT of one block into ``spec``'s table, for every engine (the
+    reference's ``InterpreterInsertQuery`` sink chain). Returns the rows
+    written: 0 for a block dropped as a duplicate.
+
+    - With ``SET insert_deduplicate = 1`` (reference replicated-table
+      retry protection), a block whose content checksum matches one of
+      the table's last 100 inserted blocks is silently skipped, the
+      idempotent client-retry contract.
+    - Storage: with a ``path`` (a MergeTree-family table), write parts
+      partitioned by PARTITION BY and sorted by ORDER BY, then
+      re-register the view over the files with the table's current
+      schema; a Memory table unions the block into its view by name,
+      null-filling omitted columns; a Null table keeps nothing.
+    - A driver-local block (``session.driver_rows``: a ``VALUES`` or
+      ``FORMAT`` payload) is collected with no Spark job and counted
+      on the driver; its parts are written on the driver
+      (``write_local_parts``) and a Memory table keeps it as an Arrow
+      ``LocalRelation``. Any other block is written by Spark
+      (``insert_partitioned``), counted by an ``Observation`` of that
+      write, or with ``count()`` for a Memory table.
+    - Registered projections are maintained INCREMENTALLY: the block's
+      partial states append to the summary (upstream: each inserted
+      part writes its own projection part); only rewriting mutations
+      (UPDATE/DELETE/column DDL) invalidate.
+    - Materialized views on the table fire with the inserted block
+      (reference semantics: the MV transform sees ONLY the new block,
+      not history)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from clickhouse_clickhouse_spark.plans.summary import append_block
+    from clickhouse_clickhouse_spark.session import driver_rows
     from clickhouse_clickhouse_spark.sources.write import (
-        insert_partitioned, read_parts,
+        insert_partitioned, local_part_keys, read_parts, write_local_parts,
     )
 
-    schema = spark.table(spec.name).schema
-    insert_partitioned(rows, path, partition_by=spec.partition_by,
-                       sort_by=spec.order_by, mode="append")
-    read_parts(spark, path, schema).createOrReplaceTempView(spec.name)
+    st = engine_state(spark)
+    engine = spec.engine.lower()
+    on_disk = path is not None and engine not in ("memory", "null")
+    if spark.conf.get(
+            "spark.clickhouse_clickhouse_spark.insertDeduplicate",
+            "false") == "true":
+        h = _block_hash(rows)
+        seen_hashes = st.block_hashes.setdefault(spec.name.lower(), [])
+        if h in seen_hashes:
+            return 0
+        seen_hashes.append(h)
+        del seen_hashes[:-_DEDUP_WINDOW]
+    projections = list(st.projections_for(spec.name).values())
+    hooked = bool(projections) or spec.name.lower() in st.matviews
+    part_keys = (local_part_keys(spark, rows.schema, spec.partition_by,
+                                 spec.order_by) if on_disk else [])
+    local = driver_rows(rows, part_keys) if part_keys is not None else None
+    if on_disk:
+        schema = spark.table(spec.name).schema
+    if local is not None:
+        block, part_values = local
+        n = block.num_rows
+        if on_disk:
+            write_local_parts(spark, path, block, rows.schema, part_values,
+                              spec.partition_by, spec.order_by)
+        if hooked or not on_disk:
+            rows = local_frame(spark, block, rows.schema)
+    elif on_disk:
+        counted = Observation()
+        insert_partitioned(
+            rows.observe(counted, F.count(F.lit(1)).alias("n")), path,
+            partition_by=spec.partition_by, sort_by=spec.order_by,
+            mode="append")
+        # the JVM row, not Observation.get: when AQE finds the input
+        # empty at run time it drops the observation with the plan, the
+        # row is empty, and get's conversion fails
+        observed = counted._jo.getRow()
+        n = observed.getLong(0) if observed.length() else 0
+    else:
+        n = rows.count()
+    for s in projections:
+        append_block(s, rows)
+    if on_disk:
+        read_parts(spark, path, schema).createOrReplaceTempView(spec.name)
+    elif engine != "null":
+        spark.table(spec.name).unionByName(
+            rows, allowMissingColumns=True).createOrReplaceTempView(spec.name)
+    _mv_fire(spark, spec.name, rows, _seen)
+    return n
 
 
 # ----------------------------------------------------------- statements
@@ -10575,16 +10623,10 @@ def ch_statement(spark: SparkSession, sql: str,
             "order_by string")
     if kw == "INSERT":
         rows = ch_insert(spark, sql, data)
-        m = _INSERT_RE.match(sql)
-        spec = st.spec(m.group("table"))
-        if spec is not None and spec.path:
-            n = rows.count()
-            insert_into_table(spark, spec, rows, spec.path)
-            return local_frame(spark, [(m.group("table"), n)],
-                                      "table string, written long")
-        append_to_view(spark, m.group("table"), rows)
-        return local_frame(spark, [(m.group("table"), rows.count())],
-                                  "table string, written long")
+        table = _INSERT_RE.match(sql).group("table")
+        spec = _sink_spec(spark, table)
+        n = insert_into_table(spark, spec, rows, spec.path)
+        return local_frame(spark, [(table, n)], "table string, written long")
     if kw == "DESCRIBE" or kw == "DESC":
         rest = sql.strip().split(None, 1)[1].strip().rstrip(";")
         if rest.upper().startswith("TABLE "):
@@ -10766,7 +10808,9 @@ def ch_statement(spark: SparkSession, sql: str,
             # view without matching rows (condition through the dialect
             # expression rewriter)
             cond = _rewrite_calls(om.group(1))
-            out = base.filter(f"NOT ({cond})")
+            # a row whose predicate is NULL stays (upstream negates
+            # with isZeroOrNull)
+            out = base.filter(f"NOT coalesce(({cond}), false)")
             out.createOrReplaceTempView(name)
             _rebuild()
             return local_frame(spark, [(name,)], "mutated string")
@@ -10842,7 +10886,8 @@ def ch_statement(spark: SparkSession, sql: str,
                              "required — the reference refuses a bare "
                              "DELETE too)")
         cond = _rewrite_calls(mm.group("c"))
-        spark.table(mm.group("t")).filter(f"NOT ({cond})") \
+        spark.table(mm.group("t")) \
+            .filter(f"NOT coalesce(({cond}), false)") \
             .createOrReplaceTempView(mm.group("t"))
         from clickhouse_clickhouse_spark.plans.summary import (
             rebuild_projections,
@@ -10869,7 +10914,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 from clickhouse_clickhouse_spark.sources.write import (
                     _rewrite, read_parts,
                 )
-                _rewrite(spark, deduped, spec.path, spec.partition_by)
+                _rewrite(spark, deduped, spec.path, spec.partition_by,
+                         spec.order_by)
                 read_parts(spark, spec.path, t.schema) \
                     .createOrReplaceTempView(name)
             else:

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,6 +80,29 @@ def get_spark(app_name: str = "clickhouse_clickhouse_spark",
     return spark
 
 
+def arrow_rows(rows: Iterable[Any], schema: StructType):
+    """``rows`` as a ``pyarrow.Table`` of ``schema``'s Arrow types,
+    converted exactly as ``createDataFrame`` converts a list of them
+    (its type verifier, then ``StructType.toInternal``): naive datetimes
+    are process-local time, dicts and ``Row``s map by field name, tuples
+    by position."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(schema.toInternal(convert(r)))
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*internal) if internal else [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+
+
 def local_frame(spark: SparkSession, rows: Iterable[Any],
                 schema: StructType | str) -> DataFrame:
     """A DataFrame of driver-local ``rows``, built as an Arrow-backed
@@ -92,29 +115,37 @@ def local_frame(spark: SparkSession, rows: Iterable[Any],
     An Arrow table of the same rows reaches the JVM as a ``LocalRelation``
     and collects with no job at all.
 
-    Rows are converted exactly as ``createDataFrame(list, schema)`` does
-    (its type verifier, then ``StructType.toInternal``), so the values read
-    back the same: naive datetimes are process-local time, dicts and
-    ``Row``s map by field name. ``schema`` is a DDL string or a
-    ``StructType``."""
+    ``rows`` go through ``arrow_rows``, so the values read back as
+    ``createDataFrame`` would give them; a ``pyarrow.Table`` that
+    ``arrow_rows`` already built is taken as it is. ``schema`` is a DDL
+    string or a ``StructType``."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _create_converter, _make_type_verifier
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    verify = _make_type_verifier(schema)
-    convert = _create_converter(schema)
-    internal = []
-    for r in rows:
-        verify(r)
-        internal.append(schema.toInternal(convert(r)))
-    arrow_schema = to_arrow_schema(schema)
-    columns = zip(*internal) if internal else [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
-        schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+    if not isinstance(rows, pa.Table):
+        rows = arrow_rows(rows, schema)
+    return spark.createDataFrame(rows, schema)
+
+
+def driver_rows(df: DataFrame, extra: Sequence[str] = ()):
+    """``(table, extras)`` for a driver-local ``df``, None for any other.
+
+    Driver-local means that ``df``'s optimized plan is a
+    ``LocalRelation``: Spark folded the whole plan on the driver (a
+    ``VALUES`` list, a ``from_json`` parse of ``local_frame`` lines), so
+    collecting it runs no job. ``table`` holds ``df``'s rows as
+    ``arrow_rows`` converts them; ``extras`` holds, per row, the values
+    of the ``extra`` SQL expressions, evaluated in the same local
+    projection."""
+    proj = df.selectExpr("*", *extra) if extra else df
+    plan = proj._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    got = proj.collect()
+    k = len(df.columns)
+    return (arrow_rows([r[:k] for r in got], df.schema),
+            [tuple(r[k:]) for r in got])
 
 
 class EngineState:
