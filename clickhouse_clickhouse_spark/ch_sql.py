@@ -10172,7 +10172,7 @@ def _sink_spec(spark: SparkSession, table: str) -> "TableSpec":
     """The recorded DDL of ``table``; a temp view created without one
     (``createOrReplaceTempView``) is a Memory table."""
     return engine_state(spark).spec(table) or \
-        TableSpec(table, None, "Memory", [], [])
+        TableSpec(table, "Memory", [], [])
 
 
 # -------------------------------------------------------------- CREATE TABLE
@@ -10188,14 +10188,15 @@ _CREATE_RE = re.compile(
 
 
 class TableSpec:
-    """Parsed reference DDL: schema + layout, the contract the write path
-    (``sources.write.insert_partitioned``) and scan layer execute."""
+    """Parsed reference DDL: engine + layout, the contract the write path
+    (``sources.write.insert_partitioned``) and scan layer execute. The
+    columns are the table view's own (``spark.table(name).schema``): ALTER
+    ADD/DROP COLUMN changes them there."""
 
-    def __init__(self, name: str, schema, engine: str,
+    def __init__(self, name: str, engine: str,
                  partition_by: list[str], order_by: list[str],
                  path: str | None = None):
         self.name = name
-        self.schema = schema
         self.engine = engine
         self.partition_by = partition_by
         self.order_by = order_by
@@ -10239,7 +10240,7 @@ def ch_create_table(spark: SparkSession, sql: str) -> TableSpec:
     if not m:
         raise ValueError("unsupported CREATE TABLE syntax")
     schema = ch_schema_to_struct(m.group("cols"))
-    spec = TableSpec(m.group("table"), schema, m.group("engine"),
+    spec = TableSpec(m.group("table"), m.group("engine"),
                      _key_list(m.group("part")),
                      _key_list(m.group("order")))
     for key in spec.partition_by + spec.order_by:
@@ -10339,6 +10340,42 @@ def insert_into_table(spark: SparkSession, spec: TableSpec,
             rows, allowMissingColumns=True).createOrReplaceTempView(spec.name)
     _mv_fire(spark, spec.name, rows, _seen)
     return n
+
+
+def _replace_rows(spark: SparkSession, name: str, rows: DataFrame) -> int:
+    """Replace the stored rows of table ``name`` by ``rows``: the one way
+    a statement rewrites a table (ALTER UPDATE/DELETE, DELETE FROM,
+    OPTIMIZE DEDUPLICATE; upstream ``MutationsInterpreter`` rewrites the
+    parts holding matching rows). A file-backed table's parts are
+    rewritten: ``rows`` are written aside, sorted by partition and ORDER
+    BY, and swapped in (``sources.write._rewrite``), and the view re-reads
+    them; a Memory table's view becomes ``rows``. Returns the number of
+    projections rebuilt."""
+    spec = engine_state(spark).spec(name)
+    if spec is not None and spec.path:
+        from clickhouse_clickhouse_spark.sources.write import (
+            _rewrite, read_parts,
+        )
+
+        _rewrite(spark, rows, spec.path, spec.partition_by, spec.order_by)
+        rows = read_parts(spark, spec.path, rows.schema)
+    return _register_view(spark, name, rows)
+
+
+def _register_view(spark: SparkSession, name: str, rows: DataFrame) -> int:
+    """Register ``rows`` as table ``name``'s view, then rebuild the
+    table's projections from it (upstream: a mutation or merge rewrites
+    each part's projections with the part). Returns the number
+    rebuilt."""
+    from clickhouse_clickhouse_spark.plans.summary import rebuild_projections
+
+    rows.createOrReplaceTempView(name)
+    return rebuild_projections(spark, name)
+
+
+_DELETE_RE = re.compile(
+    r"(?:ALTER\s+TABLE\s+(\w+)\s+DELETE|DELETE\s+FROM\s+(\w+))"
+    r"\s+WHERE\s+(.+)$", re.IGNORECASE | re.DOTALL)
 
 
 # ----------------------------------------------------------- statements
@@ -10600,7 +10637,7 @@ def ch_statement(spark: SparkSession, sql: str,
             # unless bases mutate; the reference snapshots instead).
             rows = ch_sql(spark, cm.group("q"))
             rows.createOrReplaceTempView(cm.group("t"))
-            spec = TableSpec(cm.group("t"), rows.schema, cm.group("e"),
+            spec = TableSpec(cm.group("t"), cm.group("e"),
                              _key_list(cm.group("part")),
                              _key_list(cm.group("order")))
         else:
@@ -10663,7 +10700,7 @@ def ch_statement(spark: SparkSession, sql: str,
             )
             cols = ",\n    ".join(
                 f"{f.name} {spark_type_to_ch(f.dataType, f.nullable)}"
-                for f in spec.schema.fields)
+                for f in spark.table(spec.name).schema.fields)
             stmt = (f"CREATE TABLE {spec.name}\n(\n    {cols}\n)\n"
                     f"ENGINE = {spec.engine}")
             if spec.partition_by:
@@ -10764,6 +10801,17 @@ def ch_statement(spark: SparkSession, sql: str,
 
             drop_parts(spark, spec.path)
         return local_frame(spark, [(mm.group(1),)], "dropped string")
+    dm = _DELETE_RE.match(sql.strip().rstrip(";"))
+    if dm:
+        # ALTER … DELETE and the lightweight DELETE FROM: rewrite the
+        # table without the matching rows (condition through the dialect
+        # expression rewriter); a row whose predicate is NULL stays
+        # (upstream negates with isZeroOrNull)
+        name = dm.group(1) or dm.group(2)
+        cond = _rewrite_calls(dm.group(3))
+        _replace_rows(spark, name, spark.table(name).filter(
+            f"NOT coalesce(({cond}), false)"))
+        return local_frame(spark, [(name,)], "mutated string")
     if kw == "ALTER":
         from pyspark.sql import functions as F
 
@@ -10774,46 +10822,21 @@ def ch_statement(spark: SparkSession, sql: str,
             raise ValueError("unsupported ALTER statement")
         name, op = mm.group("t"), mm.group("op").strip()
         base = spark.table(name)
-
-        def _rebuild():
-            # mutation-time projection rebuild (upstream: the mutation
-            # rewrites each part's projections); runs AFTER the view
-            # re-registration so it sees post-mutation contents
-            from clickhouse_clickhouse_spark.plans.summary import (
-                rebuild_projections,
-            )
-
-            rebuild_projections(spark, name)
         om = re.match(r"ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?"
                       r"(\w+)\s+([\w\(\), ]+)$", op, re.IGNORECASE)
         if om:
             from clickhouse_clickhouse_spark.types_map import parse_ch_type
             dt, _ = parse_ch_type(om.group(2).strip())
-            out = base.withColumn(om.group(1), F.lit(None).cast(dt))
-            out.createOrReplaceTempView(name)
-            _rebuild()
+            _register_view(spark, name,
+                           base.withColumn(om.group(1), F.lit(None).cast(dt)))
             return local_frame(spark, [(name, om.group(1))],
                                       "table string, added string")
         om = re.match(r"DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)$",
                       op, re.IGNORECASE)
         if om:
-            base.drop(om.group(1)).createOrReplaceTempView(name)
-            _rebuild()
+            _register_view(spark, name, base.drop(om.group(1)))
             return local_frame(spark, [(name, om.group(1))],
                                       "table string, dropped string")
-        om = re.match(r"DELETE\s+WHERE\s+(.+)$", op,
-                      re.IGNORECASE | re.DOTALL)
-        if om:
-            # the reference's lightweight-delete mutation: rewrite the
-            # view without matching rows (condition through the dialect
-            # expression rewriter)
-            cond = _rewrite_calls(om.group(1))
-            # a row whose predicate is NULL stays (upstream negates
-            # with isZeroOrNull)
-            out = base.filter(f"NOT coalesce(({cond}), false)")
-            out.createOrReplaceTempView(name)
-            _rebuild()
-            return local_frame(spark, [(name,)], "mutated string")
         om = re.match(r"UPDATE\s+(.+?)\s+WHERE\s+(.+)$", op,
                       re.IGNORECASE | re.DOTALL)
         if om:
@@ -10826,8 +10849,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 out = out.withColumn(
                     col, F.expr(f"CASE WHEN {cond} THEN {expr} "
                                 f"ELSE {col} END"))
-            out.createOrReplaceTempView(name)
-            _rebuild()
+            _replace_rows(spark, name, out)
             return local_frame(spark, [(name,)], "mutated string")
         om = re.match(r"ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)"
                       r"\s*\(\s*SELECT\s+(.+?)\s+GROUP\s+BY\s+(.+?)\s*\)$",
@@ -10876,25 +10898,9 @@ def ch_statement(spark: SparkSession, sql: str,
                 "table string, projection string, dropped boolean")
         raise ValueError(f"unsupported ALTER operation: {op!r}")
     if kw == "DELETE":
-        # the reference's lightweight DELETE FROM t WHERE c — same
-        # rewrite-the-view mutation as ALTER TABLE ... DELETE WHERE
-        mm = re.match(r"DELETE\s+FROM\s+(?P<t>\w+)\s+WHERE\s+(?P<c>.+)$",
-                      sql.strip().rstrip(";"),
-                      re.IGNORECASE | re.DOTALL)
-        if not mm:
-            raise ValueError("unsupported DELETE statement (WHERE is "
-                             "required — the reference refuses a bare "
-                             "DELETE too)")
-        cond = _rewrite_calls(mm.group("c"))
-        spark.table(mm.group("t")) \
-            .filter(f"NOT coalesce(({cond}), false)") \
-            .createOrReplaceTempView(mm.group("t"))
-        from clickhouse_clickhouse_spark.plans.summary import (
-            rebuild_projections,
-        )
-
-        rebuild_projections(spark, mm.group("t"))
-        return local_frame(spark, [(mm.group("t"),)], "mutated string")
+        raise ValueError("unsupported DELETE statement (WHERE is "
+                         "required — the reference refuses a bare "
+                         "DELETE too)")
     if kw == "OPTIMIZE":
         mm = re.match(r"OPTIMIZE\s+TABLE\s+(\w+)(?:\s+FINAL)?"
                       r"(?:\s+(DEDUPLICATE)(?:\s+BY\s+(.+))?)?\s*$",
@@ -10903,23 +10909,15 @@ def ch_statement(spark: SparkSession, sql: str,
             raise ValueError("unsupported OPTIMIZE statement")
         name = mm.group(1)
         spec = st.spec(name)
+        t = spark.table(name)
+        # every branch rebuilds the projections (upstream: merges merge
+        # projection parts): re-aggregating compacts the incremental
+        # per-insert partials back to one row per key
         if mm.group(2):
             cols = [c.strip() for c in (mm.group(3) or "").split(",")
                     if c.strip()]
-            t = spark.table(name)
-            deduped = t.dropDuplicates(cols) if cols else t.dropDuplicates()
-            if spec is not None and spec.path:
-                # file-backed table: the dedup is a PART REWRITE, not a
-                # view swap — write back and re-register over the files
-                from clickhouse_clickhouse_spark.sources.write import (
-                    _rewrite, read_parts,
-                )
-                _rewrite(spark, deduped, spec.path, spec.partition_by,
-                         spec.order_by)
-                read_parts(spark, spec.path, t.schema) \
-                    .createOrReplaceTempView(name)
-            else:
-                deduped.createOrReplaceTempView(name)
+            n = _replace_rows(spark, name, t.dropDuplicates(cols) if cols
+                              else t.dropDuplicates())
             st.forget_blocks(name)   # parts rewritten → block ids gone
         elif spec is not None and spec.path:
             # background-merge analog on files: compact to fewer sorted
@@ -10927,19 +10925,16 @@ def ch_statement(spark: SparkSession, sql: str,
             from clickhouse_clickhouse_spark.sources.write import (
                 optimize_compact, read_parts,
             )
-            schema = spark.table(name).schema
             optimize_compact(spark, spec.path, sort_by=spec.order_by,
-                             partition_by=spec.partition_by, schema=schema)
-            read_parts(spark, spec.path, schema) \
-                .createOrReplaceTempView(name)
-        # merge-time projection maintenance (upstream: merges merge
-        # projection parts): re-aggregating compacts the incremental
-        # per-insert partials back to one row per key
-        from clickhouse_clickhouse_spark.plans.summary import (
-            rebuild_projections,
-        )
+                             partition_by=spec.partition_by, schema=t.schema)
+            n = _register_view(spark, name,
+                               read_parts(spark, spec.path, t.schema))
+        else:
+            from clickhouse_clickhouse_spark.plans.summary import (
+                rebuild_projections,
+            )
 
-        n = rebuild_projections(spark, name)
+            n = rebuild_projections(spark, name)
         return local_frame(
             spark, [(name, bool(mm.group(2)), n)],
             "optimized string, deduplicated boolean, "
@@ -10985,12 +10980,7 @@ def ch_statement(spark: SparkSession, sql: str,
             )
 
             truncate_parts(spark, spec.path)
-        local_frame(spark, [], schema).createOrReplaceTempView(name)
+        _register_view(spark, name, local_frame(spark, [], schema))
         st.forget_blocks(name)
-        from clickhouse_clickhouse_spark.plans.summary import (
-            rebuild_projections,
-        )
-
-        rebuild_projections(spark, name)
         return local_frame(spark, [(name,)], "truncated string")
     return ch_sql(spark, sql)

@@ -16,7 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clickhouse_clickhouse_spark.sources.write import _swap_dirs
+from clickhouse_clickhouse_spark.sources.write import _rewrite
 
 
 def replacing_merge(df: DataFrame, keys: Sequence[str], version: str) -> DataFrame:
@@ -78,24 +78,11 @@ def apply_ttl(spark: SparkSession, path: str, ts_col: str,
     """MergeTree TTL: rows older than the cutoff expire at merge time —
     here an explicit rewrite dropping them."""
     df = spark.read.parquet(path)
-    out = df.filter(F.col(ts_col) >= cutoff)
-    tmp = path.rstrip("/") + "__ttl"
-    w = out.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    _swap_dirs(spark, tmp, path)
+    _rewrite(spark, df.filter(F.col(ts_col) >= cutoff), path, partition_by)
 
 
 def optimize_with(spark: SparkSession, path: str, merge_fn,
                   partition_by: Sequence[str] = ()) -> None:
     """OPTIMIZE using any of the merge variants above: read → merge →
     atomic swap (the engine-specific background merge, run to completion)."""
-    df = spark.read.parquet(path)
-    out = merge_fn(df)
-    tmp = path.rstrip("/") + "__merging"
-    w = out.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    _swap_dirs(spark, tmp, path)
+    _rewrite(spark, merge_fn(spark.read.parquet(path)), path, partition_by)

@@ -16,9 +16,12 @@ Reference mapping:
   pruning power (the sparse-PK-index analog).
 - Background merge / ``OPTIMIZE`` (``MergeTask.cpp``) → compaction job:
   read → repartition to target file count → re-sort → atomic overwrite.
-- ``ALTER TABLE UPDATE/DELETE`` mutations (``MutationsInterpreter.cpp``) →
-  read → transform → overwrite (rewrite-the-parts semantics, same as the
-  reference; a lakehouse format would do this transactionally).
+- ``ALTER TABLE UPDATE/DELETE``, ``DELETE FROM`` and ``OPTIMIZE …
+  DEDUPLICATE`` (``MutationsInterpreter.cpp``) → the statement reads the
+  table, transforms it, and ``_rewrite`` writes the result aside, sorted
+  by partition and ORDER BY, then swaps it in (rewrite-the-parts
+  semantics, same as the reference; a lakehouse format would do this
+  transactionally). The statements live in ``ch_sql.ch_statement``.
 """
 
 from __future__ import annotations
@@ -211,36 +214,17 @@ def optimize_compact(spark: SparkSession, path: str,
     schema is inferred from the files."""
     df = (spark.read.parquet(path) if schema is None
           else read_parts(spark, path, schema))
-    compacted = df.coalesce(target_files)
-    if sort_by:
-        # partition columns first, as in insert_partitioned
-        compacted = compacted.sortWithinPartitions(*partition_by, *sort_by)
-    _rewrite(spark, compacted, path, partition_by)
-
-
-def mutate_update(spark: SparkSession, path: str,
-                  assignments: dict[str, Column], where: Column,
-                  partition_by: Sequence[str] = ()) -> None:
-    """ALTER TABLE ... UPDATE col = expr WHERE cond (mutation rewrite).
-    Pass the table's ``partition_by`` to keep its directory layout."""
-    df = spark.read.parquet(path)
-    out = df
-    for col, expr in assignments.items():
-        out = out.withColumn(col, F.when(where, expr).otherwise(F.col(col)))
-    _rewrite(spark, out, path, partition_by)
-
-
-def mutate_delete(spark: SparkSession, path: str, where: Column,
-                  partition_by: Sequence[str] = ()) -> None:
-    """ALTER TABLE ... DELETE WHERE cond (anti-filter rewrite)."""
-    df = spark.read.parquet(path)
-    out = df.filter(~where | where.isNull())
-    _rewrite(spark, out, path, partition_by)
+    _rewrite(spark, df.coalesce(target_files), path, partition_by, sort_by)
 
 
 def _rewrite(spark: SparkSession, df: DataFrame, path: str,
              partition_by: Sequence[str],
              sort_by: Sequence[str] = ()) -> None:
+    """Replace the parts under ``path`` by ``df``: written aside under
+    ``<path>__rewriting`` in the ``partition_by`` directory layout, each
+    file sorted by partition and ``sort_by``, then swapped in
+    (``_swap_dirs``). ``df`` may read ``path`` itself: the swap runs
+    after the write job."""
     tmp = path.rstrip("/") + "__rewriting"
     if sort_by:
         # partition columns first, as in insert_partitioned
@@ -357,28 +341,6 @@ def apply_column_ttl(spark: SparkSession, path: str, ts_col: str,
     for c in ttl_cols:
         df = df.withColumn(c, F.when(expired, F.lit(None)).otherwise(F.col(c)))
     _rewrite(spark, df, path, partition_by)
-
-
-def optimize_deduplicate(spark: SparkSession, path: str,
-                         by: Sequence[str] | None = None,
-                         order_by: Sequence[str] = (),
-                         partition_by: Sequence[str] = ()) -> None:
-    """``OPTIMIZE TABLE ... [DEDUPLICATE [BY cols]]`` — drop duplicate
-    rows in place (reference MergeTree dedup merge). ``by=None`` dedups
-    on ALL columns (the reference default); with ``by`` + ``order_by``
-    the FIRST row per key in that order survives (deterministic, unlike
-    a bare dropDuplicates under shuffle)."""
-    df = spark.read.parquet(path)
-    if by is None:
-        out = df.dropDuplicates()
-    else:
-        from pyspark.sql import Window
-        keys = list(by)
-        order = [F.col(c) for c in order_by] or [F.col(c) for c in keys]
-        w = Window.partitionBy(*keys).orderBy(*order)
-        out = (df.withColumn("__rn", F.row_number().over(w))
-               .filter(F.col("__rn") == 1).drop("__rn"))
-    _rewrite(spark, out, path, partition_by)
 
 
 def modify_column_type(spark: SparkSession, path: str, column: str,

@@ -49,6 +49,18 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def data_dir(spark, tmp_path):
+    """MergeTree-family tables created through ``ch_statement`` while
+    this fixture is active are file-backed, under ``tmp_path``."""
+    conf = "spark.clickhouse_clickhouse_spark.dataDir"
+    spark.conf.set(conf, str(tmp_path))
+    try:
+        yield tmp_path
+    finally:
+        spark.conf.set(conf, "")
+
+
 def run_parallel(cases, fn, workers=16):
     """Run one check per case on a thread pool — Spark actions are
     thread-safe and overlap in local mode, so N tiny differential

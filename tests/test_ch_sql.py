@@ -533,6 +533,18 @@ class TestStatements:
         stmt = ch_statement(spark,
                             "SHOW CREATE TABLE st_t").collect()[0].statement
         assert "ENGINE = Memory" in stmt and "Nullable(String)" in stmt
+        # after column DDL, SHOW CREATE TABLE lists what DESCRIBE lists
+        ch_statement(spark, "ALTER TABLE st_t ADD COLUMN x Int32")
+        ch_statement(spark, "ALTER TABLE st_t DROP COLUMN name")
+        described = [f"{r.name} {r.type}" for r in
+                     ch_statement(spark, "DESCRIBE st_t").collect()]
+        assert described == ["id Int64", "v Array(Float32)",
+                             "x Nullable(Int32)"]
+        stmt = ch_statement(spark,
+                            "SHOW CREATE TABLE st_t").collect()[0].statement
+        cols = stmt.split("(\n", 1)[1].split("\n)", 1)[0]
+        assert [c.strip().rstrip(",") for c in cols.splitlines()] == \
+            described
         assert ch_statement(spark,
                             "EXISTS TABLE st_t").collect()[0].result == 1
         ch_statement(spark, "TRUNCATE TABLE st_t")

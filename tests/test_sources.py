@@ -1,12 +1,14 @@
 """Write path / formats / mutations tests (SURVEY.md §2.1, §3.2)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from clickhouse_clickhouse_spark.ch_sql import ch_statement
 from clickhouse_clickhouse_spark.sources.formats import read_any, write_any
 from clickhouse_clickhouse_spark.sources.write import (
-    insert_partitioned, mutate_delete, mutate_update, optimize_compact,
+    insert_partitioned, optimize_compact,
 )
 
 
@@ -55,22 +57,49 @@ def test_format_needs_jars_raises(spark, sample, tmp_path):
         sorted(map(tuple, sample.collect()))
 
 
-def test_mutate_update(spark, sample, tmp_path):
-    path = str(tmp_path / "t")
-    sample.write.parquet(path)
-    mutate_update(spark, path, {"val": F.lit(-1.0)}, F.col("id") < 10)
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("val") == -1.0).count() == 10
-    assert back.count() == 100
+@pytest.fixture
+def sample_table(spark, sample, data_dir):
+    """``sample`` in a file-backed MergeTree table partitioned by
+    ``part``; yields the table's directory."""
+    sample.createOrReplaceTempView("src_sample")
+    ch_statement(spark, "CREATE TABLE src_mut (id Int64, part Int32, "
+                        "val Float64, name String) ENGINE = MergeTree "
+                        "PARTITION BY part ORDER BY id")
+    ch_statement(spark, "INSERT INTO src_mut SELECT * FROM src_sample")
+    yield data_dir / "src_mut"
+    ch_statement(spark, "DROP TABLE src_mut")
 
 
-def test_mutate_delete(spark, sample, tmp_path):
-    path = str(tmp_path / "t")
-    sample.write.parquet(path)
-    mutate_delete(spark, path, F.col("part") == 0)
-    back = spark.read.parquet(path)
+def test_alter_update_rewrites_parts(spark, sample_table):
+    ch_statement(spark, "ALTER TABLE src_mut UPDATE val = -1.0 "
+                        "WHERE id < 10")
+    for back in (spark.table("src_mut"),
+                 spark.read.parquet(str(sample_table))):
+        assert back.filter(F.col("val") == -1.0).count() == 10
+        assert back.count() == 100
+
+
+def test_alter_delete_empties_partition(spark, sample_table):
+    ch_statement(spark, "ALTER TABLE src_mut DELETE WHERE part = 0")
+    back = spark.table("src_mut")
     assert back.count() == 66
     assert back.filter(F.col("part") == 0).count() == 0
+    assert sorted(d.name for d in sample_table.iterdir()
+                  if d.name.startswith("part=")) == ["part=1", "part=2"]
+
+
+def test_alter_update_leaves_no_side_directory(spark, data_dir):
+    # the rewrite writes aside and swaps: neither the new parts' staging
+    # directory nor the replaced parts stay behind
+    ch_statement(spark, "CREATE TABLE src_swap (id Int64, v Int32) "
+                        "ENGINE = MergeTree ORDER BY id")
+    ch_statement(spark, "INSERT INTO src_swap VALUES " + ", ".join(
+        f"({i}, 1)" for i in range(10)))
+    ch_statement(spark, "ALTER TABLE src_swap UPDATE v = 2 WHERE id > 5")
+    assert sorted(p.name for p in data_dir.iterdir()) == ["src_swap"]
+    assert spark.read.parquet(str(data_dir / "src_swap")) \
+        .filter("v = 2").count() == 4
+    ch_statement(spark, "DROP TABLE src_swap")
 
 
 def test_optimize_compact(spark, sample, tmp_path):
@@ -210,31 +239,33 @@ def test_sort_projection_routing_and_pruning(spark, sf_dir, tmp_path):
     assert route_scan(spark, base, [proj], ["o_orderdate"]) is base
 
 
-def test_optimize_deduplicate_and_modify_column(spark, tmp_path):
-    from pyspark.sql import functions as F
+def test_optimize_deduplicate_rewrites_parts(spark, data_dir):
+    ch_statement(spark, "CREATE TABLE src_dedup (k Int64, s String, "
+                        "v Int64) ENGINE = MergeTree ORDER BY k")
+    ch_statement(spark, "INSERT INTO src_dedup VALUES (1, 'a', 5), "
+                        "(1, 'a', 5), (1, 'b', 9), (2, 'a', 7)")
+    parts = str(data_dir / "src_dedup")
+    # all-columns dedup drops only the exact-duplicate row
+    ch_statement(spark, "OPTIMIZE TABLE src_dedup DEDUPLICATE")
+    assert sorted(tuple(r) for r in spark.read.parquet(parts).collect()) \
+        == [(1, "a", 5), (1, "b", 9), (2, "a", 7)]
+    # keyed dedup keeps one row per k
+    ch_statement(spark, "OPTIMIZE TABLE src_dedup DEDUPLICATE BY k")
+    for back in (spark.table("src_dedup"), spark.read.parquet(parts)):
+        assert sorted(r.k for r in back.collect()) == [1, 2]
+    ch_statement(spark, "DROP TABLE src_dedup")
 
-    from clickhouse_clickhouse_spark.sources.write import (
-        modify_column_type, optimize_deduplicate,
-    )
+
+def test_modify_column_type(spark, tmp_path):
+    from clickhouse_clickhouse_spark.sources.write import modify_column_type
 
     p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 5), (1, "a", 5), (1, "b", 9), (2, "a", 7)],
-        "k long, s string, v long").write.parquet(p)
-
-    # all-columns dedup drops only the exact-duplicate row
-    optimize_deduplicate(spark, p)
-    assert spark.read.parquet(p).count() == 3
-
-    # keyed dedup keeps the first row per k ordered by v desc
-    optimize_deduplicate(spark, p, by=["k"], order_by=["v"])
-    rows = {r.k: (r.s, r.v) for r in spark.read.parquet(p).collect()}
-    assert rows == {1: ("a", 5), 2: ("a", 7)}
-
+    spark.createDataFrame([(1, "a", 5), (1, "b", 9), (2, "a", 7)],
+                          "k long, s string, v long").write.parquet(p)
     # MODIFY COLUMN v -> reference type name maps through types_map
     modify_column_type(spark, p, "v", "Float64")
     assert dict(spark.read.parquet(p).dtypes)["v"] == "double"
-    assert {r.v for r in spark.read.parquet(p).collect()} == {5.0, 7.0}
+    assert {r.v for r in spark.read.parquet(p).collect()} == {5.0, 7.0, 9.0}
 
 
 def test_system_formats(spark):
@@ -289,3 +320,126 @@ def test_arrow_ipc_roundtrip(spark, sf_dir, tmp_path):
     back = read_any(spark, p, "arrow")
     assert sorted(map(str, back.collect())) == \
         sorted(map(str, o.collect()))
+
+
+# sources/ codec and format regressions
+
+PROTO = "message M { uint64 a = 1; }"
+
+
+def test_avro_null_last_union_decodes(spark):
+    """Foreign writers may order unions [T, "null"]; the decoder
+    previously hardcoded null-first and decoded every present value as
+    NULL (and vice versa)."""
+    from clickhouse_clickhouse_spark.sources.avro import (
+        _avro_json_fields, _decode_block)
+
+    sch = ('{"type":"record","name":"r","fields":'
+           '[{"name":"x","type":["long","null"]}]}')
+    fields = _avro_json_fields(sch)
+    assert fields == [("x", "long", None, 2)]
+    # null-LAST wire form: union idx 0x00 = present, 0x02 = null
+    buf = np.frombuffer(bytes([0x00, 0x0A, 0x02, 0x00, 0x0C]),
+                        dtype=np.uint8)
+    out = _decode_block(buf, fields, 3)
+    assert list(out["x"]) == [5, None, 6]
+    # our own writer's null-FIRST form still decodes identically
+    sch2 = ('{"type":"record","name":"r","fields":'
+            '[{"name":"x","type":["null","long"]}]}')
+    f2 = _avro_json_fields(sch2)
+    assert f2 == [("x", "long", None, 1)]
+    buf2 = np.frombuffer(bytes([0x02, 0x0A, 0x00, 0x02, 0x0C]),
+                         dtype=np.uint8)
+    out2 = _decode_block(buf2, f2, 3)
+    assert list(out2["x"]) == [5, None, 6]
+
+
+def test_avro_null_timestamp_next_to_extreme_double(spark, tmp_path):
+    """Logical conversion ran on speculative garbage of masked rows
+    BEFORE null-masking — a NULL timestamp followed by an extreme
+    double raised OutOfBoundsDatetime on a correctly written file."""
+    import datetime as dt
+
+    from clickhouse_clickhouse_spark.sources.avro import (
+        read_avro, write_avro)
+
+    rows = [(dt.datetime(2024, 1, 1), 1.5), (None, -1e300),
+            (dt.datetime(2024, 6, 1), -1e300)]
+    df = spark.createDataFrame(rows, "ts timestamp, x double")
+    p = str(tmp_path / "a")
+    write_avro(df, p).collect()
+    back = read_avro(spark, p).orderBy("x", "ts").collect()
+    assert [r.ts for r in back if r.ts is None] == [None]
+    assert sorted(r.x for r in back) == [-1e300, -1e300, 1.5]
+
+
+def test_csv_read_with_schema_skips_header(spark, tmp_path):
+    from clickhouse_clickhouse_spark.sources.formats import (
+        read_any, write_any)
+
+    df = spark.range(10).withColumn("s", F.lit("v"))
+    p = str(tmp_path / "c")
+    write_any(df, p, "csv")
+    back = read_any(spark, p, "csv", schema=df.schema)
+    assert back.count() == 10
+    assert back.filter(F.col("s") == "s").count() == 0
+
+
+def test_write_any_overwrite_custom_formats(spark, tmp_path):
+    """'overwrite' silently APPENDED for the custom writers — a re-run
+    doubled every row on read."""
+    from clickhouse_clickhouse_spark.sources.formats import (
+        read_any, write_any)
+
+    df = spark.range(20).withColumn("s", F.lit("x"))
+    p = str(tmp_path / "n")
+    write_any(df, p, "native")
+    write_any(df, p, "native")           # overwrite, not append
+    assert read_any(spark, p, "native", schema=df.schema).count() == 20
+    write_any(df, p + "2", "msgpack")
+    with pytest.raises(FileExistsError):
+        write_any(df, p + "2", "msgpack", mode="error")
+    with pytest.raises(ValueError, match="compression"):
+        write_any(df, p + "3", "native", compression="zstd")
+
+
+def test_protobuf_null_cell_and_uint64_guard(spark):
+    from clickhouse_clickhouse_spark.sources.protobuf import (
+        protobuf_decode)
+
+    # NULL cell -> all-null row (was: TypeError in the executor)
+    df = spark.createDataFrame([(None,), (bytes([0x02, 0x08, 0x07]),)],
+                               "pb binary")
+    got = protobuf_decode(df, PROTO).orderBy("a").collect()
+    assert [r.a for r in got] == [None, 7]   # asc = NULLS FIRST
+    # uint64 >= 2^63 refuses loudly instead of wrapping negative
+    big = (1 << 63)
+    u = big
+    varint = bytearray()
+    while True:
+        b = u & 0x7F
+        u >>= 7
+        varint.append(b | 0x80 if u else b)
+        if not u:
+            break
+    cell = bytes([1 + len(varint), 0x08]) + bytes(varint)
+    bad = spark.createDataFrame([(cell,)], "pb binary")
+    with pytest.raises(Exception, match="2\\^63"):
+        protobuf_decode(bad, PROTO).collect()
+
+
+def test_native_long_strings_window_growth(spark, tmp_path):
+    """Strings far longer than the initial 16-bytes-per-row window must
+    still decode exactly (the windowed varint chain doubles until the
+    chain provably fits)."""
+    from clickhouse_clickhouse_spark.sources.formats import (
+        read_any, write_any)
+
+    df = spark.range(8).select(
+        "id", F.concat(F.lit("x" * 5000), F.col("id").cast("string"))
+        .alias("s"))
+    p = str(tmp_path / "n")
+    write_any(df, p, "native")
+    back = read_any(spark, p, "native", schema=df.schema)
+    assert sorted((r.id, len(r.s)) for r in back.collect()) == \
+        [(i, 5001) for i in range(8)]

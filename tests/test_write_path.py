@@ -13,19 +13,8 @@ import pytest
 
 from clickhouse_clickhouse_spark.ch_sql import ch_sql, ch_statement
 
-DATA_DIR = "spark.clickhouse_clickhouse_spark.dataDir"
 MT_DDL = ("CREATE TABLE {} (id Int64, bucket Int32, v Int64) "
           "ENGINE = MergeTree PARTITION BY bucket ORDER BY id")
-
-
-@pytest.fixture
-def data_dir(spark, tmp_path):
-    """Tables created while this fixture is active are file-backed."""
-    spark.conf.set(DATA_DIR, str(tmp_path))
-    try:
-        yield tmp_path
-    finally:
-        spark.conf.set(DATA_DIR, "")
 
 
 @contextlib.contextmanager
@@ -156,6 +145,71 @@ def test_write_statement_job_budget(spark, data_dir):
     assert _count(spark, "wp_jobs_mt") == 64
 
 
+MUTATIONS = ["ALTER TABLE {} DELETE WHERE id = 1",
+             "ALTER TABLE {} UPDATE v = v + 1 WHERE bucket = 2",
+             "DELETE FROM {} WHERE id = 3"]
+
+
+@pytest.mark.parametrize("engine, budget", [("MergeTree", 1), ("Memory", 0)])
+def test_mutation_job_budget(spark, data_dir, engine, budget):
+    """A mutation of a file-backed table is one Spark job: the write of
+    the rewritten parts, which reads the parts it replaces, while the
+    view re-registers over the new parts without a footer job. A Memory
+    table's mutation only replaces its view."""
+    table = f"wp_mut_jobs_{engine.lower()}"
+    ch_statement(spark, MT_DDL.format(table) if engine == "MergeTree" else
+                 f"CREATE TABLE {table} (id Int64, bucket Int32, v Int64) "
+                 "ENGINE = Memory")
+    ch_statement(spark, f"INSERT INTO {table} VALUES " + ", ".join(
+        f"({i}, {i % 4}, {i})" for i in range(16)))
+    jobs = {}
+    for i, stmt in enumerate(MUTATIONS):
+        with job_group(spark, f"{table}_{i}") as launched:
+            ch_statement(spark, stmt.format(table)).collect()
+        jobs[stmt] = len(launched)
+    assert jobs == dict.fromkeys(MUTATIONS, budget)
+    assert _count(spark, table) == 14
+
+
+def test_mutations_persist_through_insert_and_optimize(spark, data_dir,
+                                                       monkeypatch):
+    # a mutation rewrites the parts: neither the next INSERT, which
+    # re-reads them, nor OPTIMIZE FINAL, which compacts them, brings a
+    # mutated row back. The compaction is called through the module
+    # attribute, which the benchmark's tracing wraps.
+    from clickhouse_clickhouse_spark.sources import write
+
+    compacted = []
+    compact = write.optimize_compact
+
+    def recorded(*args, **kwargs):
+        compacted.append(args[1])
+        return compact(*args, **kwargs)
+    monkeypatch.setattr(write, "optimize_compact", recorded)
+    path = data_dir / "wp_persist"
+    ch_statement(spark, MT_DDL.format("wp_persist"))
+    ch_statement(spark, "INSERT INTO wp_persist VALUES (1, 0, 1), (2, 1, 2), "
+                        "(3, 2, 3), (4, 3, 4)")
+    ch_statement(spark, "ALTER TABLE wp_persist DELETE WHERE id = 1")
+    ch_statement(spark, "ALTER TABLE wp_persist UPDATE v = 100 WHERE id = 2")
+    ch_statement(spark, "DELETE FROM wp_persist WHERE bucket = 2")
+    want = [(2, 1, 100), (4, 3, 4)]
+    assert _rows(spark, "wp_persist") == want
+    ch_statement(spark, "INSERT INTO wp_persist VALUES (5, 0, 5)")
+    want.append((5, 0, 5))
+    assert _rows(spark, "wp_persist") == want
+    ch_statement(spark, "OPTIMIZE TABLE wp_persist FINAL")
+    assert _rows(spark, "wp_persist") == want
+    assert compacted == [str(path)]
+    assert sorted(tuple(r) for r in spark.read.parquet(str(path))
+                  .select("id", "bucket", "v").collect()) == want
+    # a DELETE of every row leaves no part for the next INSERT to re-read
+    ch_statement(spark, "DELETE FROM wp_persist WHERE id > 0")
+    assert _count(spark, "wp_persist") == 0
+    ch_statement(spark, "INSERT INTO wp_persist VALUES (6, 2, 6)")
+    assert _rows(spark, "wp_persist") == [(6, 2, 6)]
+
+
 def test_insert_into_table_is_the_sink_for_every_insert(spark, data_dir,
                                                          monkeypatch):
     # perfbench's tracing wraps these three module attributes by setattr
@@ -249,7 +303,8 @@ def _parts(path):
                   for n in names if n.endswith(".parquet"))
 
 
-def test_parts_are_sorted_by_order_key_within_partitions(spark, tmp_path):
+def test_parts_are_sorted_by_order_key_within_partitions(spark, tmp_path,
+                                                         data_dir):
     # Spark's partitioned write sorts its input by the partition columns;
     # a sort on the ORDER BY key alone below it was lost
     import random
@@ -272,7 +327,16 @@ def test_parts_are_sorted_by_order_key_within_partitions(spark, tmp_path):
     df.write.partitionBy("bucket").parquet(merged)
     optimize_compact(spark, merged, sort_by=["id"], partition_by=["bucket"],
                      schema=df.schema)
-    for p in (path, merged):
+    # an UPDATE of the ORDER BY key: the even ids move past the odd ones
+    ch_statement(spark, MT_DDL.format("wp_sorted_update"))
+    ch_statement(spark, "INSERT INTO wp_sorted_update VALUES " + ", ".join(
+        f"({i}, {b}, {v})" for i, b, v in rows))
+    ch_statement(spark, "ALTER TABLE wp_sorted_update UPDATE id = 4000 - id "
+                        "WHERE v % 2 = 0")
+    updated = str(data_dir / "wp_sorted_update")
+    assert read_parts(spark, updated, df.schema).filter("id > 2000") \
+        .count() == 1000
+    for p in (path, merged, updated):
         parts = _parts(p)
         assert len(parts) >= 4 and all("bucket=" in f for f in parts)
         for f in parts:
@@ -415,7 +479,7 @@ def test_driver_parts_read_back_as_spark_parts(spark, tmp_path, key_type):
     name = f"wp_parity_{key_type.split('(')[0]}"
     local_frame(spark, [], schema).createOrReplaceTempView(name)
     driver, spark_dir = str(tmp_path / "driver"), str(tmp_path / "spark")
-    spec = TableSpec(name, schema, "MergeTree", ["p"], ["f", "id"], driver)
+    spec = TableSpec(name, "MergeTree", ["p"], ["f", "id"], driver)
     with job_group(spark, f"wp_parity_{key_type}") as jobs:
         assert insert_into_table(spark, spec, local_frame(spark, rows, schema),
                                  driver) == len(rows)
