@@ -10305,19 +10305,20 @@ def insert_into_table(spark: SparkSession, spec: TableSpec,
         del seen_hashes[:-_DEDUP_WINDOW]
     projections = list(st.projections_for(spec.name).values())
     hooked = bool(projections) or spec.name.lower() in st.matviews
-    part_keys = (local_part_keys(spark, rows.schema, spec.partition_by,
-                                 spec.order_by) if on_disk else [])
-    local = driver_rows(rows, part_keys) if part_keys is not None else None
+    part_keys = (local_part_keys(spark, path, rows.schema,
+                                 spec.partition_by, spec.order_by)
+                 if on_disk else [])
+    block = driver_rows(rows, part_keys) if part_keys is not None else None
     if on_disk:
         schema = spark.table(spec.name).schema
-    if local is not None:
-        block, part_values = local
+    if block is not None:
         n = block.num_rows
         if on_disk:
-            write_local_parts(spark, path, block, rows.schema, part_values,
+            write_local_parts(spark, path, block, rows.schema,
                               spec.partition_by, spec.order_by)
         if hooked or not on_disk:
-            rows = local_frame(spark, block, rows.schema)
+            rows = local_frame(spark, block.select(range(len(rows.columns))),
+                               rows.schema)
     elif on_disk:
         counted = Observation()
         insert_partitioned(
@@ -10840,15 +10841,31 @@ def ch_statement(spark: SparkSession, sql: str,
         om = re.match(r"UPDATE\s+(.+?)\s+WHERE\s+(.+)$", op,
                       re.IGNORECASE | re.DOTALL)
         if om:
+            # every assignment reads the old row (one projection), and
+            # a new value takes its column's type, as upstream's
+            # mutation casts it
             cond = _rewrite_calls(om.group(2))
-            out = base
+            cols = {c.lower(): c for c in base.columns}
+            assigned = {}
             for assign in sqltext.split_top(om.group(1)):
                 col, expr = assign.split("=", 1)
-                col = col.strip()
-                expr = _rewrite_calls(expr.strip())
-                out = out.withColumn(
-                    col, F.expr(f"CASE WHEN {cond} THEN {expr} "
-                                f"ELSE {col} END"))
+                col = col.strip().strip("`")
+                if col.lower() not in cols:
+                    raise ValueError(f"ALTER UPDATE of unknown column "
+                                     f"{col!r} in table {name!r}")
+                assigned[cols[col.lower()]] = _rewrite_calls(expr.strip())
+            out = base.selectExpr(*(
+                f"CASE WHEN {cond} THEN {assigned[c]} ELSE `{c}` END "
+                f"AS `{c}`" if c in assigned else f"`{c}`"
+                for c in base.columns))
+            types = {f.name: f.dataType.simpleString()
+                     for f in base.schema.fields}
+            recast = {f.name for f in out.schema.fields if f.name in
+                      assigned and f.dataType.simpleString() != types[f.name]}
+            if recast:
+                out = out.selectExpr(*(
+                    f"CAST(`{c}` AS {types[c]}) AS `{c}`" if c in recast
+                    else f"`{c}`" for c in out.columns))
             _replace_rows(spark, name, out)
             return local_frame(spark, [(name,)], "mutated string")
         om = re.match(r"ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)"
@@ -10926,7 +10943,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 optimize_compact, read_parts,
             )
             optimize_compact(spark, spec.path, sort_by=spec.order_by,
-                             partition_by=spec.partition_by, schema=t.schema)
+                             partition_by=spec.partition_by, rows=t)
             n = _register_view(spark, name,
                                read_parts(spark, spec.path, t.schema))
         else:

@@ -129,23 +129,21 @@ def local_frame(spark: SparkSession, rows: Iterable[Any],
 
 
 def driver_rows(df: DataFrame, extra: Sequence[str] = ()):
-    """``(table, extras)`` for a driver-local ``df``, None for any other.
+    """The rows of a driver-local ``df`` as a ``pyarrow.Table``, None for
+    any other ``df``.
 
     Driver-local means that ``df``'s optimized plan is a
     ``LocalRelation``: Spark folded the whole plan on the driver (a
     ``VALUES`` list, a ``from_json`` parse of ``local_frame`` lines), so
-    collecting it runs no job. ``table`` holds ``df``'s rows as
-    ``arrow_rows`` converts them; ``extras`` holds, per row, the values
-    of the ``extra`` SQL expressions, evaluated in the same local
-    projection."""
+    collecting it runs no job. The table holds ``df``'s columns, then the
+    values of the ``extra`` SQL expressions, evaluated in the same local
+    projection, all as ``arrow_rows`` converts them."""
     proj = df.selectExpr("*", *extra) if extra else df
     plan = proj._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() != "LocalRelation":
         return None
-    got = proj.collect()
-    k = len(df.columns)
-    return (arrow_rows([r[:k] for r in got], df.schema),
-            [tuple(r[k:]) for r in got])
+    # tuples convert by position, ~6x faster than Rows by name
+    return arrow_rows([tuple(r) for r in proj.collect()], proj.schema)
 
 
 class EngineState:

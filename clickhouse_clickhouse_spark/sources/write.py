@@ -2,20 +2,30 @@
 (SURVEY.md §2.1, §3.2).
 
 Reference mapping:
-- ``INSERT`` part writing (split by PARTITION BY → sort by ORDER BY →
-  write column files → commit by rename; upstream
-  ``MergeTreeDataWriter::writeTempPart``), two writers:
-  - a driver-local block (its optimized plan is a ``LocalRelation``: an
-    ``INSERT … VALUES`` or ``FORMAT`` payload, parsed on the driver) is
-    written by ``write_local_parts`` in the driver process, as upstream
-    writes a block where it was received: no Spark job;
-  - any other block (``INSERT … SELECT``, a DataFrame) goes through
-    ``insert_partitioned``:
-    ``partitionBy().sortWithinPartitions(partition, order).parquet()``.
-  The in-file sort is what gives Parquet row-group min/max stats their
-  pruning power (the sparse-PK-index analog).
-- Background merge / ``OPTIMIZE`` (``MergeTask.cpp``) → compaction job:
-  read → repartition to target file count → re-sort → atomic overwrite.
+- Part writing (split by PARTITION BY → sort by ORDER BY → write column
+  files → commit by rename; upstream ``MergeTreeDataWriter::
+  writeTempPart``), one writer rule for INSERT and for every rewrite of
+  a table's parts. When ``local_part_keys`` accepts the block (a local
+  table directory, a codec and column types pyarrow writes as Spark
+  does) and its rows are on the driver or cheap to bring there,
+  ``write_local_parts`` writes it in the driver process with plain file
+  I/O, as upstream writes a block where it was received and merges
+  parts inside the server: no Spark write job. The rows are there
+  - for ``INSERT``, when the block is driver-local (its optimized plan
+    is a ``LocalRelation``: an ``INSERT … VALUES`` or ``FORMAT``
+    payload, parsed on the driver);
+  - for a rewrite (``_rewrite``), when the table's parts hold at most
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes, the size Spark
+    itself pulls to the driver (``-1`` turns this off); one ``toArrow``
+    job collects them.
+  Otherwise Spark writes the block: ``insert_partitioned`` for INSERT,
+  the same ``partitionBy().sortWithinPartitions(partition, order)
+  .parquet()`` for a rewrite. The in-file sort is what gives Parquet
+  row-group min/max stats their pruning power (the sparse-PK-index
+  analog).
+- Background merge / ``OPTIMIZE … FINAL`` (``MergeTask.cpp``) →
+  ``optimize_compact``: a rewrite of the table's rows into one sorted
+  file per partition.
 - ``ALTER TABLE UPDATE/DELETE``, ``DELETE FROM`` and ``OPTIMIZE …
   DEDUPLICATE`` (``MutationsInterpreter.cpp``) → the statement reads the
   table, transforms it, and ``_rewrite`` writes the result aside, sorted
@@ -87,16 +97,16 @@ def _driver_writable(dt: T.DataType) -> bool:
     return type(dt) in _ATOMIC
 
 
-def local_part_keys(spark: SparkSession, schema: StructType,
+def local_part_keys(spark: SparkSession, path: str, schema: StructType,
                     partition_by: Sequence[str],
                     sort_by: Sequence[str]) -> list[str] | None:
     """The SQL expressions ``write_local_parts`` needs evaluated per row
     (each partition value ``CAST … AS STRING``, the text Spark's own
     writer names a partition directory by), or None when a block of
-    ``schema`` must go through Spark's writer instead: a layout key that
-    is not a column or not of an atomic type, a column type outside
-    Parquet's plain mapping, or a session codec pyarrow does not
-    write."""
+    ``schema`` for the table under ``path`` must go through Spark's
+    writer instead: a session codec pyarrow does not write, a column type
+    outside Parquet's plain mapping, a layout key that is not a column or
+    not of an atomic type, or a ``path`` off the local file system."""
     types = {f.name: f.dataType for f in schema.fields}
     if spark.conf.get("spark.sql.parquet.compression.codec",
                       "snappy").lower() not in _CODECS:
@@ -106,30 +116,35 @@ def local_part_keys(spark: SparkSession, schema: StructType,
     if not all(type(types.get(c)) in _ATOMIC
                for c in (*partition_by, *sort_by)):
         return None
+    if _local_dir(spark, path) is None:
+        return None
     return [f"CAST(`{c}` AS STRING)" for c in partition_by]
 
 
-def write_local_parts(spark: SparkSession, path: str, block, schema:
-                      StructType, part_values: Sequence[tuple],
-                      partition_by: Sequence[str] = (),
+def write_local_parts(spark: SparkSession, path: str, block,
+                      schema: StructType, partition_by: Sequence[str] = (),
                       sort_by: Sequence[str] = ()) -> None:
-    """INSERT of a driver-local block (``session.driver_rows``) in the
+    """Write ``block`` as parts under the local directory ``path`` in the
     driver process, with no Spark job: the ``insert_partitioned`` layout,
     written the way upstream ``MergeTreeDataWriter`` writes a part.
 
-    ``block`` is a ``pyarrow.Table`` of ``schema``; ``part_values`` holds
-    per row the ``local_part_keys`` strings. The rows are grouped by
-    partition; each group is sorted by ``sort_by`` in Spark's ascending
-    order (NULL first, NaN after every number) and written as one
-    Parquet file with the session's codec, under the directory Spark's
-    ``ExternalCatalogUtils.getPartitionPathString`` names (NULL and
-    ``''`` → ``__HIVE_DEFAULT_PARTITION__``, Spark's escaping). Each file
-    is written through the Hadoop FS API under a ``.``-prefixed name,
-    which Spark's file listing skips, then renamed into place. The
-    footer carries the keys Spark writes, the row schema and the writer
-    version, so a read that infers the schema from a footer types the
-    columns as Spark's own parts do, and dates and timestamps read as
-    proleptic Gregorian under any rebase setting."""
+    ``block`` is a ``pyarrow.Table`` of the rows of
+    ``df.selectExpr("*", *local_part_keys(...))``: ``schema``'s columns,
+    then one partition-key string per ``partition_by`` column. The rows
+    are grouped by partition; each group is sorted by ``sort_by`` in
+    Spark's ascending order (NULL first, NaN after every number) and
+    written as one Parquet file with the session's codec, under the
+    directory Spark's ``ExternalCatalogUtils.getPartitionPathString``
+    names (NULL and ``''`` → ``__HIVE_DEFAULT_PARTITION__``, Spark's
+    escaping). Each file is written with plain file I/O under a
+    ``.``-prefixed name, which Spark's file listing skips, then renamed
+    into place: a Hadoop local-FS create would fork a ``chmod`` for the
+    file and another for its ``.crc`` when Hadoop's native library is
+    absent. The footer carries the keys Spark writes, the row schema and
+    the writer version, so a read that infers the schema from a footer
+    types the columns as Spark's own parts do, and dates and timestamps
+    read as proleptic Gregorian under any rebase setting."""
+    import os
     import uuid
 
     import pyarrow as pa
@@ -137,40 +152,45 @@ def write_local_parts(spark: SparkSession, path: str, block, schema:
 
     codec, infix = _CODECS[spark.conf.get(
         "spark.sql.parquet.compression.codec", "snappy").lower()]
-    groups: dict[tuple, list[int]] = {}
-    for i, vals in enumerate(part_values):
-        groups.setdefault(vals, []).append(i)
+    root = _local_dir(spark, path)
+    n_cols = len(schema.fields)
+    data = block.select(range(n_cols))
+    if partition_by:
+        keys = block.select(range(n_cols, block.num_columns)) \
+            .rename_columns([f"k{i}" for i in range(len(partition_by))])
+        grouped = keys.append_column(
+            "row", pa.array(range(block.num_rows), pa.int64())) \
+            .group_by(keys.column_names, use_threads=False) \
+            .aggregate([("row", "list")])
+        values = zip(*(grouped.column(k).to_pylist()
+                       for k in keys.column_names))
+        rows = grouped.column("row_list").combine_chunks()
+        groups = [(vals, rows[g].values) for g, vals in enumerate(values)]
+    else:
+        groups = [((), None)] if block.num_rows else []
     data_schema = StructType([f for f in schema.fields
                               if f.name not in partition_by])
     meta = {"org.apache.spark.version": spark.version,
             "org.apache.spark.sql.parquet.row.metadata": data_schema.json()}
-    hadoop_path = _jvm_class(spark, "org.apache.hadoop.fs.Path")
     dir_name = _jvm_class(
         spark, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils"
     ).getPartitionPathString
-    fs, root = _hadoop_path(spark, path)
-    if not groups:
-        fs.mkdirs(root)
+    os.makedirs(root, exist_ok=True)
     job = uuid.uuid4()
-    for i, (vals, rows) in enumerate(groups.items()):
-        part = block.take(rows)
+    for i, (vals, taken) in enumerate(groups):
+        part = data if taken is None else data.take(taken)
         if sort_by:
             part = part.take(_sort_indices(part, sort_by))
         part = part.drop_columns(list(partition_by))
-        buf = pa.BufferOutputStream()
-        # pyarrow writes footer keys only along with its own schema key
-        pq.write_table(part.replace_schema_metadata(meta), buf,
-                       compression=codec)
-        parent = "/".join([path.rstrip("/"), *(
-            dir_name(c, v) for c, v in zip(partition_by, vals))])
+        parent = os.path.join(root, *(
+            dir_name(c, v) for c, v in zip(partition_by, vals)))
+        os.makedirs(parent, exist_ok=True)
         name = f"part-{i:05d}-{job}.c000{infix}.parquet"
-        hidden = hadoop_path(f"{parent}/.{name}")
-        out = fs.create(hidden, False)
-        try:
-            out.write(buf.getvalue().to_pybytes())
-        finally:
-            out.close()
-        fs.rename(hidden, hadoop_path(f"{parent}/{name}"))
+        hidden = os.path.join(parent, "." + name)
+        # pyarrow writes footer keys only along with its own schema key
+        pq.write_table(part.replace_schema_metadata(meta), hidden,
+                       compression=codec)
+        os.replace(hidden, os.path.join(parent, name))
 
 
 def _sort_indices(table, sort_by: Sequence[str]):
@@ -203,37 +223,90 @@ def read_parts(spark: SparkSession, path: str,
 
 def optimize_compact(spark: SparkSession, path: str,
                      sort_by: Sequence[str] = (),
-                     target_files: int = 1,
                      partition_by: Sequence[str] = (),
-                     schema: StructType | None = None) -> None:
-    """OPTIMIZE / background merge: rewrite the layout with fewer, sorted
-    files. Stages through a temp dir then swaps (the poor-man's atomic
-    rename the reference does per part). ``partition_by`` preserves the
-    table's partition-directory layout across the rewrite. A table's
-    ``schema`` reads the parts through ``read_parts``; without one the
-    schema is inferred from the files."""
-    df = (spark.read.parquet(path) if schema is None
-          else read_parts(spark, path, schema))
-    _rewrite(spark, df.coalesce(target_files), path, partition_by, sort_by)
+                     rows: DataFrame | None = None) -> None:
+    """OPTIMIZE … FINAL / background merge: rewrite the parts under
+    ``path`` as one file per partition directory of ``partition_by``,
+    sorted by ``sort_by`` (``_rewrite``: staged aside, then swapped in,
+    the poor-man's atomic rename the reference does per part). ``rows``
+    are the table's current rows, its registered view, which has listed
+    the parts already; without them the parts are read with the schema
+    inferred from the files."""
+    _rewrite(spark, spark.read.parquet(path) if rows is None else rows,
+             path, partition_by, sort_by, merge=True)
 
 
 def _rewrite(spark: SparkSession, df: DataFrame, path: str,
              partition_by: Sequence[str],
-             sort_by: Sequence[str] = ()) -> None:
+             sort_by: Sequence[str] = (), merge: bool = False) -> None:
     """Replace the parts under ``path`` by ``df``: written aside under
     ``<path>__rewriting`` in the ``partition_by`` directory layout, each
     file sorted by partition and ``sort_by``, then swapped in
     (``_swap_dirs``). ``df`` may read ``path`` itself: the swap runs
-    after the write job."""
+    after the write.
+
+    The writer is INSERT's (``local_part_keys``) when the table's parts
+    also fit ``_driver_sized``: one ``toArrow`` job brings the rows and
+    their partition keys to the driver, and ``write_local_parts`` writes
+    one file per partition. Otherwise Spark's writer runs; with
+    ``merge`` it writes from one task, so again one file per
+    partition."""
     tmp = path.rstrip("/") + "__rewriting"
-    if sort_by:
-        # partition columns first, as in insert_partitioned
-        df = df.sortWithinPartitions(*partition_by, *sort_by)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
+    keys = local_part_keys(spark, path, df.schema, partition_by, sort_by)
+    if keys is not None and _driver_sized(spark, path):
+        import shutil
+
+        block = df.selectExpr("*", *keys).toArrow()
+        shutil.rmtree(_local_dir(spark, tmp), ignore_errors=True)
+        write_local_parts(spark, tmp, block, df.schema, partition_by,
+                          sort_by)
+    else:
+        if merge:
+            df = df.coalesce(1)
+        if sort_by:
+            # partition columns first, as in insert_partitioned
+            df = df.sortWithinPartitions(*partition_by, *sort_by)
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(tmp)
     _swap_dirs(spark, tmp, path)
+
+
+def _driver_sized(spark: SparkSession, path: str) -> bool:
+    """Whether the parts under the local directory ``path`` hold at most
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes, the size Spark itself
+    collects to the driver to broadcast a join side; ``-1`` sends every
+    rewrite to Spark's writer. Counts the files Spark's listing reads
+    (no ``.``/``_`` prefix, none under such a directory)."""
+    import os
+
+    limit = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if limit < 0:
+        return False
+    size = 0
+    for root, dirs, names in os.walk(_local_dir(spark, path)):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        size += sum(os.path.getsize(os.path.join(root, n)) for n in names
+                    if not n.startswith((".", "_")))
+        if size > limit:
+            return False
+    return True
+
+
+def _local_dir(spark: SparkSession, path: str) -> str | None:
+    """``path`` as an OS path when it is on the local file system (a
+    ``file:`` URI, or no scheme while Hadoop's ``fs.defaultFS`` is
+    local), else None."""
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    if url.scheme:
+        return url.path if url.scheme == "file" else None
+    default = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///")
+    return path if urlparse(default).scheme == "file" else None
 
 
 def _swap_dirs(spark: SparkSession, tmp: str, path: str) -> None:

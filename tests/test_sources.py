@@ -105,7 +105,7 @@ def test_alter_update_leaves_no_side_directory(spark, data_dir):
 def test_optimize_compact(spark, sample, tmp_path):
     path = str(tmp_path / "t")
     sample.repartition(8).write.parquet(path)
-    optimize_compact(spark, path, sort_by=["id"], target_files=1)
+    optimize_compact(spark, path, sort_by=["id"])
     back = spark.read.parquet(path)
     assert back.count() == 100
     import glob

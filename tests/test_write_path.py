@@ -8,6 +8,7 @@ import decimal
 import json
 import math
 import os
+import shutil
 
 import pytest
 
@@ -141,8 +142,14 @@ def test_write_statement_job_budget(spark, data_dir):
     assert len(insert_jobs) == 0
     with job_group(spark, "wp_optimize") as optimize_jobs:
         ch_statement(spark, "OPTIMIZE TABLE wp_jobs_mt FINAL").collect()
-    assert len(optimize_jobs) <= 1
+    # the merge collects the view's rows in one job and writes the parts
+    # on the driver: no committer files, no Hadoop checksum files
+    assert len(optimize_jobs) == 1
     assert _count(spark, "wp_jobs_mt") == 64
+    left = [n for _r, dirs, names in os.walk(data_dir / "wp_jobs_mt")
+            for n in dirs + names
+            if n in ("_SUCCESS", "_temporary") or n.endswith(".crc")]
+    assert left == []
 
 
 MUTATIONS = ["ALTER TABLE {} DELETE WHERE id = 1",
@@ -326,7 +333,7 @@ def test_parts_are_sorted_by_order_key_within_partitions(spark, tmp_path,
     merged = str(tmp_path / "merged")
     df.write.partitionBy("bucket").parquet(merged)
     optimize_compact(spark, merged, sort_by=["id"], partition_by=["bucket"],
-                     schema=df.schema)
+                     rows=read_parts(spark, merged, df.schema))
     # an UPDATE of the ORDER BY key: the even ids move past the odd ones
     ch_statement(spark, MT_DDL.format("wp_sorted_update"))
     ch_statement(spark, "INSERT INTO wp_sorted_update VALUES " + ", ".join(
@@ -411,6 +418,27 @@ def test_mergetree_insert_deduplicates_blocks(spark, data_dir):
     assert _count(spark, "wp_dedup") == 4
 
 
+@pytest.mark.parametrize("engine", ["Memory", "MergeTree ORDER BY a"])
+def test_alter_update_reads_the_old_row_and_keeps_types(spark, data_dir,
+                                                        engine):
+    # upstream evaluates every assignment of one UPDATE on the row as it
+    # was, and casts each new value to its column's type
+    from pyspark.sql.types import LongType
+
+    table = f"wp_upd_{engine.split()[0].lower()}"
+    ch_statement(spark, f"CREATE TABLE {table} (a Int64, b Int64) "
+                        f"ENGINE = {engine}")
+    ch_statement(spark, f"INSERT INTO {table} VALUES (1, 2)")
+    ch_statement(spark, f"ALTER TABLE {table} UPDATE a = b, b = a "
+                        "WHERE 1 = 1")
+    assert [tuple(r) for r in spark.table(table).collect()] == [(2, 1)]
+    ch_statement(spark, f"ALTER TABLE {table} UPDATE b = b * 1.5 "
+                        "WHERE 1 = 1")
+    assert spark.table(table).schema["b"].dataType == LongType()
+    assert [tuple(r) for r in spark.table(table).collect()] == [(2, 1)]
+    ch_statement(spark, f"DROP TABLE {table}")
+
+
 def test_mutations_keep_rows_whose_predicate_is_null(spark):
     # upstream negates a mutation predicate with isZeroOrNull: a row
     # whose condition is NULL is not deleted
@@ -453,10 +481,12 @@ def _parity_rows(keys, n=36):
             for i in range(n)]
 
 
-def _parity_norm(rows):
-    return sorted((tuple("NaN" if isinstance(v, float) and math.isnan(v)
-                         else v for v in r) for r in rows),
-                  key=lambda r: r[0])
+def _parity_norm(rows, sort=True):
+    """Rows with NaN as a string, so that lists of them compare equal;
+    sorted by the first column unless ``sort`` is off."""
+    out = [tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
+                 for v in r) for r in rows]
+    return sorted(out, key=lambda r: r[0]) if sort else out
 
 
 @pytest.mark.parametrize("key_type", sorted(PARTITION_KEYS))
@@ -468,7 +498,7 @@ def test_driver_parts_read_back_as_spark_parts(spark, tmp_path, key_type):
     )
     from clickhouse_clickhouse_spark.session import local_frame
     from clickhouse_clickhouse_spark.sources.write import (
-        insert_partitioned, read_parts,
+        insert_partitioned, optimize_compact, read_parts,
     )
 
     schema = StructType.fromDDL(
@@ -501,10 +531,59 @@ def test_driver_parts_read_back_as_spark_parts(spark, tmp_path, key_type):
     assert _parity_norm(got) == _parity_norm(
         (r[0], None if r[1] == "" else r[1], *r[2:]) for r in rows)
     data_schema = StructType([f for f in schema.fields if f.name != "p"])
+
+    def in_file_order(part):
+        return [(r.f, r.id) for r in
+                spark.read.schema(data_schema).parquet(part).collect()]
     for part in _parts(driver):
-        order = [(r.f, r.id) for r in
-                 spark.read.schema(data_schema).parquet(part).collect()]
+        order = in_file_order(part)
         assert order == sorted(order, key=lambda k: _spark_order(*k)), part
+
+    # OPTIMIZE FINAL of copies of the Spark-written parts: merged on the
+    # driver (one collect job, no committer's _SUCCESS), and by Spark's
+    # writer once the broadcast threshold is off. Both leave one file per
+    # partition directory, in Spark's order, holding the same rows.
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    merged = {}
+    for route, limit in (("driver", None), ("spark", "-1")):
+        copy = str(tmp_path / f"optimized_{route}")
+        shutil.copytree(spark_dir, copy)
+        before = spark.conf.get(threshold)
+        if limit:
+            spark.conf.set(threshold, limit)
+        try:
+            with job_group(spark, f"wp_parity_opt_{route}_{key_type}") \
+                    as opt_jobs:
+                optimize_compact(spark, copy, sort_by=["f", "id"],
+                                 partition_by=["p"],
+                                 rows=read_parts(spark, copy, schema))
+        finally:
+            spark.conf.set(threshold, before)
+        assert os.path.exists(os.path.join(copy, "_SUCCESS")) == bool(limit)
+        if not limit:
+            assert len(opt_jobs) == 1
+        merged[route] = {os.path.relpath(os.path.dirname(part), copy):
+                         _parity_norm(in_file_order(part), sort=False)
+                         for part in _parts(copy)}
+        assert len(merged[route]) == len(_parts(copy))
+        assert _parity_norm(read_parts(spark, copy, schema).collect()) == \
+            _parity_norm(got)
+    assert merged["driver"] == merged["spark"]
+    assert sorted(merged["driver"]) == sorted(set(dirs(spark_dir)))
+
+
+def test_driver_writer_needs_a_local_table_directory(spark, tmp_path):
+    # a table directory on another file system goes to Spark's writer
+    from pyspark.sql.types import StructType
+
+    from clickhouse_clickhouse_spark.sources.write import local_part_keys
+
+    schema = StructType.fromDDL("id bigint, p int")
+    for path in (str(tmp_path), tmp_path.as_uri()):
+        assert local_part_keys(spark, path, schema, ["p"], ["id"]) == [
+            "CAST(`p` AS STRING)"]
+    assert local_part_keys(spark, "hdfs://namenode/t", schema, ["p"],
+                           ["id"]) is None
 
 
 def test_driver_parts_after_add_column_match_spark_parts(spark, data_dir):
